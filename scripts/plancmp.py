@@ -14,8 +14,13 @@ broadcast_queries=False, replicated-explode input), pinning the
 anomaly on ambient steal, not code (BENCH_BASELINE.md round 6).
 
 Usage: python scripts/plancmp.py OUT.txt  (run from the repo root)
+
+It prints the row count and the sha256 of the normalized plan, so a
+"default plan unchanged" check is one command per revision: equal
+hashes mean byte-identical plans.
 """
 
+import hashlib
 import os
 import re
 import sys
@@ -50,7 +55,10 @@ def main() -> None:
     plan = re.sub(r"id=\d+", "id=X", plan)
     with open(out, "w") as f:
         f.write(plan)
-    print("rows", res.count(), "->", out)
+    # hash the bytes as written, so it matches `sha256sum OUT.txt`
+    with open(out, "rb") as f:
+        digest = hashlib.sha256(f.read()).hexdigest()
+    print("rows", res.count(), "sha256", digest, "->", out)
     spark.stop()
 
 

@@ -109,63 +109,6 @@ DEFAULT_K = 10
 # done in stage 1).
 KNN_SAMPLE_MOD = 8
 
-# kNN stage-2 hot-cell split (VERDICT r5 item: the stage-2 probe of a
-# dense cell is one task — max task 30 s vs p50 6 s at 1.05B-row gate
-# density).  Cells whose histogram count exceeds KNN_S2SPLIT_THRESH
-# have their stage-2 probe spread over ceil(count/thresh) (capped)
-# sub-tasks keyed by an extra `csplit` join column; stage 1 is
-# untouched, so the stage-1 pre-rank-per-slice blowup that killed
-# uniform salt (bench_records/r5_ab4n_x2304.jsonl) cannot occur.  Two
-# split shapes, both bit-exact (tests/test_knn_paths.py):
-#   "doc": hot points partition by pmod(xxhash64(doc_key), n) — no
-#          point replication; the (small) cover side of hot cells
-#          replicates n times; the stage-2 pre-rank keeps <= n*k rows
-#          per (cell, qid) — negligible at stage-2 volumes.
-#   "qid": cover rows hash by qid — pre-rank groups are unchanged, but
-#          hot points replicate n times into the stage-2 exchange.
-#   "off": incumbent single-task-per-cell probe.
-# Default "off" pending the gate A/B (the threshold never triggers at
-# sf0.1 scale anyway: max cell there is ~1k rows).
-KNN_S2SPLIT = _os.environ.get("SPARK_GRAFT_KNN_S2SPLIT", "off").lower()
-KNN_S2SPLIT_THRESH = int(_os.environ.get(
-    "SPARK_GRAFT_KNN_S2SPLIT_THRESH", "500000"))
-KNN_S2SPLIT_CAP = int(_os.environ.get("SPARK_GRAFT_KNN_S2SPLIT_CAP", "8"))
-# kNN eager-path intermediate persists (cand1 / stats): "1" (default)
-# persists both multi-consumer intermediates; "0" drops them and relies
-# on AQE exchange reuse — the expensive stage-1 map side (ring join +
-# pre-rank over the full cached input) ends at the qid exchange, so
-# identical consumer subtrees can share one shuffle (ReusedExchange)
-# and only the cheap post-exchange windows recompute.  A/B knob
-# (guide §5: cache only when recomputing costs more than the memory
-# pressure); results bit-identical either way.
-KNN_PERSIST_INT = _os.environ.get("SPARK_GRAFT_KNN_PERSIST_INT",
-                                  "1") == "1"
-
-# kNN slim-cache intra-partition ordering (VERDICT r6 item 4): "cell"
-# sorts the cached slim projection within partitions by the join keys
-# before persist, so a stage-2 probe of one cell touches contiguous
-# cache pages instead of random ones — an A/B candidate against the
-# measured 2.00x stage-2 core-s CPI inflation at the memory-bus-bound
-# 4N gate.  Bit-exact either way (row order never affects results: all
-# ranks order explicitly by (dist2, doc_key)).  Default follows the
-# gate A/B measurement (bench_records/r7_knn_ab4n_x2304.jsonl: the
-# cell leg read ~2x the clean incumbent bracket — stage 2 streams the
-# cache as the probe side, so the scan is sequential regardless of
-# intra-partition order and the added sort is pure cost).
-KNN_CACHE_SORT = _os.environ.get("SPARK_GRAFT_KNN_CACHE_SORT",
-                                 "off").lower()
-if KNN_CACHE_SORT not in ("off", "cell"):
-    raise ValueError(
-        f"SPARK_GRAFT_KNN_CACHE_SORT must be off|cell, "
-        f"got {KNN_CACHE_SORT!r}")
-
-if KNN_S2SPLIT not in ("off", "doc", "qid"):
-    raise ValueError(
-        f"SPARK_GRAFT_KNN_S2SPLIT must be off|doc|qid, "
-        f"got {KNN_S2SPLIT!r}")
-if KNN_S2SPLIT_THRESH < 1 or KNN_S2SPLIT_CAP < 1:
-    raise ValueError("SPARK_GRAFT_KNN_S2SPLIT_THRESH/_CAP must be >= 1")
-
 # --- real media codec content (shared Spark-UDF/DuckDB arithmetic) ------
 # Deterministic media payloads for the REAL decode path
 # (pipeline/mediacodec.py): even doc_keys carry a PNG (8-bit greyscale,

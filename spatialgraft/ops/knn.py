@@ -244,21 +244,20 @@ def _ring_count_expr(sat_df: DataFrame):
     return add
 
 
-def _stages(spark, pts: DataFrame, queries: DataFrame, k: int,
+def _stages(pts: DataFrame, queries: DataFrame, k: int,
             keys: list[str], salt_map, bc_ring: bool, bc_cover: bool,
             cell_counts: DataFrame, add_ring_count,
             need, sampling_guard: str, sample_stage1: bool,
-            persist_intermediates: bool,
+            persist: bool,
             prune_cells=None, expand: bool = True,
-            usalt: int | None = None, smj_pts: bool = False,
-            cover_split: dict[int, int] | None = None,
-            s2mode: str = "doc"):
+            usalt: int | None = None, smj_pts: bool = False):
     """Shared stage-1 / split / expand / stage-2 assembly.  The eager
     and lazy paths differ only in what they inject here: the histogram
     source (collected vs lazy agg), the SAT lookup strategy (driver
     array vs prefix-grid join), the `need` threshold (literal vs
     least(k, total) column), whether stage-1 sampling is compiled in,
-    and whether intermediates persist.  Returns (result, persisted).
+    and whether the multi-consumer intermediates (cand1, stats)
+    persist.  Returns (result, persisted).
 
     prune_cells: sFilter presence pruning of the stage-2 cover (X6
     wired into J7, VERDICT r4 item 6) — multicast (query, cell) rows
@@ -275,12 +274,7 @@ def _stages(spark, pts: DataFrame, queries: DataFrame, k: int,
     so a points side whose Catalyst size estimate is garbage (explode-
     blind Generate lineage) can never be planted as a broadcast build;
     an explicitly-broadcast ring/cover side still wins hint resolution
-    (broadcast beats merge), so small-query plans keep theirs.
-    cover_split: {cell: nsplits} map of dense cells whose stage-2 probe
-    spreads over nsplits csplit sub-keys (config.KNN_S2SPLIT; eager
-    path only — the driver histogram is its source).  s2mode: "doc"
-    (hot points partitioned, cover replicated) or "qid" (cover
-    partitioned, hot points replicated)."""
+    (broadcast beats merge), so small-query plans keep theirs."""
     persisted = []
     dense_thresh = 3 * k * C.KNN_SAMPLE_MOD
 
@@ -353,7 +347,7 @@ def _stages(spark, pts: DataFrame, queries: DataFrame, k: int,
              .drop("prnk")
              .withColumn("rnk", F.row_number().over(w))
              .where(F.col("rnk") <= k))
-    if persist_intermediates:
+    if persist:
         cand1 = cand1.persist()
         persisted.append(cand1)
 
@@ -368,7 +362,7 @@ def _stages(spark, pts: DataFrame, queries: DataFrame, k: int,
                      "ring_x0", "ring_x1", "ring_y0", "ring_y1")
              .join(agg, on="qid", how="left")
              .fillna({"cnt": 0}))
-    if persist_intermediates:
+    if persist:
         stats = stats.persist()
         persisted.append(stats)
 
@@ -465,61 +459,17 @@ def _stages(spark, pts: DataFrame, queries: DataFrame, k: int,
         cover = F.broadcast(cover)
     pts2 = pts.hint("merge") if smj_pts else pts
 
-    def probe(p, c, jkeys):
-        """Stage-2 probe: equi-join on jkeys, exact dist filter, then
-        the per-(jkeys, qid) pre-rank — the rows it emits (<= k per
-        group) feed the global qid rank below."""
-        wp = Window.partitionBy(*jkeys, "qid").orderBy("dist2",
-                                                       "doc_key")
-        return (p.join(c, on=jkeys, how="inner")
-                .selectExpr(*jkeys, "qid", "doc_key", "kth2",
+    # stage-2 probe: equi-join, exact dist filter, then the per-(keys,
+    # qid) pre-rank — its <= k rows per group feed the global qid rank
+    boundary = (pts2.join(cover, on=keys, how="inner")
+                .selectExpr(*keys, "qid", "doc_key", "kth2",
                             f"{_D2} AS dist2")
                 .where(F.col("dist2") <= F.col("kth2"))
-                .select(*jkeys, "qid", "doc_key", "dist2")
-                .withColumn("prnk", F.row_number().over(wp))
+                .select(*keys, "qid", "doc_key", "dist2")
+                .withColumn("prnk", F.row_number().over(wpre))
                 .where(F.col("prnk") <= k)
-                .select("qid", "doc_key", "dist2"))
-
-    if cover_split and not bc_cover:
-        # hot-cell split (config.KNN_S2SPLIT): dense cells' single-task
-        # probe spreads over csplit sub-keys; cold cells keep the
-        # exchange-free cache-local probe via a separate join branch
-        # (splitting inside ONE join would re-key — and re-shuffle —
-        # the whole points side).  A query's final top-k is the global
-        # qid rank over the union of both branches' pre-ranked rows,
-        # and each branch's pre-rank keeps every row a cell-level
-        # top-k could contain, so results are bit-identical (twin
-        # tests: test_knn_paths.py::test_s2split_*).
-        cs_df = F.broadcast(spark.createDataFrame(
-            [(c, n) for c, n in sorted(cover_split.items())],
-            "cell bigint, cs_n int"))
-        jkeys = keys + ["csplit"]
-        pcols = pts2.columns
-        ccols = [col for col in cover.columns if col != "cell"]
-        hot_pts = pts2.join(cs_df, on="cell", how="inner")
-        hot_cov = cover.join(cs_df, on="cell", how="inner")
-        cold_cov = cover.join(cs_df.select("cell"), on="cell",
-                              how="left_anti")
-        expl = ("explode(sequence(CAST(0 AS BIGINT), "
-                "CAST(cs_n - 1 AS BIGINT))) AS csplit")
-        if s2mode == "qid":
-            # cover hashes by qid (pre-rank groups unchanged); hot
-            # points replicate cs_n times into the stage-2 exchange
-            hot_cov = hot_cov.selectExpr(
-                "cell", *ccols,
-                "pmod(xxhash64(qid), CAST(cs_n AS BIGINT)) AS csplit")
-            hot_pts = hot_pts.selectExpr(*pcols, expl)
-        else:  # "doc": no point replication; cover replicates cs_n x
-            hot_pts = hot_pts.selectExpr(
-                *pcols,
-                "pmod(xxhash64(doc_key), CAST(cs_n AS BIGINT)) "
-                "AS csplit")
-            hot_cov = hot_cov.selectExpr("cell", *ccols, expl)
-        pre = probe(pts2, cold_cov, keys).unionByName(
-            probe(hot_pts, hot_cov, jkeys))
-    else:
-        pre = probe(pts2, cover, keys)
-    boundary = (pre.withColumn("rnk", F.row_number().over(w))
+                .select("qid", "doc_key", "dist2")
+                .withColumn("rnk", F.row_number().over(w))
                 .where(F.col("rnk") <= k)
                 .select("qid", "doc_key", "dist2", "rnk"))
 
@@ -586,11 +536,7 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
              plan=None,
              salt: int | None = None,
              materialize: bool = False,
-             cache_input: bool = True,
-             s2split: str | None = None,
-             s2split_thresh: int | None = None,
-             cache_sort: str | None = None,
-             persist_intermediates: bool | None = None) -> DataFrame:
+             cache_input: bool = True) -> DataFrame:
     """For every query point (qid, qmx, qmy, qx, qy): its k nearest data
     points.  Returns (qid, doc_key, dist2, rnk), rnk 1..k by
     (dist2, doc_key).
@@ -611,25 +557,6 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     stage-2 cover fan-out ~64) against the session broadcast threshold,
     from the optimizer's plan-size estimate — no job runs.  True/False
     force.
-    cache_sort: "cell" orders the slim projection within partitions by
-    the join keys before it is cached (None = the
-    SPARK_GRAFT_KNN_CACHE_SORT env default, config.py) — stage-2 probes
-    of one cell then touch contiguous cache pages (A/B candidate
-    against the measured 2.00x stage-2 CPI inflation at the bus-bound
-    4N gate, VERDICT r6 item 4).  Bit-exact either way: row order never
-    affects results (all ranks order explicitly by (dist2, doc_key)).
-    s2split / s2split_thresh: stage-2 hot-cell split (None = the
-    SPARK_GRAFT_KNN_S2SPLIT env defaults, config.py).  "doc" or "qid"
-    spreads the stage-2 probe of any cell holding more than
-    s2split_thresh rows over ceil(count/thresh) csplit sub-tasks
-    (capped at KNN_S2SPLIT_CAP), attacking the one-task-per-dense-cell
-    stage-2 straggler WITHOUT touching stage 1 (whose pre-rank-per-
-    slice blowup is why uniform salt lost the r5 A/B).  Bit-exact
-    either mode; eager path only (the map comes from the driver
-    histogram).  "doc" partitions hot points by doc_key hash (no point
-    replication, cover of hot cells replicated n times); "qid" hashes
-    the cover by qid (pre-rank groups unchanged, hot points replicated
-    n times).
 
     materialize=False (library default): plan construction is
     COMPLETELY lazy — no job runs, nothing is persisted, the returned
@@ -681,19 +608,6 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     parquet-backed inputs (sound estimates) keep their unhinted plans
     (tests/test_knn_paths.py::test_lazy_generated_input_never_broadcast).
     """
-    s2mode = (s2split if s2split is not None else C.KNN_S2SPLIT).lower()
-    if s2mode not in ("off", "doc", "qid"):
-        raise ValueError(f"s2split must be off|doc|qid, got {s2split!r}")
-    csort = (cache_sort if cache_sort is not None
-             else C.KNN_CACHE_SORT).lower()
-    if csort not in ("off", "cell"):
-        raise ValueError(
-            f"cache_sort must be off|cell, got {cache_sort!r}")
-    # eager-path intermediate persists (guide §5 A/B knob, config):
-    # False relies on AQE exchange reuse for the multi-consumer
-    # subtrees; bit-identical results either way
-    p_int = (C.KNN_PERSIST_INT if persist_intermediates is None
-             else bool(persist_intermediates))
     spark = points.sparkSession
     # effective salt multiplier of the multicast sides: with salt=N (or
     # a plan whose hottest cell splits N ways) the ring/cover rows are
@@ -753,15 +667,6 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     # shuffle in the whole join is this one slim-projection shuffle.
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     pts = pts.repartition(n_parts, *keys)
-    # cache_sort="cell" (VERDICT r6 item 4): order the slim projection
-    # within partitions by the join keys before it is cached, so every
-    # stage-2 probe of one cell reads contiguous cache pages (an A/B
-    # candidate against the measured 2.00x stage-2 CPI inflation on the
-    # bus-bound 4N gate).  sortWithinPartitions preserves the hash
-    # partitioning, so the exchange-free window clustering is untouched
-    # and results are bit-identical (tests/test_knn_paths.py twin).
-    if csort == "cell":
-        pts = pts.sortWithinPartitions(*keys)
     dense_thresh = 3 * k * C.KNN_SAMPLE_MOD
 
     if not materialize:
@@ -808,10 +713,10 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
         # unconditionally.  Results are identical either way; callers
         # on known-dense inputs who care should use materialize=True.
         result, _ = _stages(
-            spark, pts, queries, k, keys, salt_map, bc_ring, bc_cover,
+            pts, queries, k, keys, salt_map, bc_ring, bc_cover,
             cell_counts, add_with_total, need,
             sampling_guard=f"ring_sum < {dense_thresh} AND ",
-            sample_stage1=True, persist_intermediates=False,
+            sample_stage1=True, persist=False,
             prune_cells=cell_counts, usalt=usalt, smj_pts=smj_pts)
         return result
 
@@ -837,22 +742,12 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     # the histogram join + hash filter would keep every row — skip
     # them, and the ring_sum sampling guard on `done` drops too.
     any_dense = any(c >= dense_thresh for c in counts.values())
-    # stage-2 hot-cell split (config.KNN_S2SPLIT): derived from the
-    # driver histogram the eager path already holds, so building the
-    # {cell: nsplits} map is free.  Inactive when no cell crosses the
-    # threshold (e.g. all of sf0.1: max cell ~1k rows vs 500k default).
-    cover_split = None
-    if s2mode in ("doc", "qid"):
-        thr = (s2split_thresh if s2split_thresh is not None
-               else C.KNN_S2SPLIT_THRESH)
-        cover_split = {cell: min(C.KNN_S2SPLIT_CAP, -(-n // thr))
-                       for cell, n in counts.items() if n > thr} or None
     result, persisted = _stages(
-        spark, pts, queries, k, keys, salt_map, bc_ring, bc_cover,
+        pts, queries, k, keys, salt_map, bc_ring, bc_cover,
         cell_counts, _ring_count_expr(sat_df), need,
         sampling_guard=(f"ring_sum < {dense_thresh} AND "
                         if any_dense else ""),
-        sample_stage1=any_dense, persist_intermediates=p_int,
+        sample_stage1=any_dense, persist=True,
         # presence pruning drops cover rows in EMPTY cells, so its win
         # is bounded by the empty fraction: on a dense grid (sf0.1 is
         # ~70% occupied) the >1024-cell broadcast semi-join is pure
@@ -860,8 +755,7 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
         # empty (the sparse regime X6 exists for)
         prune_cells=(set(counts) if len(counts) < C.N_CELLS // 2
                      else None),
-        expand=total > 0, usalt=usalt,
-        cover_split=cover_split, s2mode=s2mode)
+        expand=total > 0, usalt=usalt)
     result = result.persist()
     result.count()
     if cache_input:

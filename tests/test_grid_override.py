@@ -65,14 +65,11 @@ def test_env_override_validation():
     """Bad env overrides must fail loudly at import (ADVICE r5: the
     knobs were unvalidated) — a zero grid dimension breaks the div/pmod
     cell arithmetic silently, an oversized grid overruns the O(#cells)
-    driver structures, and an s2split typo would otherwise silently
-    disable the feature.  Config-free Python subprocesses (no Spark)."""
+    driver structures.  Config-free Python subprocesses (no Spark)."""
     cases = [
         ({"SPARK_GRAFT_CELL_CX": "0"}, "must be >= 1"),
         ({"SPARK_GRAFT_CELL_CX": "16384",
           "SPARK_GRAFT_CELL_CY": "16384"}, "2\\^26|2\\^26 cells|exceeds"),
-        ({"SPARK_GRAFT_KNN_S2SPLIT": "on"}, "off|doc|qid"),
-        ({"SPARK_GRAFT_KNN_S2SPLIT_CAP": "0"}, "must be >= 1"),
     ]
     import re
     for override, pat in cases:
@@ -85,19 +82,6 @@ def test_env_override_validation():
         assert r.returncode != 0, f"{override} was accepted"
         assert "ValueError" in r.stderr and re.search(pat, r.stderr), \
             (override, r.stderr[-500:])
-
-
-def test_knn_s2split_arg_validated(spark):
-    from spatialgraft.extract import with_geometry  # noqa: F401
-    import pytest
-    from spatialgraft import datagen
-    from spatialgraft.ops.knn import knn_join
-    pts = datagen.knn_queries(spark, "/root/testdata/sf0.001")
-    with pytest.raises(ValueError, match="off|doc|qid"):
-        # validation fires before any job; reuse the query table shape
-        knn_join(pts.selectExpr("qid AS doc_key", "qmx AS mx",
-                                "qmy AS my", "qx AS x", "qy AS y"),
-                 pts, k=3, materialize=True, s2split="both")
 
 
 def test_knn_under_non_power_of_two_grid():

@@ -81,7 +81,10 @@ def test_salted_knn_identical_and_nonvacuous(spark, sf_correct):
 def test_uniform_salt_identical(spark, sf_correct):
     """knn_join(salt=N) — the plan-free skew knob — must be bit-exact
     against the unsalted join in BOTH materialize modes (stage 1 AND
-    stage 2 key on (cell, salt) when salted)."""
+    stage 2 key on (cell, salt) when salted).  The same twin also holds
+    the shuffled shape (broadcast_queries=False, the bench.py and
+    scripts/plancmp.py gate shape): ring and cover sort-merge joined
+    against the points instead of broadcast."""
     pts = with_geometry(datagen.documents_spans(spark, sf_correct))
     qs = datagen.knn_queries(spark, sf_correct)
     base = knn_join(pts, qs, k=10)
@@ -90,30 +93,23 @@ def test_uniform_salt_identical(spark, sf_correct):
     # the uncached eager path (gate protocol) must also be bit-exact
     _assert_same(knn_join(pts, qs, k=10, salt=8, materialize=True,
                           cache_input=False), base)
-
-
-def test_s2split_modes_identical_and_nonvacuous(spark, sf_correct):
-    """Stage-2 hot-cell split (VERDICT r5 item 2): both split shapes —
-    "doc" (hot points partitioned by doc_key hash, cover replicated)
-    and "qid" (cover hashed by qid, hot points replicated) — must be
-    bit-exact against the unsplit join.  thresh=3 makes nearly every
-    occupied cell "hot" at sf0.01 (median cell ~11 rows), so the split
-    branch carries almost all of the stage-2 probe (non-vacuous)."""
-    from spatialgraft import config as C
-    from spatialgraft.cells import with_cell
-    pts = with_geometry(datagen.documents_spans(spark, sf_correct))
-    qs = datagen.knn_queries(spark, sf_correct).limit(300)
-    # non-vacuity: the fixture must have cells over the test threshold
-    mx = (with_cell(pts.select("mx", "my")).groupBy("cell").count()
-          .agg(F.max("count")).collect()[0][0])
-    assert mx > 3 * C.KNN_S2SPLIT_CAP, "fixture too sparse to split"
-    base = knn_join(pts, qs, k=10, materialize=True)
-    for mode in ("doc", "qid"):
-        _assert_same(knn_join(pts, qs, k=10, materialize=True,
-                              s2split=mode, s2split_thresh=3), base)
-    # composes with the salted (cell, salt) stage keys
-    _assert_same(knn_join(pts, qs, k=10, materialize=True, salt=4,
-                          s2split="doc", s2split_thresh=3), base)
+    # with auto-broadcast off, only the engine's own O(#cells) hints
+    # broadcast — the cell-keyed stage joins must plan as sort-merge
+    # (the qid joins always do), so the shuffled case cannot pass on a
+    # broadcast plan
+    thr_key = "spark.sql.autoBroadcastJoinThreshold"
+    thr = spark.conf.get(thr_key)
+    spark.conf.set(thr_key, "-1")
+    try:
+        for mat in (False, True):
+            got = knn_join(pts, qs, k=10, broadcast_queries=False,
+                           materialize=mat)
+            plan = got._jdf.queryExecution().executedPlan().toString()
+            assert "SortMergeJoin [cell#" in plan, \
+                f"stage joins not shuffled (materialize={mat})"
+            _assert_same(got, base)
+    finally:
+        spark.conf.set(thr_key, thr)
 
 
 def test_sampling_short_circuit_identical(spark, sf_smoke, monkeypatch):
@@ -281,19 +277,3 @@ def test_cache_sizing_advisory(spark):
         fired = _warn_if_cache_exceeds_storage(spark, 10**17)
     assert fired is True
     assert any("slim cache" in str(x.message) for x in w)
-
-
-def test_cache_sort_bit_exact(spark, sf_smoke):
-    """cache_sort="cell" (VERDICT r6 item 4) only reorders rows inside
-    cache partitions — results must be bit-identical to the incumbent
-    in both the eager and lazy paths."""
-    pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
-    qs = datagen.knn_queries(spark, sf_smoke)
-    base = (knn_join(pts, qs, k=5, materialize=True)
-            .toPandas().sort_values(["qid", "rnk"]).reset_index(drop=True))
-    srt = (knn_join(pts, qs, k=5, materialize=True, cache_sort="cell")
-           .toPandas().sort_values(["qid", "rnk"]).reset_index(drop=True))
-    assert base.equals(srt)
-    import pytest
-    with pytest.raises(ValueError, match="cache_sort"):
-        knn_join(pts, qs, k=5, cache_sort="bogus")
