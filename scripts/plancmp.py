@@ -17,7 +17,9 @@ Usage: python scripts/plancmp.py OUT.txt  (run from the repo root)
 
 It prints the row count and the sha256 of the normalized plan, so a
 "default plan unchanged" check is one command per revision: equal
-hashes mean byte-identical plans.
+hashes mean byte-identical plans.  The lazy (materialize=False) plan
+of the same input goes to OUT.txt.lazy, its sha256 on the same line,
+so lazy-path refactors get the same check.
 """
 
 import hashlib
@@ -36,6 +38,19 @@ from spatialgraft.ops.knn import knn_join  # noqa: E402
 from spatialgraft.session import get_spark  # noqa: E402
 
 
+def _write_plan(df, path: str) -> str:
+    """Write df's normalized executed plan to path; return its sha256
+    (hashed as written, so it matches `sha256sum path`)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = re.sub(r"#\d+", "#X", plan)
+    plan = re.sub(r"\(\d+\)", "(N)", plan)
+    plan = re.sub(r"id=\d+", "id=X", plan)
+    with open(path, "w") as f:
+        f.write(plan)
+    with open(path, "rb") as f:
+        return hashlib.sha256(f.read()).hexdigest()
+
+
 def main() -> None:
     out = sys.argv[1]
     spark = get_spark("plancmp", cpus=4, shuffle_partitions=8)
@@ -49,16 +64,13 @@ def main() -> None:
     qs = datagen.knn_queries(spark, sf)
     res = knn_join(pts, qs, k=10, broadcast_queries=False,
                    cache_input=True, materialize=True)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    plan = re.sub(r"#\d+", "#X", plan)
-    plan = re.sub(r"\(\d+\)", "(N)", plan)
-    plan = re.sub(r"id=\d+", "id=X", plan)
-    with open(out, "w") as f:
-        f.write(plan)
-    # hash the bytes as written, so it matches `sha256sum OUT.txt`
-    with open(out, "rb") as f:
-        digest = hashlib.sha256(f.read()).hexdigest()
-    print("rows", res.count(), "sha256", digest, "->", out)
+    digest = _write_plan(res, out)
+    rows = res.count()
+    lazy = knn_join(pts, qs, k=10, broadcast_queries=False,
+                    materialize=False)
+    lazy_digest = _write_plan(lazy, out + ".lazy")
+    print("rows", rows, "sha256", digest, "->", out,
+          "lazy sha256", lazy_digest, "->", out + ".lazy")
     spark.stop()
 
 

@@ -30,6 +30,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+# the bounded multicast fan-outs callers pass to decide() (see above)
+COVER_FANOUT = 64
+RING_FANOUT = 9
+
 _UNITS = {"b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
           "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30}
 

@@ -30,8 +30,10 @@ grouped-Arrow plumbing dominates):
            top-k is the true kNN (correctKNN/nextRoundKNN split,
            knnJoinRDD.scala:63-98).
   expand   UNDERFILLED queries (< k ring candidates): the exact cell
-           histogram's 2-D summed-area table (O(#cells), driver-side)
-           gives the smallest ring radius whose box holds >= k points;
+           histogram's 2-D summed-area table (O(#cells); one padded
+           array row, driver-built when eager, a job-free plan when
+           lazy, read by the same 4 element_at lookups) gives the
+           smallest ring radius whose box holds >= k points;
            the distance to that box's far corner is an exact kth upper
            bound.  This replaces the old world-cover fallback — no
            full-table scan ever, the re-join box is as small as the
@@ -74,6 +76,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import config as C
+from ..broadcast import COVER_FANOUT, RING_FANOUT, decide
 from ..cells import cover_cells, with_cell
 
 # x/y are recomputed inline from the int milli coords with the exact
@@ -99,9 +102,8 @@ _EXPAND_RADII = [2 ** i
                                 .bit_length() + 1)]
 
 
-def _with_ring_bounds(queries: DataFrame,
-                      cell_counts: DataFrame | None = None,
-                      k: int = C.DEFAULT_K) -> DataFrame:
+def _with_ring_bounds(queries: DataFrame, cell_counts: DataFrame,
+                      k: int) -> DataFrame:
     """Attach the exact milli bounds of each query's candidate cell ring
     (cell cx covers mx in [ceil(cx*W/CX), ceil((cx+1)*W/CX) - 1]).
 
@@ -117,14 +119,10 @@ def _with_ring_bounds(queries: DataFrame,
         "qid", "qmx", "qmy", "qx", "qy",
         f"{cx} AS _cx", f"{cy} AS _cy",
         f"({cx}) * {C.CELL_CY} + ({cy}) AS cell")
-    if cell_counts is not None:
-        q = (q.join(F.broadcast(cell_counts), on="cell", how="left")
-             .selectExpr("qid", "qmx", "qmy", "qx", "qy", "_cx", "_cy",
-                         f"CASE WHEN coalesce(cellcnt, 0) >= {3 * k} "
-                         "THEN 0 ELSE 1 END AS _r"))
-    else:
-        q = q.selectExpr("qid", "qmx", "qmy", "qx", "qy", "_cx", "_cy",
-                         "1 AS _r")
+    q = (q.join(F.broadcast(cell_counts), on="cell", how="left")
+         .selectExpr("qid", "qmx", "qmy", "qx", "qy", "_cx", "_cy",
+                     f"CASE WHEN coalesce(cellcnt, 0) >= {3 * k} "
+                     "THEN 0 ELSE 1 END AS _r"))
     # one fused select: corners via lateral aliases, then the ring's
     # exact milli bounds (same floor arithmetic as the original chain)
     return q.selectExpr(
@@ -183,81 +181,57 @@ def _ring_count_sql(sat: str, cxa: str, cxb: str, cya: str, cyb: str
             f"- {at(f'{cxb} + 1', cya)} + {at(cxa, cya)}")
 
 
-def _dense_prefix(spark, cell_counts: DataFrame) -> DataFrame:
-    """Lazy twin of _sat_rows: INCLUSIVE 2-D prefix sums P'(pi, pj) =
-    sum of counts over cells with cell_x <= pi, cell_y <= pj, as a
-    dense O(#cells) DataFrame (two cumulative windows over the grid).
-    SAT semantics (strict <) are recovered at lookup time by shifting
-    corner indices down by one (missing/-1 keys coalesce to 0)."""
-    grid = (spark.range(C.CELL_CX).selectExpr("id AS cx")
-            .crossJoin(spark.range(C.CELL_CY).selectExpr("id AS cy")))
-    c2d = cell_counts.selectExpr(f"cell div {C.CELL_CY} AS cx",
-                                 f"cell % {C.CELL_CY} AS cy", "cellcnt")
-    d = (grid.join(c2d, on=["cx", "cy"], how="left")
-         .selectExpr("cx AS pi", "cy AS pj",
+def _sat_plan(spark, cell_counts: DataFrame) -> DataFrame:
+    """Lazy twin of _sat_rows: the same padded `sat array<bigint>` as a
+    one-row plan (no job runs at construction), plus `_total`, the table
+    total (the SAT's last entry).  Cell (cx, cy) sits at padded index
+    (cx+1, cy+1) of the dense (CX+1) x (CY+1) grid, so the two
+    cumulative windows give SAT semantics (strict <) directly."""
+    cy1 = C.CELL_CY + 1
+    c = cell_counts.selectExpr(
+        f"(cell div {C.CELL_CY} + 1) * {cy1} + cell % {C.CELL_CY} + 1 "
+        "AS id", "cellcnt")
+    d = (spark.range((C.CELL_CX + 1) * cy1)
+         .join(c, on="id", how="left")
+         .selectExpr("id", f"id div {cy1} AS i", f"id % {cy1} AS j",
                      "coalesce(cellcnt, CAST(0 AS BIGINT)) AS c"))
-    w1 = (Window.partitionBy("pi").orderBy("pj")
+    w1 = (Window.partitionBy("i").orderBy("j")
           .rowsBetween(Window.unboundedPreceding, 0))
-    w2 = (Window.partitionBy("pj").orderBy("pi")
+    w2 = (Window.partitionBy("j").orderBy("i")
           .rowsBetween(Window.unboundedPreceding, 0))
     return (d.withColumn("s1", F.sum("c").over(w1))
             .withColumn("p", F.sum("s1").over(w2))
-            .select("pi", "pj", "p"))
+            .agg(F.expr("transform(array_sort(collect_list(struct(id, p))),"
+                        " e -> e.p)").alias("sat"))
+            .selectExpr("sat", "element_at(sat, -1) AS _total"))
 
 
-def _ring_count_join(prefix_df: DataFrame):
-    """add_ring_count strategy (lazy path): 4 signed corner lookups per
-    key against the dense inclusive-prefix grid — explode to corners,
-    broadcast-join the O(#cells) grid, sum back.  Exact twin of the
-    element_at SAT formula."""
-    def add(df: DataFrame, key_cols: list[str], out: str) -> DataFrame:
-        corners = (df.selectExpr(
-            *key_cols,
-            "explode(array("
-            "struct(CAST(_cxb AS BIGINT) AS pi, "
-            "CAST(_cyb AS BIGINT) AS pj, 1 AS sgn), "
-            "struct(CAST(_cxa AS BIGINT) - 1 AS pi, "
-            "CAST(_cyb AS BIGINT) AS pj, -1 AS sgn), "
-            "struct(CAST(_cxb AS BIGINT) AS pi, "
-            "CAST(_cya AS BIGINT) - 1 AS pj, -1 AS sgn), "
-            "struct(CAST(_cxa AS BIGINT) - 1 AS pi, "
-            "CAST(_cya AS BIGINT) - 1 AS pj, 1 AS sgn)"
-            ")) AS c")
-            .selectExpr(*key_cols, "c.pi AS pi", "c.pj AS pj",
-                        "c.sgn AS sgn")
-            .join(F.broadcast(prefix_df), on=["pi", "pj"], how="left")
-            .groupBy(*key_cols)
-            .agg(F.sum(F.expr("sgn * coalesce(p, CAST(0 AS BIGINT))"))
-                 .alias(out)))
-        return df.join(corners, on=key_cols, how="inner")
-    return add
-
-
-def _ring_count_expr(sat_df: DataFrame):
-    """add_ring_count strategy (eager path): the driver-built SAT array
-    broadcast-cross-joined in, 4 element_at lookups inline."""
-    def add(df: DataFrame, key_cols: list[str], out: str) -> DataFrame:
-        return (df.crossJoin(F.broadcast(sat_df))
-                .withColumn(out, F.expr(_ring_count_sql(
-                    "sat", "_cxa", "_cxb", "_cya", "_cyb")))
-                .drop("sat"))
-    return add
+def _ring_count_expr(df: DataFrame, sat_df: DataFrame, out: str
+                     ) -> DataFrame:
+    """Add `out` = the point count of each row's cell rectangle: the
+    one-row SAT broadcast-cross-joined in, 4 element_at lookups inline
+    (any other sat_df column, e.g. the lazy `_total`, rides along)."""
+    return (df.crossJoin(F.broadcast(sat_df))
+            .withColumn(out, F.expr(_ring_count_sql(
+                "sat", "_cxa", "_cxb", "_cya", "_cyb")))
+            .drop("sat"))
 
 
 def _stages(pts: DataFrame, queries: DataFrame, k: int,
             keys: list[str], salt_map, bc_ring: bool, bc_cover: bool,
-            cell_counts: DataFrame, add_ring_count,
+            cell_counts: DataFrame, sat_df: DataFrame,
             need, sampling_guard: str, sample_stage1: bool,
             persist: bool,
             prune_cells=None, expand: bool = True,
             usalt: int | None = None, smj_pts: bool = False):
     """Shared stage-1 / split / expand / stage-2 assembly.  The eager
     and lazy paths differ only in what they inject here: the histogram
-    source (collected vs lazy agg), the SAT lookup strategy (driver
-    array vs prefix-grid join), the `need` threshold (literal vs
-    least(k, total) column), whether stage-1 sampling is compiled in,
-    and whether the multi-consumer intermediates (cand1, stats)
-    persist.  Returns (result, persisted).
+    source (collected vs lazy agg), the one-row SAT sat_df (driver-built
+    array vs the _sat_plan aggregate — both read by the same element_at
+    lookups), the `need` threshold (literal vs least(k, _total) column),
+    whether stage-1 sampling is compiled in, and whether the
+    multi-consumer intermediates (cand1, stats) persist.  Returns
+    (result, persisted).
 
     prune_cells: sFilter presence pruning of the stage-2 cover (X6
     wired into J7, VERDICT r4 item 6) — multicast (query, cell) rows
@@ -356,7 +330,7 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
     # cells: sum >= dense_thresh is conservative (sum >= max)
     agg = cand1.groupBy("qid").agg(F.count("*").alias("cnt"),
                                    F.max("dist2").alias("kth2"))
-    stats = (add_ring_count(qmeta, ["qid"], "ring_sum")
+    stats = (_ring_count_expr(qmeta, sat_df, "ring_sum")
              .select("qid", "qmx", "qmy", "qx", "qy", "_cx", "_cy",
                      "ring_sum",
                      "ring_x0", "ring_x1", "ring_y0", "ring_y1")
@@ -380,15 +354,16 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
     done = (cand1.join(filled.where("done").select("qid"), on="qid")
             .select("qid", "doc_key", "dist2", "rnk"))
 
+    # stage 2: exact radius re-join for boundary + underfilled queries
+    bq = filled.where("NOT done").select(
+        "qid", "qmx", "qmy", "qx", "qy", "rm", "kth2")
     # underfilled queries (< k in the ring): SAT ring expansion — the
     # smallest power-of-two cell radius whose box holds >= need points;
     # distance to that box's far corner (+1 milli guard) is an exact
     # kth upper bound.  Skipped when the caller knows the table is
     # empty (expand=False): _rc >= 0 would pick radius 1 for every
     # query and union a useless stage-2 branch.
-    if not expand:
-        exp = None
-    else:
+    if expand:
         under = stats.where(F.col("cnt") < k)
         radii = ", ".join(str(r) for r in _EXPAND_RADII)
         exp_base = (
@@ -401,7 +376,7 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
                         "greatest(_cy - _r, 0) AS _cya",
                         f"least(_cy + _r, {C.CELL_CY - 1}) AS _cyb"))
         exp = (
-            add_ring_count(exp_base, ["qid", "_r"], "_rc")
+            _ring_count_expr(exp_base, sat_df, "_rc")
             .where(F.col("_rc") >= need)
             .withColumn("_pick", F.row_number().over(
                 Window.partitionBy("qid").orderBy("_r")))
@@ -426,11 +401,6 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
                 "CAST(ceil(sqrt(CAST(_dxm * _dxm + _dym * _dym "
                 "AS DOUBLE))) + 1 AS BIGINT) AS rm",
                 "CAST(rm * rm AS DOUBLE) / 1.0E6 AS kth2"))
-
-    # stage 2: exact radius re-join for boundary + underfilled queries
-    bq = filled.where("NOT done").select(
-        "qid", "qmx", "qmy", "qx", "qy", "rm", "kth2")
-    if expand:
         bq = bq.unionByName(exp)
     bq = bq.selectExpr(
         "qid", "qx", "qy", "kth2",
@@ -516,18 +486,13 @@ def _warn_if_cache_exceeds_storage(spark, total_rows: int) -> bool:
 
 def _bc_gates(spark, queries: DataFrame, eff_salt: int,
               flag: bool | None) -> tuple[bool, bool]:
-    """Resolve the ring / stage-2-cover broadcast decisions: explicit
-    flag wins; None size-gates the optimizer's estimate of the query
-    side times the multicast fan-out (ring 9, cover ~64) TIMES the
-    effective salt replication, against the session threshold — no job
-    runs (see spatialgraft.broadcast for why plan stats, not a count)."""
-    if flag is not None:
-        return flag, flag
-    from ..broadcast import plan_size_bytes, threshold_bytes
-    thr = threshold_bytes(spark)
-    est = plan_size_bytes(queries) if thr > 0 else 1 << 62
-    return (thr > 0 and est * 9 * eff_salt <= thr,
-            thr > 0 and est * 64 * eff_salt <= thr)
+    """Resolve the ring / stage-2-cover broadcast decisions: the
+    multicast fan-out (ring 9, cover ~64) TIMES the effective salt
+    replication, size-gated by spatialgraft.broadcast.decide (explicit
+    flag wins, no job runs).  `spark` is unused: decide() reads the
+    queries' own session."""
+    return (decide(queries, flag, RING_FANOUT * eff_salt),
+            decide(queries, flag, COVER_FANOUT * eff_salt))
 
 
 def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
@@ -561,8 +526,9 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     materialize=False (library default): plan construction is
     COMPLETELY lazy — no job runs, nothing is persisted, the returned
     DataFrame is a pure composable plan.  The cell histogram and the
-    SAT become part of the plan (a lazy per-cell aggregate + a dense
-    O(#cells) prefix grid joined at 4 corners per lookup), the stage-1
+    SAT become part of the plan (a lazy per-cell aggregate + the same
+    padded SAT array row the eager path builds, aggregated in-plan by
+    _sat_plan and read by the same 4 element_at lookups), the stage-1
     density sampling is always compiled in (its filter is the identity
     for sparse cells), and the `done` guard always carries the
     conservative ring_sum test.  Each action recomputes the input
@@ -686,23 +652,11 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
                                      .analyzed().toString())
         except Exception:
             smj_pts = True  # unknown lineage -> take the scale-safe side
-        # fully lazy: histogram, total, and SAT are all plan nodes
+        # fully lazy: histogram and SAT (with its total) are plan nodes
         cell_counts = pts.groupBy("cell").agg(
             F.count("*").alias("cellcnt"))
-        prefix = _dense_prefix(spark, cell_counts)
-        total_df = cell_counts.agg(
-            F.sum("cellcnt").alias("_total")).fillna({"_total": 0})
-        # `need` is a COLUMN here (least(k, total)): the 1-row total
-        # rides onto the expansion rows via a broadcast cross join
-        # planted by the strategy wrapper below
-        base_add = _ring_count_join(prefix)
-
-        def add_with_total(df, key_cols, out):
-            df2 = base_add(df, key_cols, out)
-            if out == "_rc":
-                df2 = df2.crossJoin(F.broadcast(total_df))
-            return df2
-
+        sat_df = _sat_plan(spark, cell_counts)
+        # `need` is a COLUMN here: _total rides in with the SAT row
         need = F.least(F.lit(k).cast("long"), F.col("_total"))
         # prune asymmetry vs the eager path (documented, ADVICE r5): the
         # eager path gates the stage-2 presence prune on <50% grid
@@ -714,7 +668,7 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
         # on known-dense inputs who care should use materialize=True.
         result, _ = _stages(
             pts, queries, k, keys, salt_map, bc_ring, bc_cover,
-            cell_counts, add_with_total, need,
+            cell_counts, sat_df, need,
             sampling_guard=f"ring_sum < {dense_thresh} AND ",
             sample_stage1=True, persist=False,
             prune_cells=cell_counts, usalt=usalt, smj_pts=smj_pts)
@@ -744,7 +698,7 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     any_dense = any(c >= dense_thresh for c in counts.values())
     result, persisted = _stages(
         pts, queries, k, keys, salt_map, bc_ring, bc_cover,
-        cell_counts, _ring_count_expr(sat_df), need,
+        cell_counts, sat_df, need,
         sampling_guard=(f"ring_sum < {dense_thresh} AND "
                         if any_dense else ""),
         sample_stage1=any_dense, persist=True,

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..broadcast import decide as _decide_broadcast
+from ..broadcast import COVER_FANOUT, decide as _decide_broadcast
 from ..cells import cover_cells, with_cell
 from ..sqlgen import pip_concave_predicate, pip_predicate
 
@@ -39,7 +39,7 @@ def pip_join(points: DataFrame, polys: DataFrame,
     broadcast_polys None = auto size-gate on the polygon count
     (spatialgraft.broadcast.decide) — huge polygon sets shuffle."""
     pts = with_cell(points)
-    bc = _decide_broadcast(polys, broadcast_polys, fanout=64)
+    bc = _decide_broadcast(polys, broadcast_polys, COVER_FANOUT)
     cover = cover_cells(polys)
     if bc:
         cover = F.broadcast(cover)
@@ -56,8 +56,7 @@ def pip_join_count(points: DataFrame, polys: DataFrame,
 
 
 def pip_join_concave(points: DataFrame, polys: DataFrame,
-                     broadcast_polys: bool | None = None,
-                     bbox_prefilter: bool = True) -> DataFrame:
+                     broadcast_polys: bool | None = None) -> DataFrame:
     """(poly_id, doc_key) pairs for ARBITRARY simple polygons given as
     vertex arrays (poly_id, vxs, vys, xmin, ymin, xmax, ymax) — exact
     int64 even-odd ray-cast, border-inclusive, concave-safe.
@@ -68,21 +67,19 @@ def pip_join_concave(points: DataFrame, polys: DataFrame,
     HOF: cells are coarser than bboxes, so most cover candidates
     short-circuit on four int compares instead of paying the
     O(#vertices) edge walk — the same free pre-filter the convex path
-    gets from its first failing half-plane test.  bbox_prefilter=False
-    exists only to measure that effect (results are identical: the
-    bbox is a superset of the polygon, so the conjunct never drops a
-    contained point)."""
+    gets from its first failing half-plane test (exact: the bbox is a
+    superset of the polygon, so the conjunct never drops a contained
+    point)."""
     pts = with_cell(points)
-    bc = _decide_broadcast(polys, broadcast_polys, fanout=64)
+    bc = _decide_broadcast(polys, broadcast_polys, COVER_FANOUT)
     cover = cover_cells(polys)
     if bc:
         cover = F.broadcast(cover)
-    j = pts.join(cover, on="cell", how="inner")
-    if bbox_prefilter:
-        j = j.where(F.expr(
-            "mx >= xmin AND mx <= xmax AND my >= ymin AND my <= ymax"))
     pred = pip_concave_predicate("mx", "my", "vxs", "vys", "spark")
-    return (j.where(F.expr(pred))
+    return (pts.join(cover, on="cell", how="inner")
+            .where(F.expr(
+                "mx >= xmin AND mx <= xmax AND my >= ymin AND my <= ymax"))
+            .where(F.expr(pred))
             .select("poly_id", "doc_key"))
 
 

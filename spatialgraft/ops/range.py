@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..broadcast import decide as _decide_broadcast
+from ..broadcast import COVER_FANOUT, decide as _decide_broadcast
 from ..cells import cover_cells, with_cell
 
 CONTAINS = ("mx >= xmin AND mx <= xmax AND "
@@ -27,9 +27,6 @@ CONTAINS = ("mx >= xmin AND mx <= xmax AND "
 # set shuffles instead of building a driver-side broadcast, with no
 # flag knowledge required.  Explicit True/False still force.
 _BROADCAST_DEFAULT: bool | None = None
-
-# a query box covers <= ~64 cells at the join cell level (cells.py)
-BOX_COVER_FANOUT = 64
 
 
 def _joined(points: DataFrame, boxes: DataFrame,
@@ -50,7 +47,7 @@ def _joined(points: DataFrame, boxes: DataFrame,
         points = points.where(F.expr(pred) if isinstance(pred, str)
                               else pred)
     pts = with_cell(points)
-    bc = _decide_broadcast(boxes, broadcast_queries, BOX_COVER_FANOUT)
+    bc = _decide_broadcast(boxes, broadcast_queries, COVER_FANOUT)
     cover = cover_cells(boxes)
     if presence is not None:
         from ..sfilter import prune_cover
@@ -130,7 +127,7 @@ def intersects_join(dboxes: DataFrame, qboxes: DataFrame,
         "dbox_id", "xmin AS d_xmin", "ymin AS d_ymin",
         "xmax AS d_xmax", "ymax AS d_ymax"),
         xmin="d_xmin", ymin="d_ymin", xmax="d_xmax", ymax="d_ymax")
-    bc = _decide_broadcast(qboxes, broadcast_queries, BOX_COVER_FANOUT)
+    bc = _decide_broadcast(qboxes, broadcast_queries, COVER_FANOUT)
     q = cover_cells(qboxes)
     if bc:
         q = F.broadcast(q)

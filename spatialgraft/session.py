@@ -95,10 +95,8 @@ def get_spark(app: str = "spatialgraft",
         # default): lz4-compressing the kNN slim cache was A/B-measured
         # at the x2304 gate (bench_records/r5, round 5) and LOST — the
         # 4N knn wall went 170.8 -> 215.1 s; the compression ALU cost
-        # exceeds the bus traffic it saves on this box.  Kept as an
-        # env toggle for re-measurement on other hardware.
-        .config("spark.rdd.compress",
-                os.environ.get("SPARK_GRAFT_RDD_COMPRESS", "false"))
+        # exceeds the bus traffic it saves on this box.
+        .config("spark.rdd.compress", "false")
         # spill-merge read-ahead allocates a 1 MiB heap buffer PER spill
         # file; a heavily-spilled sort (thousands of files x 8 tasks)
         # then OOMs in getSortedIterator before reading a single row.

@@ -56,6 +56,18 @@ _INNER = textwrap.dedent('''
     # the lazy path walks the same expansion subtree
     lz = knn_join(pts, qs, k=10, materialize=False)
     assert sorted(map(tuple, lz.collect())) == wv
+    # the lazy SAT row has the driver SAT's layout on a non-power-of-two
+    # grid too (points spread over the whole 96x48 world)
+    from spatialgraft.cells import with_cell
+    from spatialgraft.ops.knn import _sat_plan, _sat_rows
+    spread = spark.range(500).selectExpr(
+        "(id * 7919) % 360000 AS mx", "(id * 104729) % 180000 AS my")
+    cc = (with_cell(pts.select("mx", "my").unionByName(spread))
+          .groupBy("cell").agg(F.count("*").alias("cellcnt")))
+    counts = {r["cell"]: r["cellcnt"] for r in cc.collect()}
+    (row,) = _sat_plan(spark, cc).collect()
+    assert row["sat"] == _sat_rows(counts)
+    assert row["_total"] == 530, row["_total"]
     spark.stop()
     print("GRID-OK")
 ''')

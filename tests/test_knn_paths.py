@@ -148,6 +148,25 @@ def test_knn_pred_matches_filtered_brute_force(spark, sf_smoke):
                  _brute(pts, qs, k=5, pred=F.expr(pred)))
 
 
+def test_sat_plan_matches_driver_sat(spark, sf_smoke):
+    """The lazy SAT row (_sat_plan) must equal the driver-built one
+    (_sat_rows) entry for entry, and `_total` the table total.  The
+    brute-force twins only catch an over-counting SAT (the bound gets
+    too tight); an under-counting one merely loosens the bound, so the
+    layout is pinned here directly — on real data and an empty table."""
+    from spatialgraft.cells import with_cell
+    from spatialgraft.ops.knn import _sat_plan, _sat_rows
+    pts = with_cell(with_geometry(datagen.documents_spans(spark, sf_smoke)))
+    cell_counts = pts.groupBy("cell").agg(F.count("*").alias("cellcnt"))
+    counts = {r["cell"]: r["cellcnt"] for r in cell_counts.collect()}
+    assert len(counts) > 100  # non-vacuous
+    for cc, want in ((cell_counts, counts),
+                     (cell_counts.where("false"), {})):
+        (row,) = _sat_plan(spark, cc).collect()
+        assert row["sat"] == _sat_rows(want)
+        assert row["_total"] == sum(want.values())
+
+
 def test_lazy_construction_runs_no_jobs(spark, sf_smoke):
     """materialize=False must be a pure plan: no Spark job (histogram,
     count, or otherwise) during knn_join() itself, and nothing left

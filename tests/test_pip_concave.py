@@ -179,7 +179,7 @@ def _many_vertex_star(cx, cy, outer_r, n):
 def test_many_vertex_star_matches_bruteforce(spark, n):
     """VERDICT r4 item 4: many-vertex polygons are where the O(#vertex)
     interpreted ray-cast is expensive and the codegen bbox pre-filter
-    pays; exactness must hold with and without it."""
+    pays; exactness must hold through it."""
     xs, ys = _many_vertex_star(100_000, 90_000, 3000, n)
     # fixture quality: the rounded star is still simple
     vertices = list(zip(xs, ys))
@@ -199,10 +199,9 @@ def test_many_vertex_star_matches_bruteforce(spark, n):
     want = {(0, k) for k, x, y in grid
             if min(xs) <= x <= max(xs) and min(ys) <= y <= max(ys)
             and _inside_bruteforce(x, y, xs, ys)}
-    for pre in (True, False):
-        got = {(r["poly_id"], r["doc_key"]) for r in pip_join_concave(
-            pts_df, polys_df, bbox_prefilter=pre).collect()}
-        assert got == want, f"bbox_prefilter={pre}"
+    got = {(r["poly_id"], r["doc_key"]) for r in pip_join_concave(
+        pts_df, polys_df).collect()}
+    assert got == want
     assert len(want) > 50  # non-vacuous
 
 
