@@ -19,7 +19,11 @@ It prints the row count and the sha256 of the normalized plan, so a
 "default plan unchanged" check is one command per revision: equal
 hashes mean byte-identical plans.  The lazy (materialize=False) plan
 of the same input goes to OUT.txt.lazy, its sha256 on the same line,
-so lazy-path refactors get the same check.
+so lazy-path refactors get the same check.  The count_join operators
+(range_join_count, range_join, pip_join_count, pip_join_concave_count)
+on the same points, with the standard query boxes and polygons, go to
+OUT.txt.<op>; one extra line prints their sha256 values.  These plans
+are taken unexecuted, so no job runs for them.
 """
 
 import hashlib
@@ -34,6 +38,8 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from spatialgraft import datagen  # noqa: E402
 from spatialgraft.extract import with_geometry  # noqa: E402
+from spatialgraft.ops import pip as pops  # noqa: E402
+from spatialgraft.ops import range as rops  # noqa: E402
 from spatialgraft.ops.knn import knn_join  # noqa: E402
 from spatialgraft.session import get_spark  # noqa: E402
 
@@ -71,6 +77,17 @@ def main() -> None:
     lazy_digest = _write_plan(lazy, out + ".lazy")
     print("rows", rows, "sha256", digest, "->", out,
           "lazy sha256", lazy_digest, "->", out + ".lazy")
+    boxes = datagen.query_boxes(spark, sf)
+    polys = datagen.polygons(spark, sf)
+    concave = datagen.polygons_concave(spark, sf)
+    ops = {"range_join_count": rops.range_join_count(pts, boxes),
+           "range_join": rops.range_join(pts, boxes),
+           "pip_join_count": pops.pip_join_count(pts, polys),
+           "pip_join_concave_count":
+               pops.pip_join_concave_count(pts, concave)}
+    print("count_join", " ".join(
+        f"{op} sha256 {_write_plan(df, f'{out}.{op}')}"
+        for op, df in ops.items()))
     spark.stop()
 
 

@@ -1,10 +1,11 @@
 """Grid-cell encoding and box cover — exact int64, JVM-side expressions.
 
 Plays the role of the reference's space-filling-curve cell ids
-(reference/src/main/scala/cs/purdue/edu/spatialindex/rtree/sfcurve.scala:28-148)
-and of the query-multicast step that replicates each query box to every
-overlapping partition (reference SpatialRdd.scala:377-397).  Everything is
-a Catalyst column expression (whole-stage codegen, no UDF):
+(reference/src/main/scala/cs/purdue/edu/spatialindex/rtree/sfcurve.scala:28-148;
+here a flat grid id, no curve) and of the query-multicast step that
+replicates each query box to every overlapping partition (reference
+SpatialRdd.scala:377-397).  Everything is a Catalyst column expression
+(whole-stage codegen, no UDF):
 
   cell_x = mx * CX div WORLD_MX      (exact integer floor)
   cell   = cell_x * CY + cell_y
@@ -17,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import config as C
+from .broadcast import COVER_FANOUT, decide
 
 
 def cell_expr(mx: str = "mx", my: str = "my",
@@ -28,34 +30,6 @@ def cell_expr(mx: str = "mx", my: str = "my",
 def with_cell(df: DataFrame, mx: str = "mx", my: str = "my",
               out: str = "cell") -> DataFrame:
     return df.withColumn(out, cell_expr(mx, my))
-
-
-# Morton bit widths derived from the grid config: smallest widths that
-# hold cell_x in [0, CX) / cell_y in [0, CY).  zorder_expr and
-# zorder_int share these, so a CELL_CX/CELL_CY change can never skew
-# the JVM-side packing against the driver-side one.
-CX_BITS = (C.CELL_CX - 1).bit_length()
-CY_BITS = (C.CELL_CY - 1).bit_length()
-
-
-def zorder_expr(mx: str = "mx", my: str = "my") -> Column:
-    """Bit-interleaved (Morton) key for locality-preserving sorts.
-    Bit layout is identical to zorder_int (x bits at odd positions,
-    y at even) — asserted equal in tests/test_cells.py."""
-    cx = f"(({mx} * {C.CELL_CX}) div {C.WORLD_MX})"
-    cy = f"(({my} * {C.CELL_CY}) div {C.WORLD_MY})"
-    # each term MUST be parenthesized: Spark SQL gives binary `+` HIGHER
-    # precedence than `<<`, so `a << 1 + b << 0` parses as
-    # `(a << (1 + b)) << 0` — the unparenthesized join silently produced
-    # a non-Morton key (caught by tests/test_cells.py parity vs
-    # zorder_int; harmless before only because zorder_expr drives sort
-    # locality, never a join key)
-    parts = []
-    for i in range(CX_BITS):
-        parts.append(f"(((({cx}) >> {i}) & 1) << {2 * i + 1})")
-    for i in range(CY_BITS):
-        parts.append(f"(((({cy}) >> {i}) & 1) << {2 * i})")
-    return F.expr(" + ".join(parts))
 
 
 def cover_cells(boxes: DataFrame,
@@ -79,13 +53,25 @@ def cover_cells(boxes: DataFrame,
             .drop("_cx", "_cy"))
 
 
-def zorder_int(cell: int, cx_bits: int = CX_BITS,
-               cy_bits: int = CY_BITS) -> int:
-    """Driver-side Morton key of a cell id (for partition packing)."""
-    cxv, cyv = divmod(cell, C.CELL_CY)
-    z = 0
-    for i in range(cx_bits):
-        z |= ((cxv >> i) & 1) << (2 * i + 1)
-    for i in range(cy_bits):
-        z |= ((cyv >> i) & 1) << (2 * i)
-    return z
+def cover_join(points: DataFrame, queries: DataFrame,
+               broadcast: bool | None, refine: str,
+               presence: set[int] | None = None) -> DataFrame:
+    """The cover -> equi-join -> refine kernel shared by the range and
+    PIP joins: points (mx, my) get their cell, each query is multicast to
+    the cells its bbox (xmin..ymax) covers, the two hash-join on `cell`,
+    and the exact `refine` SQL predicate keeps the true matches.
+
+    broadcast: None = auto size-gate of the multicast side
+    (spatialgraft.broadcast.decide); True/False force.
+    presence: optional sFilter cell-presence set — multicast rows whose
+    cell holds no data are dropped before the shuffle
+    (spatialgraft.sfilter.prune_cover)."""
+    pts = with_cell(points)
+    bc = decide(queries, broadcast, COVER_FANOUT)
+    cover = cover_cells(queries)
+    if presence is not None:
+        from .sfilter import prune_cover
+        cover = prune_cover(cover, presence)
+    if bc:
+        cover = F.broadcast(cover)
+    return pts.join(cover, on="cell", how="inner").where(F.expr(refine))

@@ -51,14 +51,15 @@ N_CELLS = CELL_CX * CELL_CY
 TILE_TX = 1024
 TILE_TY = 512
 
-# Default number of spatial partitions for the skew-aware partitioner
-# (reference default 500 partitions, spatialrdd/impl/Util.scala:21 — we
-# size to the local sandbox; at cluster scale pass n_partitions explicitly).
+# Default cap on a hot cell's salt-slice count (`n_partitions` of
+# partitioner.plan_partitions; reference default 500 partitions,
+# spatialrdd/impl/Util.scala:21 — we size to the local sandbox; at
+# cluster scale pass n_partitions explicitly).
 DEFAULT_PARTITIONS = 64
 
 # Skew handling: a cell whose row count exceeds `mean * SKEW_RATIO` gets
-# salted into ceil(count / target) splits (reference threshold ratio 3,
-# scheduler/skewAnalysis.scala:145-160).
+# salted into ceil(count / int(mean * SKEW_RATIO)) splits (reference
+# threshold ratio 3, scheduler/skewAnalysis.scala:145-160).
 SKEW_RATIO = 3.0
 
 # --- deterministic data derivation constants (shared Spark/DuckDB) ------

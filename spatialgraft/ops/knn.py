@@ -55,11 +55,13 @@ keep sub-expressions single-sourced) and the broadcast gate reads the
 optimizer's sizeInBytes estimate instead of running a count — the only
 jobs a call runs are the histogram collect and the caller's action.
 
-Skew (J9): pass a SpatialPartitioning `plan` and stage 1 joins on
-(cell, salt) — the data side hashes hot cells into `nsplits` salt
-slices, the multicast ring replicates across them (the reference salts
-skewed partitions inside kNN round 2, knnJoinRDD.scala:120-215).
-Without a plan the ring join's probe side still gets AQE skew-split.
+Skew (J9): pass a SpatialPartitioning `plan` (or a uniform `salt=N`)
+and both stage joins key on (cell, salt) — the data side hashes hot
+cells into `nsplits` salt slices, the multicast ring and stage-2 cover
+replicate across them, all in spatialgraft.partitioner's one salt
+format (the reference salts skewed partitions inside kNN round 2,
+knnJoinRDD.scala:120-215).  Without a plan the ring join's probe side
+still gets AQE skew-split.
 
 Predicates (F6): `pred` restricts the data side before any join — the
 reference's `knnFilter(entry, k, z)` z-predicate
@@ -78,6 +80,7 @@ from pyspark.sql import functions as F
 from .. import config as C
 from ..broadcast import COVER_FANOUT, RING_FANOUT, decide
 from ..cells import cover_cells, with_cell
+from ..partitioner import salt_multicast, salt_points
 
 # x/y are recomputed inline from the int milli coords with the exact
 # expression shape of extract.py:65 (int subtract -> cast -> /1000.0),
@@ -102,6 +105,27 @@ _EXPAND_RADII = [2 ** i
                                 .bit_length() + 1)]
 
 
+# the cell rectangle of radius _r around the home cell (_cx, _cy),
+# clipped to the grid
+_RECT = ["greatest(_cx - _r, 0) AS _cxa",
+         f"least(_cx + _r, {C.CELL_CX - 1}) AS _cxb",
+         "greatest(_cy - _r, 0) AS _cya",
+         f"least(_cy + _r, {C.CELL_CY - 1}) AS _cyb"]
+
+
+def _milli_bounds(prefix: str) -> list[str]:
+    """Exact milli bounds of the cell rectangle [_cxa, _cxb] x [_cya, _cyb]
+    as {prefix}x0/x1/y0/y1 (cell c covers m in [ceil(c*W/C),
+    ceil((c+1)*W/C) - 1], the same floor arithmetic as cell_expr)."""
+    def first(c: str, w: int, n: int) -> str:
+        return f"({c} * {w} + {n - 1}) div {n}"
+    return [
+        f"{first('_cxa', C.WORLD_MX, C.CELL_CX)} AS {prefix}x0",
+        f"{first('(_cxb + 1)', C.WORLD_MX, C.CELL_CX)} - 1 AS {prefix}x1",
+        f"{first('_cya', C.WORLD_MY, C.CELL_CY)} AS {prefix}y0",
+        f"{first('(_cyb + 1)', C.WORLD_MY, C.CELL_CY)} - 1 AS {prefix}y1"]
+
+
 def _with_ring_bounds(queries: DataFrame, cell_counts: DataFrame,
                       k: int) -> DataFrame:
     """Attach the exact milli bounds of each query's candidate cell ring
@@ -124,21 +148,10 @@ def _with_ring_bounds(queries: DataFrame, cell_counts: DataFrame,
                      f"CASE WHEN coalesce(cellcnt, 0) >= {3 * k} "
                      "THEN 0 ELSE 1 END AS _r"))
     # one fused select: corners via lateral aliases, then the ring's
-    # exact milli bounds (same floor arithmetic as the original chain)
+    # exact milli bounds
     return q.selectExpr(
         "qid", "qmx", "qmy", "qx", "qy", "_cx", "_cy", "_r",
-        "greatest(_cx - _r, 0) AS _cxa",
-        f"least(_cx + _r, {C.CELL_CX - 1}) AS _cxb",
-        "greatest(_cy - _r, 0) AS _cya",
-        f"least(_cy + _r, {C.CELL_CY - 1}) AS _cyb",
-        f"(_cxa * {C.WORLD_MX} + {C.CELL_CX - 1}) div {C.CELL_CX} "
-        "AS ring_x0",
-        f"((_cxb + 1) * {C.WORLD_MX} + {C.CELL_CX - 1}) "
-        f"div {C.CELL_CX} - 1 AS ring_x1",
-        f"(_cya * {C.WORLD_MY} + {C.CELL_CY - 1}) div {C.CELL_CY} "
-        "AS ring_y0",
-        f"((_cyb + 1) * {C.WORLD_MY} + {C.CELL_CY - 1}) "
-        f"div {C.CELL_CY} - 1 AS ring_y1")
+        *_RECT, *_milli_bounds("ring_"))
 
 
 def _ring(qmeta: DataFrame) -> DataFrame:
@@ -218,12 +231,12 @@ def _ring_count_expr(df: DataFrame, sat_df: DataFrame, out: str
 
 
 def _stages(pts: DataFrame, queries: DataFrame, k: int,
-            keys: list[str], salt_map, bc_ring: bool, bc_cover: bool,
+            salt_by, bc_ring: bool, bc_cover: bool,
             cell_counts: DataFrame, sat_df: DataFrame,
             need, sampling_guard: str, sample_stage1: bool,
             persist: bool,
             prune_cells=None, expand: bool = True,
-            usalt: int | None = None, smj_pts: bool = False):
+            smj_pts: bool = False):
     """Shared stage-1 / split / expand / stage-2 assembly.  The eager
     and lazy paths differ only in what they inject here: the histogram
     source (collected vs lazy agg), the one-row SAT sat_df (driver-built
@@ -241,9 +254,11 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
     the prune is free) or a DataFrame with a `cell` column (lazy: an
     O(#cells) broadcast semi-join).  expand=False skips building the
     SAT ring-expansion subtree — only valid when the caller KNOWS no
-    query can underfill usefully (eager, total == 0).  usalt: uniform
-    salt modulus when the salt column came from knn_join(salt=N) rather
-    than a per-cell plan.  smj_pts: plant a merge (sort-merge) hint on
+    query can underfill usefully (eager, total == 0).  salt_by: None
+    (unsalted, joins key on cell) or what salted `pts` (a plan or a
+    uniform modulus N, see spatialgraft.partitioner) — the multicast
+    sides are then replicated over the same slices and both joins key
+    on (cell, salt).  smj_pts: plant a merge (sort-merge) hint on
     the points side of both stage joins — SMJ never builds a broadcast,
     so a points side whose Catalyst size estimate is garbage (explode-
     blind Generate lineage) can never be planted as a broadcast build;
@@ -251,28 +266,12 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
     (broadcast beats merge), so small-query plans keep theirs."""
     persisted = []
     dense_thresh = 3 * k * C.KNN_SAMPLE_MOD
-
-    def salt_explode(df: DataFrame, cols: list[str]) -> DataFrame:
-        """Replicate multicast rows across the salt slices of their
-        cell, matching the data side's pmod(xxhash64(doc_key), n)
-        assignment — every (point, query) pair meets on exactly one
-        (cell, salt) key."""
-        if usalt is not None:
-            return df.selectExpr(
-                *cols, "cell",
-                f"explode(sequence(CAST(0 AS BIGINT), "
-                f"CAST({usalt - 1} AS BIGINT))) AS salt")
-        return (df.join(salt_map.select("cell", "nsplits"), on="cell",
-                        how="left")
-                .selectExpr(*cols, "cell",
-                            "explode(sequence(CAST(0 AS BIGINT), "
-                            "CAST(coalesce(nsplits, 1) - 1 AS BIGINT)"
-                            ")) AS salt"))
+    keys = ["cell"] if salt_by is None else ["cell", "salt"]
 
     qmeta = _with_ring_bounds(queries, cell_counts, k)
     ring = _ring(qmeta)
-    if len(keys) > 1:
-        ring = salt_explode(ring, ["qid", "qx", "qy"])
+    if salt_by is not None:
+        ring = salt_multicast(ring, ["qid", "qx", "qy"], salt_by)
     if bc_ring:
         ring = F.broadcast(ring)
 
@@ -297,7 +296,7 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
         pts1 = (pts.join(F.broadcast(cell_counts), on="cell", how="left")
                 .selectExpr(
                     "cell", "doc_key", "mx", "my",
-                    *(["salt"] if len(keys) > 1 else []),
+                    *keys[1:],
                     f"CASE WHEN coalesce(cellcnt, 0) < {dense_thresh} "
                     "THEN CAST(1 AS BIGINT) ELSE CAST(ceil(sqrt("
                     f"CAST(coalesce(cellcnt, 0) AS DOUBLE) / {3.0 * k}"
@@ -370,30 +369,18 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
             under
             .selectExpr("qid", "qmx", "qmy", "qx", "qy", "_cx",
                         "_cy", f"explode(array({radii})) AS _r")
-            .selectExpr("qid", "qmx", "qmy", "qx", "qy", "_r",
-                        "greatest(_cx - _r, 0) AS _cxa",
-                        f"least(_cx + _r, {C.CELL_CX - 1}) AS _cxb",
-                        "greatest(_cy - _r, 0) AS _cya",
-                        f"least(_cy + _r, {C.CELL_CY - 1}) AS _cyb"))
+            .selectExpr("qid", "qmx", "qmy", "qx", "qy", "_r", *_RECT))
         exp = (
             _ring_count_expr(exp_base, sat_df, "_rc")
             .where(F.col("_rc") >= need)
             .withColumn("_pick", F.row_number().over(
                 Window.partitionBy("qid").orderBy("_r")))
             .where(F.col("_pick") == 1)
-            # exact milli bounds of the chosen box (same floor arithmetic
-            # as _with_ring_bounds), far-corner distance -> kth bound;
-            # lateral aliases keep each bound single-sourced
+            # exact milli bounds of the chosen box (as _with_ring_bounds),
+            # far-corner distance -> kth bound; lateral aliases keep each
+            # bound single-sourced
             .selectExpr(
-                "qid", "qmx", "qmy", "qx", "qy",
-                f"(_cxa * {C.WORLD_MX} + {C.CELL_CX - 1}) "
-                f"div {C.CELL_CX} AS _bx0",
-                f"((_cxb + 1) * {C.WORLD_MX} + {C.CELL_CX - 1}) "
-                f"div {C.CELL_CX} - 1 AS _bx1",
-                f"(_cya * {C.WORLD_MY} + {C.CELL_CY - 1}) "
-                f"div {C.CELL_CY} AS _by0",
-                f"((_cyb + 1) * {C.WORLD_MY} + {C.CELL_CY - 1}) "
-                f"div {C.CELL_CY} - 1 AS _by1",
+                "qid", "qmx", "qmy", "qx", "qy", *_milli_bounds("_b"),
                 "greatest(qmx - _bx0, _bx1 - qmx) AS _dxm",
                 "greatest(qmy - _by0, _by1 - qmy) AS _dym")
             .selectExpr(
@@ -417,14 +404,15 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
         else:
             from ..sfilter import prune_cover
             cover = prune_cover(cover, prune_cells)
-    if len(keys) > 1:
+    if salt_by is not None:
         # stage 2 joins on (cell, salt) too: the probe work of a dense
         # cell then spreads over its salt slices instead of landing in
         # one task (the measured 4N straggler), and the pts side's
         # (cell, salt) hash partitioning is reused with NO exchange
         # (the old cell-only join forced a full re-shuffle of pts on
         # the salted path)
-        cover = salt_explode(cover, ["qid", "qx", "qy", "kth2"])
+        cover = salt_multicast(cover, ["qid", "qx", "qy", "kth2"],
+                               salt_by)
     if bc_cover:
         cover = F.broadcast(cover)
     pts2 = pts.hint("merge") if smj_pts else pts
@@ -507,7 +495,8 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     (dist2, doc_key).
 
     pred: optional extra data-side predicate (knnFilter semantics, F6).
-    plan: optional SpatialPartitioning -> salt hot cells in stage 1 (J9).
+    plan: optional SpatialPartitioning -> salt hot cells in both stage
+    joins (J9).
     salt: uniform salt modulus (ignored when a plan is given): every
     cell splits into `salt` slices keyed by pmod(xxhash64(doc_key), salt)
     and both join stages key on (cell, salt) — the plan-free J9 knob for
@@ -575,18 +564,18 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     (tests/test_knn_paths.py::test_lazy_generated_input_never_broadcast).
     """
     spark = points.sparkSession
-    # effective salt multiplier of the multicast sides: with salt=N (or
-    # a plan whose hottest cell splits N ways) the ring/cover rows are
-    # replicated a further N times by salt_explode, so the broadcast
+    # salt_by: the plan, else the uniform modulus, else None (unsalted).
+    # Its effective multiplier on the multicast sides: with salt=N (or a
+    # plan whose hottest cell splits N ways) the ring/cover rows are
+    # replicated a further N times by salt_multicast, so the broadcast
     # size gate must count it (ADVICE r5: a salted query side up to Nx
     # over the threshold could still be force-broadcast)
     if plan is not None:
-        eff_salt = max((ns for _, ns in plan.assignment.values()),
-                       default=1)
+        salt_by, eff_salt = plan, plan.max_splits
     elif salt is not None and salt > 1:
-        eff_salt = int(salt)
+        salt_by = eff_salt = int(salt)
     else:
-        eff_salt = 1
+        salt_by, eff_salt = None, 1
     bc_ring, bc_cover = _bc_gates(spark, queries, eff_salt,
                                   broadcast_queries)
     if pred is not None:
@@ -606,23 +595,9 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
         F.col("mx").cast("int").alias("mx"),
         F.col("my").cast("int").alias("my"))
     keys = ["cell"]
-    salt_map = None
-    usalt = None
-    if plan is not None:
+    if salt_by is not None:
         keys = ["cell", "salt"]
-        salt_map = F.broadcast(plan.to_df(spark))
-        pts = (pts.join(salt_map.select("cell", "nsplits"),
-                        on="cell", how="left")
-               .selectExpr(
-                   "cell", "doc_key", "mx", "my",
-                   "pmod(xxhash64(doc_key), "
-                   "CAST(coalesce(nsplits, 1) AS BIGINT)) AS salt"))
-    elif salt is not None and salt > 1:
-        keys = ["cell", "salt"]
-        usalt = int(salt)
-        pts = pts.selectExpr(
-            "cell", "doc_key", "mx", "my",
-            f"pmod(xxhash64(doc_key), CAST({usalt} AS BIGINT)) AS salt")
+        pts = salt_points(pts, ["cell", "doc_key", "mx", "my"], salt_by)
     # Repartition by (cell, salt) to the session shuffle width BEFORE
     # stage 1: (a) partition count then scales with configuration, not
     # core count — an input cached in defaultParallelism partitions made
@@ -667,11 +642,11 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
         # unconditionally.  Results are identical either way; callers
         # on known-dense inputs who care should use materialize=True.
         result, _ = _stages(
-            pts, queries, k, keys, salt_map, bc_ring, bc_cover,
+            pts, queries, k, salt_by, bc_ring, bc_cover,
             cell_counts, sat_df, need,
             sampling_guard=f"ring_sum < {dense_thresh} AND ",
             sample_stage1=True, persist=False,
-            prune_cells=cell_counts, usalt=usalt, smj_pts=smj_pts)
+            prune_cells=cell_counts, smj_pts=smj_pts)
         return result
 
     # eager path: SER cache (see docstring), one O(#cells) collect.
@@ -697,7 +672,7 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     # them, and the ring_sum sampling guard on `done` drops too.
     any_dense = any(c >= dense_thresh for c in counts.values())
     result, persisted = _stages(
-        pts, queries, k, keys, salt_map, bc_ring, bc_cover,
+        pts, queries, k, salt_by, bc_ring, bc_cover,
         cell_counts, sat_df, need,
         sampling_guard=(f"ring_sum < {dense_thresh} AND "
                         if any_dense else ""),
@@ -709,7 +684,7 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
         # empty (the sparse regime X6 exists for)
         prune_cells=(set(counts) if len(counts) < C.N_CELLS // 2
                      else None),
-        expand=total > 0, usalt=usalt)
+        expand=total > 0)
     result = result.persist()
     result.count()
     if cache_input:

@@ -18,8 +18,8 @@ reference's contains semantics.  Two refine paths:
                      exprs, JVM-side, no Python; HOFs run interpreted
                      inside the codegen stage, still no UDF).
 
-Both run the same cover->equi-join->refine plan, so the physical shape
-(and its scaling behavior) is shared.
+Both run the same cover->equi-join->refine kernel (cells.cover_join),
+so the physical shape (and its scaling behavior) is shared.
 """
 
 from __future__ import annotations
@@ -27,9 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..broadcast import COVER_FANOUT, decide as _decide_broadcast
-from ..cells import cover_cells, with_cell
+from ..cells import cover_join
 from ..sqlgen import pip_concave_predicate, pip_predicate
+from .range import CONTAINS
 
 
 def pip_join(points: DataFrame, polys: DataFrame,
@@ -38,14 +38,8 @@ def pip_join(points: DataFrame, polys: DataFrame,
 
     broadcast_polys None = auto size-gate on the polygon count
     (spatialgraft.broadcast.decide) — huge polygon sets shuffle."""
-    pts = with_cell(points)
-    bc = _decide_broadcast(polys, broadcast_polys, COVER_FANOUT)
-    cover = cover_cells(polys)
-    if bc:
-        cover = F.broadcast(cover)
-    pred = pip_predicate("mx", "my")
-    return (pts.join(cover, on="cell", how="inner")
-            .where(F.expr(pred))
+    return (cover_join(points, polys, broadcast_polys,
+                       pip_predicate("mx", "my"))
             .select("poly_id", "doc_key"))
 
 
@@ -70,16 +64,9 @@ def pip_join_concave(points: DataFrame, polys: DataFrame,
     gets from its first failing half-plane test (exact: the bbox is a
     superset of the polygon, so the conjunct never drops a contained
     point)."""
-    pts = with_cell(points)
-    bc = _decide_broadcast(polys, broadcast_polys, COVER_FANOUT)
-    cover = cover_cells(polys)
-    if bc:
-        cover = F.broadcast(cover)
     pred = pip_concave_predicate("mx", "my", "vxs", "vys", "spark")
-    return (pts.join(cover, on="cell", how="inner")
-            .where(F.expr(
-                "mx >= xmin AND mx <= xmax AND my >= ymin AND my <= ymax"))
-            .where(F.expr(pred))
+    return (cover_join(points, polys, broadcast_polys,
+                       f"{CONTAINS} AND {pred}")
             .select("poly_id", "doc_key"))
 
 

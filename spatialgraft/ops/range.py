@@ -17,7 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..broadcast import COVER_FANOUT, decide as _decide_broadcast
-from ..cells import cover_cells, with_cell
+from ..cells import cover_cells, cover_join, with_cell
+from ..partitioner import SpatialPartitioning, salt_multicast, salt_points
 
 CONTAINS = ("mx >= xmin AND mx <= xmax AND "
             "my >= ymin AND my <= ymax")
@@ -46,15 +47,7 @@ def _joined(points: DataFrame, boxes: DataFrame,
     if pred is not None:
         points = points.where(F.expr(pred) if isinstance(pred, str)
                               else pred)
-    pts = with_cell(points)
-    bc = _decide_broadcast(boxes, broadcast_queries, COVER_FANOUT)
-    cover = cover_cells(boxes)
-    if presence is not None:
-        from ..sfilter import prune_cover
-        cover = prune_cover(cover, presence)
-    if bc:
-        cover = F.broadcast(cover)
-    return pts.join(cover, on="cell", how="inner").where(F.expr(CONTAINS))
+    return cover_join(points, boxes, broadcast_queries, CONTAINS, presence)
 
 
 def range_filter(points: DataFrame, xmin: int, ymin: int,
@@ -148,25 +141,14 @@ def range_join_count_salted(points: DataFrame, boxes: DataFrame,
     `nsplits` salt slices: the data side hashes into one slice, the
     multicast query side replicates across all slices, and the join key
     becomes (cell, salt) — so no single reducer owns a whole hot cell
-    even when AQE's probe-side splitting isn't enough.  Results are
-    identical to range_join_count (tested)."""
-    from ..partitioner import SpatialPartitioning
-
+    even when AQE's probe-side splitting isn't enough.  The salt format
+    is spatialgraft.partitioner's.  Results are identical to
+    range_join_count (tested)."""
     assert isinstance(plan, SpatialPartitioning)
-    spark = points.sparkSession
-    m = F.broadcast(plan.to_df(spark))
-    pts = (with_cell(points)
-           .join(m, on="cell", how="left").fillna({"nsplits": 1})
-           .withColumn("salt", F.pmod(F.xxhash64("doc_key"),
-                                      F.col("nsplits"))))
-    cover = (cover_cells(boxes)
-             .join(m, on="cell", how="left").fillna({"nsplits": 1})
-             .withColumn("salt", F.explode(
-                 F.sequence(F.lit(0).cast("long"),
-                            (F.col("nsplits") - 1).cast("long")))))
-    j = (pts.select("cell", "salt", "mx", "my", "doc_key")
-         .join(cover.select("cell", "salt", "box_id",
-                            "xmin", "ymin", "xmax", "ymax"),
-               on=["cell", "salt"], how="inner")
+    pts = salt_points(with_cell(points), ["cell", "mx", "my", "doc_key"],
+                      plan)
+    cover = salt_multicast(cover_cells(boxes),
+                           ["box_id", "xmin", "ymin", "xmax", "ymax"], plan)
+    j = (pts.join(cover, on=["cell", "salt"], how="inner")
          .where(F.expr(CONTAINS)))
     return j.groupBy("box_id").agg(F.count("*").alias("cnt"))

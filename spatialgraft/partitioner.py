@@ -1,20 +1,20 @@
-"""Skew-aware global spatial partitioner.
+"""Hot-cell salt map + salt format: the engine's one home for skew salting.
 
-DataFrame re-design of the reference's sampled count-quadtree partitioner +
-query-load scheduler
-(reference/src/main/scala/cs/purdue/edu/spatialrdd/impl/SpatialPartitioner.scala:48-147,
+DataFrame re-design of the reference's skew-partition split
+(reference/src/main/scala/cs/purdue/edu/spatialrdd/impl/skewAnalysis.scala:145-160,
 scheduler/joinScheduler.scala:102-167): instead of a driver-resident
 quadtree shipped in closures, we
   1. compute an exact per-cell histogram (groupBy(cell).count() — O(#cells),
      never O(#rows); at 10^12 rows this is still a 32k-row collect),
-  2. pack Z-order-sorted cells into `n_partitions` balanced bins on the
-     driver (locality-preserving, like the BFS leaf packing at
-     QtreePartionner.scala:113-144),
-  3. broadcast the cell -> (pid, nsplits) map back as a tiny DataFrame and
-     equi-join it on `cell`.
-Hot cells (count > mean * SKEW_RATIO) get `nsplits > 1` salt values — the
-explicit analogue of the reference's skew-partition split
-(skewAnalysis.scala:145-160), needed because AQE only splits the probe side.
+  2. keep only the HOT cells (count > mean * SKEW_RATIO) with their
+     `nsplits` salt-slice count — an absent cell means 1,
+  3. broadcast that map back as a tiny DataFrame and join it on `cell`.
+Salting is needed because AQE only splits the probe side of a skewed join.
+
+The salt format lives here alone (salt_points / salt_multicast): a data
+row goes to slice pmod(xxhash64(doc_key), nsplits), a multicast row is
+replicated over sequence(0, nsplits - 1), so every (data, multicast) pair
+meets on exactly one (cell, salt) key.
 """
 
 from __future__ import annotations
@@ -25,29 +25,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import config as C
-from .cells import with_cell, zorder_int
+from .cells import with_cell
 
 
 @dataclass
 class SpatialPartitioning:
-    """Driver-side partitioning plan: cell -> (pid, nsplits)."""
-    assignment: dict[int, tuple[int, int]]
-    n_partitions: int
-    total_rows: int
+    """Driver-side salt plan: hot cell -> nsplits (absent cell = 1)."""
+    assignment: dict[int, int]
     _df: DataFrame | None = None
 
+    @property
+    def max_splits(self) -> int:
+        return max(self.assignment.values(), default=1)
+
     def to_df(self, spark: SparkSession) -> DataFrame:
-        # Memoized but NOT persisted: rebuilding the 32k-row local
-        # DataFrame per call costs driver-side serialization (which the
-        # memo avoids), but the map is only ever the build side of
-        # broadcast joins, where executor-side caching buys nothing —
-        # the old .persist() here leaked one cached relation per plan
-        # object for session lifetime (VERDICT r5 nit 2).
+        # Memoized but NOT persisted: rebuilding the local DataFrame per
+        # call costs driver-side serialization (which the memo avoids),
+        # but the map is only ever the build side of broadcast joins,
+        # where executor-side caching buys nothing — the old .persist()
+        # here leaked one cached relation per plan object for session
+        # lifetime (VERDICT r5 nit 2).
         if self._df is None:
-            rows = [(cell, pid, nsplits)
-                    for cell, (pid, nsplits) in self.assignment.items()]
             self._df = spark.createDataFrame(
-                rows, "cell bigint, pid int, nsplits int")
+                list(self.assignment.items()), "cell bigint, nsplits int")
         return self._df
 
     def release(self) -> None:
@@ -60,75 +60,54 @@ class SpatialPartitioning:
                 pass
             self._df = None
 
-    def pid_of(self, cell: int) -> int:
-        return self.assignment.get(int(cell), (0, 1))[0]
-
 
 def plan_partitions(points: DataFrame,
                     n_partitions: int = C.DEFAULT_PARTITIONS,
                     skew_ratio: float = C.SKEW_RATIO
                     ) -> SpatialPartitioning:
-    """Exact cell histogram -> balanced Z-order bin-packing."""
+    """Exact cell histogram -> the hot-cell salt map.  A hot cell splits
+    into ~(skew_ratio * mean)-sized slices, capped at `n_partitions`, so
+    one reducer never owns a whole hot cell."""
     hist = (with_cell(points)
             .groupBy("cell").count()
             .collect())  # <= N_CELLS rows
     counts = {int(r["cell"]): int(r["count"]) for r in hist}
-    total = sum(counts.values())
-    if not total:
-        return SpatialPartitioning({}, n_partitions, 0)
-    target = max(1, total // n_partitions)
-    mean_cell = max(1.0, total / max(1, len(counts)))
-
-    assignment: dict[int, tuple[int, int]] = {}
-    pid, acc = 0, 0
-    for cell in sorted(counts, key=zorder_int):
-        cnt = counts[cell]
-        if acc > 0 and acc + cnt > target * 1.25 and pid < n_partitions - 1:
-            pid, acc = pid + 1, 0
-        nsplits = 1
-        if cnt > mean_cell * skew_ratio:
-            # split hot cells into ~(skew_ratio * mean)-sized slices so
-            # one reducer never owns a whole hot cell
-            nsplits = min(n_partitions,
-                          -(-cnt // max(1, int(mean_cell * skew_ratio))))
-        assignment[cell] = (pid, nsplits)
-        acc += cnt
-    return SpatialPartitioning(assignment, n_partitions, total)
+    if not counts:
+        return SpatialPartitioning({})
+    hot = skew_ratio * max(1.0, sum(counts.values()) / len(counts))
+    slice_rows = max(1, int(hot))
+    return SpatialPartitioning(
+        {cell: min(n_partitions, -(-cnt // slice_rows))
+         for cell, cnt in counts.items() if cnt > hot})
 
 
-def assign_pid(points: DataFrame, plan: SpatialPartitioning,
-               salt_col: str | None = "doc_key") -> DataFrame:
-    """Attach (pid, salted_pid) via a broadcast map join.
-
-    salted_pid spreads hot cells across `nsplits` partitions; the build
-    side of a join against salted data must replicate per salt
-    (see ops.knn stage 1)."""
-    spark = points.sparkSession
-    m = F.broadcast(plan.to_df(spark))
-    df = with_cell(points).join(m, on="cell", how="left").fillna(
-        {"pid": 0, "nsplits": 1})
-    if salt_col is None:
-        salt = F.lit(0)
-    else:
-        salt = F.pmod(F.xxhash64(F.col(salt_col)), F.col("nsplits"))
-    return df.withColumn(
-        "spid",
-        (F.col("pid").cast("long") * 4096 + salt).cast("long"))
+def _with_nsplits(df: DataFrame, by: SpatialPartitioning | int
+                  ) -> tuple[DataFrame, str, str]:
+    """(df with the salt modulus in reach, modulus SQL, last-slice SQL):
+    a plan joins in its broadcast map (absent cell -> 1), an int N is a
+    literal."""
+    if isinstance(by, SpatialPartitioning):
+        m = F.broadcast(by.to_df(df.sparkSession))
+        return (df.join(m, on="cell", how="left"),
+                "coalesce(nsplits, 1)", "coalesce(nsplits, 1) - 1")
+    return df, str(int(by)), str(int(by) - 1)
 
 
-def replicate_per_salt(queries: DataFrame, plan: SpatialPartitioning
-                       ) -> DataFrame:
-    """Replicate each query row once per salt split of its cell, so a
-    salted-data join still sees every (query, data) pair exactly once."""
-    spark = queries.sparkSession
-    m = F.broadcast(plan.to_df(spark))
-    df = queries.join(m, on="cell", how="left").fillna(
-        {"pid": 0, "nsplits": 1})
-    return (df.withColumn(
-                "_salt",
-                F.explode(F.sequence(F.lit(0), F.col("nsplits") - 1)))
-              .withColumn(
-                "spid",
-                (F.col("pid").cast("long") * 4096 +
-                 F.col("_salt")).cast("long"))
-              .drop("_salt"))
+def salt_points(df: DataFrame, cols: list[str],
+                by: SpatialPartitioning | int) -> DataFrame:
+    """Data side: project `cols` plus `salt`, the row's one slice of its
+    cell (by = the hot-cell plan, or a uniform modulus N)."""
+    df, n, _ = _with_nsplits(df, by)
+    return df.selectExpr(
+        *cols, f"pmod(xxhash64(doc_key), CAST({n} AS BIGINT)) AS salt")
+
+
+def salt_multicast(df: DataFrame, cols: list[str],
+                   by: SpatialPartitioning | int) -> DataFrame:
+    """Multicast side: project `cols` plus `cell` and `salt`, one row per
+    salt slice of the row's cell."""
+    df, _, last = _with_nsplits(df, by)
+    return df.selectExpr(
+        *cols, "cell",
+        f"explode(sequence(CAST(0 AS BIGINT), CAST({last} AS BIGINT))) "
+        "AS salt")

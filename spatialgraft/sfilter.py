@@ -9,11 +9,7 @@ SMapPartition.scala:117-118).  Our version is exact and cheaper: the
 per-cell presence set (O(#cells) bits, <= 32768 entries) is collected
 once and the *query side's multicast rows* are filtered against it
 before the shuffle — query cells with no data never enter the join.
-
-Two forms:
-  - plan-reuse: if a SpatialPartitioning plan exists, its cell set IS the
-    filter (zero extra jobs);
-  - standalone: one groupBy(cell).count() stats job.
+The set costs one distinct(cell) stats job.
 """
 
 from __future__ import annotations
@@ -22,7 +18,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .cells import with_cell
-from .partitioner import SpatialPartitioning
 
 
 def presence_cells(points: DataFrame) -> set[int]:
@@ -37,7 +32,7 @@ def presence_cells(points: DataFrame) -> set[int]:
 _ISIN_MAX = 1024
 
 
-def query_box_with_p(cells: set[int] | SpatialPartitioning,
+def query_box_with_p(cells: set[int],
                      xmin: int, ymin: int, xmax: int, ymax: int) -> float:
     """Empty-area ratio of a query box: the fraction of its covering
     cells that hold no data — the reference's probabilistic
@@ -46,8 +41,6 @@ def query_box_with_p(cells: set[int] | SpatialPartitioning,
     skipped entirely; a scheduler can deprioritize boxes above a
     threshold before any shuffle."""
     from . import config as C
-    if isinstance(cells, SpatialPartitioning):
-        cells = set(cells.assignment)
     cx0 = xmin * C.CELL_CX // C.WORLD_MX
     cx1 = xmax * C.CELL_CX // C.WORLD_MX
     cy0 = ymin * C.CELL_CY // C.WORLD_MY
@@ -59,15 +52,12 @@ def query_box_with_p(cells: set[int] | SpatialPartitioning,
     return empty / total if total else 1.0
 
 
-def prune_cover(cover: DataFrame,
-                cells: set[int] | SpatialPartitioning) -> DataFrame:
+def prune_cover(cover: DataFrame, cells: set[int]) -> DataFrame:
     """Drop multicast (query, cell) rows whose cell holds no data.
 
     Small sets compile to an in-set predicate; large ones (up to
     N_CELLS) go through a broadcast LEFT SEMI join so the plan stays
     small and the set ships once per executor, not once per task."""
-    if isinstance(cells, SpatialPartitioning):
-        cells = set(cells.assignment)
     if len(cells) <= _ISIN_MAX:
         return cover.where(F.col("cell").isin(list(cells)))
     spark = cover.sparkSession

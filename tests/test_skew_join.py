@@ -1,6 +1,8 @@
+from spatialgraft import config as C
 from spatialgraft import datagen
 from spatialgraft.extract import with_geometry
 from spatialgraft.ops import range as rops
+from spatialgraft.ops.knn import knn_join
 from spatialgraft.partitioner import plan_partitions
 
 
@@ -10,8 +12,7 @@ def test_salted_join_identical_and_nonvacuous(spark, sf_correct):
     plan = plan_partitions(pts.select("doc_key", "mx", "my"))
 
     # the skewed fixture must actually trigger salting
-    max_splits = max(ns for _, ns in plan.assignment.values())
-    assert max_splits > 1, "skew fixture produced no salted cells"
+    assert plan.max_splits > 1, "skew fixture produced no salted cells"
 
     base = (rops.range_join_count(pts, boxes).toPandas()
             .sort_values("box_id").reset_index(drop=True))
@@ -25,8 +26,6 @@ def test_partitioner_map_leaves_no_cache(spark, sf_correct):
     cached relation for session lifetime — to_df no longer persists
     (the map is only ever a broadcast build side) and release() drops
     the memo."""
-    from spatialgraft.ops.knn import knn_join
-
     pts = with_geometry(datagen.documents_spans(spark, sf_correct))
     boxes = datagen.query_boxes(spark, sf_correct)
     plan = plan_partitions(pts.select("doc_key", "mx", "my"))
@@ -53,3 +52,68 @@ def test_partitioner_map_leaves_no_cache(spark, sf_correct):
     plan.release()
     assert plan._df is None
     assert plan.to_df(spark).count() > 0  # rebuilds after release
+
+
+def _stacked_points(spark, stacks):
+    """`n` points (distinct doc_keys) at each (mx, my, n) of `stacks`."""
+    rows, key = [], 0
+    for mx, my, n in stacks:
+        for _ in range(n):
+            rows.append((key, mx, my))
+            key += 1
+    return spark.createDataFrame(rows, "doc_key bigint, mx bigint, my bigint")
+
+
+def _cell(mx, my):
+    return ((mx * C.CELL_CX) // C.WORLD_MX) * C.CELL_CY + \
+        (my * C.CELL_CY) // C.WORLD_MY
+
+
+def test_plan_is_the_hot_cell_map(spark):
+    """Hand-built histogram: one hot cell of 100 points among 9 cold
+    cells of 1.  mean = 109 / 10 = 10.9, so the hot threshold is
+    mean * 3 = 32.7 and a slice holds int(32.7) = 32 rows: the hot cell
+    splits ceil(100 / 32) = 4 ways and is the map's only entry."""
+    cold = [(20000 * i + 500, 500, 1) for i in range(1, 10)]
+    hot = (1000, 1000, 100)
+    pts = _stacked_points(spark, [hot] + cold)
+    plan = plan_partitions(pts, skew_ratio=3.0)
+    assert plan.assignment == {_cell(1000, 1000): 4}
+    assert plan.max_splits == 4
+    # n_partitions caps nsplits
+    assert plan_partitions(pts, 3, 3.0).assignment == \
+        {_cell(1000, 1000): 3}
+    # no hot cell -> an empty map, an empty to_df, one slice everywhere
+    flat = plan_partitions(_stacked_points(spark, cold), skew_ratio=3.0)
+    assert flat.assignment == {}
+    assert flat.max_splits == 1
+    assert flat.to_df(spark).count() == 0
+
+
+def test_no_hot_cell_plan_matches_unsalted(spark, sf_smoke):
+    """A plan with no hot cell salts nothing: every row takes the
+    coalesce(nsplits, 1) path through an empty broadcast map, and both
+    salted joins must stay bit-exact against their unsalted twins."""
+    pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
+    boxes = datagen.query_boxes(spark, sf_smoke)
+    plan = plan_partitions(pts.select("doc_key", "mx", "my"),
+                           skew_ratio=1e12)
+    assert plan.assignment == {}
+
+    base = (rops.range_join_count(pts, boxes).toPandas()
+            .sort_values("box_id").reset_index(drop=True))
+    salted = (rops.range_join_count_salted(pts, boxes, plan).toPandas()
+              .sort_values("box_id").reset_index(drop=True))
+    assert len(base) > 0
+    assert base.equals(salted)
+
+    qs = datagen.knn_queries(spark, sf_smoke)
+    cols = ["qid", "doc_key", "dist2", "rnk"]
+    want = knn_join(pts, qs, k=10, materialize=True)
+    got = knn_join(pts, qs, k=10, plan=plan, materialize=True)
+    w = want.toPandas().sort_values(cols).reset_index(drop=True)
+    g = got.toPandas().sort_values(cols).reset_index(drop=True)
+    want.unpersist()
+    got.unpersist()
+    assert len(w) > 0
+    assert g[cols].equals(w[cols])
