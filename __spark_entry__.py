@@ -77,10 +77,8 @@ def _q_spatio_textual(spark, sf_dir):
 
 def _q_knn_join(spark, sf_dir):
     from spatialgraft.ops import knn as kops
-    # driver/bench path: materialize eagerly so intermediates unpersist
     return kops.knn_join(_points(spark, sf_dir, _SLIM),
-                         datagen.knn_queries(spark, sf_dir), k=C.DEFAULT_K,
-                         materialize=True)
+                         datagen.knn_queries(spark, sf_dir), k=C.DEFAULT_K)
 
 
 def _q_knn_k150(spark, sf_dir):
@@ -88,8 +86,7 @@ def _q_knn_k150(spark, sf_dir):
     200 (reference README.md:51, testNestLoopKnnJoin.scala:89-103)."""
     from spatialgraft.ops import knn as kops
     return kops.knn_join(_points(spark, sf_dir, _SLIM),
-                         datagen.knn_queries(spark, sf_dir), k=150,
-                         materialize=True)
+                         datagen.knn_queries(spark, sf_dir), k=150)
 
 
 def _q_pip_join_count(spark, sf_dir):
@@ -251,8 +248,7 @@ def _q_spatio_textual_knn(spark, sf_dir):
     from spatialgraft.ops import knn as kops
     return kops.knn_join(_points(spark, sf_dir, _SLIM + ["text"]),
                          datagen.knn_queries(spark, sf_dir), k=5,
-                         pred="lower(text) LIKE '%flag r%'",
-                         materialize=True)
+                         pred="lower(text) LIKE '%flag r%'")
 
 
 def _q_range_join_count_salted(spark, sf_dir):

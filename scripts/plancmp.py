@@ -17,9 +17,7 @@ Usage: python scripts/plancmp.py OUT.txt  (run from the repo root)
 
 It prints the row count and the sha256 of the normalized plan, so a
 "default plan unchanged" check is one command per revision: equal
-hashes mean byte-identical plans.  The lazy (materialize=False) plan
-of the same input goes to OUT.txt.lazy, its sha256 on the same line,
-so lazy-path refactors get the same check.  The count_join operators
+hashes mean byte-identical plans.  The count_join operators
 (range_join_count, range_join, pip_join_count, pip_join_concave_count)
 on the same points, with the standard query boxes and polygons, go to
 OUT.txt.<op>; one extra line prints their sha256 values.  These plans
@@ -69,14 +67,9 @@ def main() -> None:
         .drop("_r"))
     qs = datagen.knn_queries(spark, sf)
     res = knn_join(pts, qs, k=10, broadcast_queries=False,
-                   cache_input=True, materialize=True)
+                   cache_input=True)
     digest = _write_plan(res, out)
-    rows = res.count()
-    lazy = knn_join(pts, qs, k=10, broadcast_queries=False,
-                    materialize=False)
-    lazy_digest = _write_plan(lazy, out + ".lazy")
-    print("rows", rows, "sha256", digest, "->", out,
-          "lazy sha256", lazy_digest, "->", out + ".lazy")
+    print("rows", res.count(), "sha256", digest, "->", out)
     boxes = datagen.query_boxes(spark, sf)
     polys = datagen.polygons(spark, sf)
     concave = datagen.polygons_concave(spark, sf)

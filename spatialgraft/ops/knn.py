@@ -31,11 +31,10 @@ grouped-Arrow plumbing dominates):
            knnJoinRDD.scala:63-98).
   expand   UNDERFILLED queries (< k ring candidates): the exact cell
            histogram's 2-D summed-area table (O(#cells); one padded
-           array row, driver-built when eager, a job-free plan when
-           lazy, read by the same 4 element_at lookups) gives the
-           smallest ring radius whose box holds >= k points;
-           the distance to that box's far corner is an exact kth upper
-           bound.  This replaces the old world-cover fallback — no
+           array row built on the driver, read by 4 element_at
+           lookups) gives the smallest ring radius whose box holds
+           >= k points; the distance to that box's far corner is an
+           exact kth upper bound.  This replaces the old world-cover fallback — no
            full-table scan ever, the re-join box is as small as the
            data allows (role of the reference's iterative nextRound
            loop, knnJoinRDD.scala:100-140).
@@ -53,7 +52,7 @@ an eager queries.count() for the broadcast auto-gate.  Construction now
 fuses each logical step into ONE selectExpr (lateral column aliases
 keep sub-expressions single-sourced) and the broadcast gate reads the
 optimizer's sizeInBytes estimate instead of running a count — the only
-jobs a call runs are the histogram collect and the caller's action.
+jobs a call runs are the histogram collect and the result's count.
 
 Skew (J9): pass a SpatialPartitioning `plan` (or a uniform `salt=N`)
 and both stage joins key on (cell, salt) — the data side hashes hot
@@ -81,6 +80,7 @@ from .. import config as C
 from ..broadcast import COVER_FANOUT, RING_FANOUT, decide
 from ..cells import cover_cells, with_cell
 from ..partitioner import salt_multicast, salt_points
+from ..sfilter import prune_cover
 
 # x/y are recomputed inline from the int milli coords with the exact
 # expression shape of extract.py:65 (int subtract -> cast -> /1000.0),
@@ -194,36 +194,10 @@ def _ring_count_sql(sat: str, cxa: str, cxb: str, cya: str, cyb: str
             f"- {at(f'{cxb} + 1', cya)} + {at(cxa, cya)}")
 
 
-def _sat_plan(spark, cell_counts: DataFrame) -> DataFrame:
-    """Lazy twin of _sat_rows: the same padded `sat array<bigint>` as a
-    one-row plan (no job runs at construction), plus `_total`, the table
-    total (the SAT's last entry).  Cell (cx, cy) sits at padded index
-    (cx+1, cy+1) of the dense (CX+1) x (CY+1) grid, so the two
-    cumulative windows give SAT semantics (strict <) directly."""
-    cy1 = C.CELL_CY + 1
-    c = cell_counts.selectExpr(
-        f"(cell div {C.CELL_CY} + 1) * {cy1} + cell % {C.CELL_CY} + 1 "
-        "AS id", "cellcnt")
-    d = (spark.range((C.CELL_CX + 1) * cy1)
-         .join(c, on="id", how="left")
-         .selectExpr("id", f"id div {cy1} AS i", f"id % {cy1} AS j",
-                     "coalesce(cellcnt, CAST(0 AS BIGINT)) AS c"))
-    w1 = (Window.partitionBy("i").orderBy("j")
-          .rowsBetween(Window.unboundedPreceding, 0))
-    w2 = (Window.partitionBy("j").orderBy("i")
-          .rowsBetween(Window.unboundedPreceding, 0))
-    return (d.withColumn("s1", F.sum("c").over(w1))
-            .withColumn("p", F.sum("s1").over(w2))
-            .agg(F.expr("transform(array_sort(collect_list(struct(id, p))),"
-                        " e -> e.p)").alias("sat"))
-            .selectExpr("sat", "element_at(sat, -1) AS _total"))
-
-
 def _ring_count_expr(df: DataFrame, sat_df: DataFrame, out: str
                      ) -> DataFrame:
     """Add `out` = the point count of each row's cell rectangle: the
-    one-row SAT broadcast-cross-joined in, 4 element_at lookups inline
-    (any other sat_df column, e.g. the lazy `_total`, rides along)."""
+    one-row SAT broadcast-cross-joined in, 4 element_at lookups inline."""
     return (df.crossJoin(F.broadcast(sat_df))
             .withColumn(out, F.expr(_ring_count_sql(
                 "sat", "_cxa", "_cxb", "_cya", "_cyb")))
@@ -232,41 +206,34 @@ def _ring_count_expr(df: DataFrame, sat_df: DataFrame, out: str
 
 def _stages(pts: DataFrame, queries: DataFrame, k: int,
             salt_by, bc_ring: bool, bc_cover: bool,
-            cell_counts: DataFrame, sat_df: DataFrame,
-            need, sampling_guard: str, sample_stage1: bool,
-            persist: bool,
-            prune_cells=None, expand: bool = True,
-            smj_pts: bool = False):
-    """Shared stage-1 / split / expand / stage-2 assembly.  The eager
-    and lazy paths differ only in what they inject here: the histogram
-    source (collected vs lazy agg), the one-row SAT sat_df (driver-built
-    array vs the _sat_plan aggregate — both read by the same element_at
-    lookups), the `need` threshold (literal vs least(k, _total) column),
-    whether stage-1 sampling is compiled in, and whether the
-    multi-consumer intermediates (cand1, stats) persist.  Returns
+            counts: dict[int, int]):
+    """Stage-1 / split / expand / stage-2 assembly.  Every decision the
+    collected cell histogram `counts` drives is made here: the broadcast
+    cell_counts and one-row SAT, the expansion `need` (min(k, total)),
+    whether stage-1 sampling is compiled in, the stage-2 presence prune,
+    and whether the expansion subtree exists at all.  The multi-consumer
+    intermediates (cand1, stats) are persisted.  Returns
     (result, persisted).
 
-    prune_cells: sFilter presence pruning of the stage-2 cover (X6
-    wired into J7, VERDICT r4 item 6) — multicast (query, cell) rows
-    whose cell holds no data are dropped BEFORE the stage-2 shuffle
-    (they can never match the inner join; results are identical).  A
-    set[int] (eager: the driver already holds the exact histogram, so
-    the prune is free) or a DataFrame with a `cell` column (lazy: an
-    O(#cells) broadcast semi-join).  expand=False skips building the
-    SAT ring-expansion subtree — only valid when the caller KNOWS no
-    query can underfill usefully (eager, total == 0).  salt_by: None
-    (unsalted, joins key on cell) or what salted `pts` (a plan or a
-    uniform modulus N, see spatialgraft.partitioner) — the multicast
-    sides are then replicated over the same slices and both joins key
-    on (cell, salt).  smj_pts: plant a merge (sort-merge) hint on
-    the points side of both stage joins — SMJ never builds a broadcast,
-    so a points side whose Catalyst size estimate is garbage (explode-
-    blind Generate lineage) can never be planted as a broadcast build;
-    an explicitly-broadcast ring/cover side still wins hint resolution
-    (broadcast beats merge), so small-query plans keep theirs."""
+    salt_by: None (unsalted, joins key on cell) or what salted `pts`
+    (a plan or a uniform modulus N, see spatialgraft.partitioner) — the
+    multicast sides are then replicated over the same slices and both
+    joins key on (cell, salt)."""
+    spark = pts.sparkSession
     persisted = []
     dense_thresh = 3 * k * C.KNN_SAMPLE_MOD
     keys = ["cell"] if salt_by is None else ["cell", "salt"]
+    cell_counts = spark.createDataFrame(
+        [(c, n) for c, n in counts.items()] or [(0, 0)],
+        "cell bigint, cellcnt bigint")
+    sat_df = spark.createDataFrame([(_sat_rows(counts),)],
+                                   "sat array<bigint>")
+    total = sum(counts.values())
+    # short-circuit (free, from the driver-side histogram): when NO
+    # cell crosses the threshold stage 1 already sees the full data, so
+    # the histogram join + hash filter would keep every row — skip
+    # them, and the ring_sum sampling guard on `done` drops too.
+    sample_stage1 = any(c >= dense_thresh for c in counts.values())
 
     qmeta = _with_ring_bounds(queries, cell_counts, k)
     ring = _ring(qmeta)
@@ -311,18 +278,15 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
     # those are the rows the per-group top-k heap/sort streams, and
     # qx/qy/mx/my riding along would double the sort's memory traffic
     # (the measured 4N bottleneck is the memory bus, not ALU).
-    if smj_pts:
-        pts1 = pts1.hint("merge")
     cand1 = (pts1.join(ring, on=keys, how="inner")
              .selectExpr(*keys, "qid", "doc_key", f"{_D2} AS dist2")
              .withColumn("prnk", F.row_number().over(wpre))
              .where(F.col("prnk") <= k)
              .drop("prnk")
              .withColumn("rnk", F.row_number().over(w))
-             .where(F.col("rnk") <= k))
-    if persist:
-        cand1 = cand1.persist()
-        persisted.append(cand1)
+             .where(F.col("rnk") <= k)
+             .persist())
+    persisted.append(cand1)
 
     # left join keeps queries whose whole ring is empty (cnt=0);
     # ring_sum (true counts via SAT) detects rings touching sampled
@@ -334,14 +298,15 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
                      "ring_sum",
                      "ring_x0", "ring_x1", "ring_y0", "ring_y1")
              .join(agg, on="qid", how="left")
-             .fillna({"cnt": 0}))
-    if persist:
-        stats = stats.persist()
-        persisted.append(stats)
+             .fillna({"cnt": 0})
+             .persist())
+    persisted.append(stats)
 
     # filled queries: exact kth bound from the ring top-k; done only
     # when the ring was complete (no sampled cell) AND the kth-radius
     # box sits inside the ring
+    sampling_guard = (f"ring_sum < {dense_thresh} AND "
+                      if sample_stage1 else "")
     filled = (stats.where(F.col("cnt") >= k)
               .selectExpr(
                   "*",
@@ -357,12 +322,12 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
     bq = filled.where("NOT done").select(
         "qid", "qmx", "qmy", "qx", "qy", "rm", "kth2")
     # underfilled queries (< k in the ring): SAT ring expansion — the
-    # smallest power-of-two cell radius whose box holds >= need points;
-    # distance to that box's far corner (+1 milli guard) is an exact
-    # kth upper bound.  Skipped when the caller knows the table is
-    # empty (expand=False): _rc >= 0 would pick radius 1 for every
-    # query and union a useless stage-2 branch.
-    if expand:
+    # smallest power-of-two cell radius whose box holds >= min(k, total)
+    # points; distance to that box's far corner (+1 milli guard) is an
+    # exact kth upper bound.  Skipped when the table is empty: _rc >= 0
+    # would pick radius 1 for every query and union a useless stage-2
+    # branch.
+    if total > 0:
         under = stats.where(F.col("cnt") < k)
         radii = ", ".join(str(r) for r in _EXPAND_RADII)
         exp_base = (
@@ -372,7 +337,7 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
             .selectExpr("qid", "qmx", "qmy", "qx", "qy", "_r", *_RECT))
         exp = (
             _ring_count_expr(exp_base, sat_df, "_rc")
-            .where(F.col("_rc") >= need)
+            .where(F.col("_rc") >= min(k, total))
             .withColumn("_pick", F.row_number().over(
                 Window.partitionBy("qid").orderBy("_r")))
             .where(F.col("_pick") == 1)
@@ -396,14 +361,16 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
         "greatest(0, qmy - rm) AS ymin",
         f"least({C.WORLD_MY - 1}, qmy + rm) AS ymax")
     cover = cover_cells(bq)
-    if prune_cells is not None:
-        if isinstance(prune_cells, DataFrame):
-            cover = cover.join(
-                F.broadcast(prune_cells.select("cell")),
-                on="cell", how="left_semi")
-        else:
-            from ..sfilter import prune_cover
-            cover = prune_cover(cover, prune_cells)
+    # sFilter presence pruning of the stage-2 cover (X6 wired into J7,
+    # VERDICT r4 item 6): multicast (query, cell) rows whose cell holds
+    # no data can never match the inner join, so they are dropped
+    # BEFORE the stage-2 shuffle.  Its win is bounded by the empty
+    # fraction: on a dense grid (sf0.1 is ~70% occupied) the
+    # >1024-cell broadcast semi-join is pure overhead per call — prune
+    # only when at least half the grid is empty (the sparse regime X6
+    # exists for)
+    if len(counts) < C.N_CELLS // 2:
+        cover = prune_cover(cover, set(counts))
     if salt_by is not None:
         # stage 2 joins on (cell, salt) too: the probe work of a dense
         # cell then spreads over its salt slices instead of landing in
@@ -415,11 +382,10 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
                                salt_by)
     if bc_cover:
         cover = F.broadcast(cover)
-    pts2 = pts.hint("merge") if smj_pts else pts
 
     # stage-2 probe: equi-join, exact dist filter, then the per-(keys,
     # qid) pre-rank — its <= k rows per group feed the global qid rank
-    boundary = (pts2.join(cover, on=keys, how="inner")
+    boundary = (pts.join(cover, on=keys, how="inner")
                 .selectExpr(*keys, "qid", "doc_key", "kth2",
                             f"{_D2} AS dist2")
                 .where(F.col("dist2") <= F.col("kth2"))
@@ -446,7 +412,7 @@ def _warn_if_cache_exceeds_storage(spark, total_rows: int) -> bool:
     wall (240.4 vs 188.2 s, 8 GiB executors, certified clean windows —
     bench_records/r6_knn_floor_4n_evlog.jsonl).  Warning only, no
     behavior change; returns whether it fired (for tests).  The driver
-    histogram the eager path already collects supplies total_rows, so
+    histogram knn_join already collects supplies total_rows, so
     the check is free."""
     est = total_rows * _SLIM_CACHE_BYTES_PER_ROW
     try:
@@ -472,13 +438,12 @@ def _warn_if_cache_exceeds_storage(spark, total_rows: int) -> bool:
     return True
 
 
-def _bc_gates(spark, queries: DataFrame, eff_salt: int,
+def _bc_gates(queries: DataFrame, eff_salt: int,
               flag: bool | None) -> tuple[bool, bool]:
     """Resolve the ring / stage-2-cover broadcast decisions: the
     multicast fan-out (ring 9, cover ~64) TIMES the effective salt
     replication, size-gated by spatialgraft.broadcast.decide (explicit
-    flag wins, no job runs).  `spark` is unused: decide() reads the
-    queries' own session."""
+    flag wins, no job runs)."""
     return (decide(queries, flag, RING_FANOUT * eff_salt),
             decide(queries, flag, COVER_FANOUT * eff_salt))
 
@@ -488,11 +453,20 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
              pred: Column | str | None = None,
              plan=None,
              salt: int | None = None,
-             materialize: bool = False,
+             materialize: bool = True,
              cache_input: bool = True) -> DataFrame:
     """For every query point (qid, qmx, qmy, qx, qy): its k nearest data
     points.  Returns (qid, doc_key, dist2, rnk), rnk 1..k by
     (dist2, doc_key).
+
+    The call runs the join: the slim point projection is cached
+    (SERIALIZED level — deserialized object-graph caching was a
+    measured GC death spiral near the storage pool at 263M rows), the
+    cell histogram is collected once (O(#cells)) to build the SAT as a
+    driver array and to short-circuit sampling when no cell is dense,
+    the result is persisted and counted, and every intermediate is
+    unpersisted before returning.  The returned DataFrame stays
+    persisted; the caller unpersists it when done.
 
     pred: optional extra data-side predicate (knnFilter semantics, F6).
     plan: optional SpatialPartitioning -> salt hot cells in both stage
@@ -512,33 +486,19 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     from the optimizer's plan-size estimate — no job runs.  True/False
     force.
 
-    materialize=False (library default): plan construction is
-    COMPLETELY lazy — no job runs, nothing is persisted, the returned
-    DataFrame is a pure composable plan.  The cell histogram and the
-    SAT become part of the plan (a lazy per-cell aggregate + the same
-    padded SAT array row the eager path builds, aggregated in-plan by
-    _sat_plan and read by the same 4 element_at lookups), the stage-1
-    density sampling is always compiled in (its filter is the identity
-    for sparse cells), and the `done` guard always carries the
-    conservative ring_sum test.  Each action recomputes the input
-    lineage — callers who iterate should persist their input or pass
-    materialize=True.
+    materialize: accepted for existing callers; only True is valid.
+    The lazy materialize=False plan lost its A/B (349.8 s lazy+salt8
+    and a driver maxResultSize crash unsalted, against 139.7 s eager at
+    the x2304 gate, bench_records/r5_ab4n_x2304.jsonl) and was removed;
+    passing False raises ValueError.
 
-    materialize=True (driver/bench path): the slim point projection is
-    cached (SERIALIZED level — deserialized object-graph caching was a
-    measured GC death spiral near the storage pool at 263M rows), the
-    histogram is collected once (O(#cells)) to build the SAT as a
-    driver array and to short-circuit sampling when no cell is dense,
-    the result is persisted and counted, and every intermediate is
-    unpersisted before returning.
-
-    cache_input (materialize=True only): False skips the slim-
-    projection cache, so the histogram job and the result job each
-    re-run the input lineage (shuffle files do NOT persist across
-    separate query executions — there is no cross-job exchange reuse).
-    A/B at the x2304 gate (1.05B rows, 4 GiB executors) measured the
-    cache WINNING despite its build being 57% of the N wall: uncached
-    walls were 139.7 -> 206.4 s at 4N and ~2x at N
+    cache_input: False skips the slim-projection cache, so the
+    histogram job and the result job each re-run the input lineage
+    (shuffle files do NOT persist across separate query executions —
+    there is no cross-job exchange reuse).  A/B at the x2304 gate
+    (1.05B rows, 4 GiB executors) measured the cache WINNING despite
+    its build being 57% of the N wall: uncached walls were
+    139.7 -> 206.4 s at 4N and ~2x at N
     (bench_records/r5_ab4n_x2304.jsonl).  Keep the default unless the
     cache itself cannot fit executor storage+disk.  Executor SIZING
     matters as much as the flag: when the slim cache does not fit the
@@ -549,20 +509,12 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     PLUS the working set of whatever shares the session.  The cache also
     carries accurate InMemoryRelation stats — on exploded/generated
     lineage whose static Catalyst estimate misses the multiplicity,
-    the uncached plan can auto-broadcast a huge side (the lazy-path
-    footnote below).
-
-    Scale footnote (materialize=False on exploded/generated inputs):
-    Catalyst's static sizeInBytes of an explode() does not model the
-    multiplicity, so a billion-row generated side could be estimated
-    under autoBroadcastJoinThreshold and planted as a broadcast build
-    — measured as a driver maxResultSize crash at x2304.  GUARDED
-    since r6: when the input lineage contains a Generate, the lazy
-    path plants merge (sort-merge) hints on the points side of both
-    stage joins, so Catalyst can never pick it as a broadcast build;
-    parquet-backed inputs (sound estimates) keep their unhinted plans
-    (tests/test_knn_paths.py::test_lazy_generated_input_never_broadcast).
+    an uncached run can auto-broadcast a huge side.
     """
+    if not materialize:
+        raise ValueError(
+            "knn_join(materialize=False): the lazy kNN plan was removed; "
+            "knn_join always runs the join and returns a persisted result")
     spark = points.sparkSession
     # salt_by: the plan, else the uniform modulus, else None (unsalted).
     # Its effective multiplier on the multicast sides: with salt=N (or a
@@ -576,8 +528,7 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
         salt_by = eff_salt = int(salt)
     else:
         salt_by, eff_salt = None, 1
-    bc_ring, bc_cover = _bc_gates(spark, queries, eff_salt,
-                                  broadcast_queries)
+    bc_ring, bc_cover = _bc_gates(queries, eff_salt, broadcast_queries)
     if pred is not None:
         points = points.where(pred if isinstance(pred, Column)
                               else F.expr(pred))
@@ -608,83 +559,19 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     # shuffle in the whole join is this one slim-projection shuffle.
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     pts = pts.repartition(n_parts, *keys)
-    dense_thresh = 3 * k * C.KNN_SAMPLE_MOD
 
-    if not materialize:
-        # Scale guard (VERDICT r5 item 1): Catalyst's static sizeInBytes
-        # of a Generate (explode) node does not model the multiplicity,
-        # so a billion-row generated points side can be estimated under
-        # autoBroadcastJoinThreshold and planted as the BROADCAST BUILD
-        # of a stage join — measured as a driver maxResultSize CRASH at
-        # 1.05B rows (bench_records/r5_ab4n_x2304.jsonl, lazy_salt8
-        # note).  When the input lineage contains a Generate, force
-        # sort-merge on the points side of both stage joins (smj_pts);
-        # parquet-backed inputs (sound estimates) keep today's plans.
-        # The eager path needs no guard: its cache carries real
-        # InMemoryRelation stats and AQE re-plans from them.
-        try:
-            smj_pts = "Generate" in (points._jdf.queryExecution()
-                                     .analyzed().toString())
-        except Exception:
-            smj_pts = True  # unknown lineage -> take the scale-safe side
-        # fully lazy: histogram and SAT (with its total) are plan nodes
-        cell_counts = pts.groupBy("cell").agg(
-            F.count("*").alias("cellcnt"))
-        sat_df = _sat_plan(spark, cell_counts)
-        # `need` is a COLUMN here: _total rides in with the SAT row
-        need = F.least(F.lit(k).cast("long"), F.col("_total"))
-        # prune asymmetry vs the eager path (documented, ADVICE r5): the
-        # eager path gates the stage-2 presence prune on <50% grid
-        # occupancy because it is pure overhead on dense grids, but that
-        # signal is a driver-side histogram the lazy path by contract
-        # never collects (no job at construction time) — so the lazy
-        # plan carries the O(#cells) broadcast semi-join prune
-        # unconditionally.  Results are identical either way; callers
-        # on known-dense inputs who care should use materialize=True.
-        result, _ = _stages(
-            pts, queries, k, salt_by, bc_ring, bc_cover,
-            cell_counts, sat_df, need,
-            sampling_guard=f"ring_sum < {dense_thresh} AND ",
-            sample_stage1=True, persist=False,
-            prune_cells=cell_counts, smj_pts=smj_pts)
-        return result
-
-    # eager path: SER cache (see docstring), one O(#cells) collect.
-    # Without the cache the histogram job still runs the same map +
-    # O(#cells) agg; the result job re-runs the map once and its two
-    # probes (stage 1, stage 2) share that one exchange (ReuseExchange).
+    # SER cache (see docstring), one O(#cells) collect.  Without the
+    # cache the histogram job still runs the same map + O(#cells) agg;
+    # the result job re-runs the map once and its two probes (stage 1,
+    # stage 2) share that one exchange (ReuseExchange).
     if cache_input:
         pts = pts.persist(StorageLevel.MEMORY_AND_DISK)
     hist = pts.groupBy("cell").agg(F.count("*").alias("cellcnt")).collect()
     counts = {int(r["cell"]): int(r["cellcnt"]) for r in hist}
-    cell_counts = spark.createDataFrame(
-        [(c, n) for c, n in counts.items()] or [(0, 0)],
-        "cell bigint, cellcnt bigint")
-    sat_df = spark.createDataFrame([(_sat_rows(counts),)],
-                                   "sat array<bigint>")
-    total = sum(counts.values())
     if cache_input:
-        _warn_if_cache_exceeds_storage(spark, total)
-    need = F.lit(min(k, total) if total else 0)
-    # short-circuit (free, from the driver-side histogram): when NO
-    # cell crosses the threshold stage 1 already sees the full data, so
-    # the histogram join + hash filter would keep every row — skip
-    # them, and the ring_sum sampling guard on `done` drops too.
-    any_dense = any(c >= dense_thresh for c in counts.values())
-    result, persisted = _stages(
-        pts, queries, k, salt_by, bc_ring, bc_cover,
-        cell_counts, sat_df, need,
-        sampling_guard=(f"ring_sum < {dense_thresh} AND "
-                        if any_dense else ""),
-        sample_stage1=any_dense, persist=True,
-        # presence pruning drops cover rows in EMPTY cells, so its win
-        # is bounded by the empty fraction: on a dense grid (sf0.1 is
-        # ~70% occupied) the >1024-cell broadcast semi-join is pure
-        # overhead per call — prune only when at least half the grid is
-        # empty (the sparse regime X6 exists for)
-        prune_cells=(set(counts) if len(counts) < C.N_CELLS // 2
-                     else None),
-        expand=total > 0)
+        _warn_if_cache_exceeds_storage(spark, sum(counts.values()))
+    result, persisted = _stages(pts, queries, k, salt_by, bc_ring,
+                                bc_cover, counts)
     result = result.persist()
     result.count()
     if cache_input:

@@ -33,6 +33,23 @@ def _default_local_dir() -> str:
     return "/tmp"
 
 
+# Default driver heap ceiling; local[...] runs every task in this JVM.
+_DRIVER_MEM_CAP_MB = 48 << 10
+
+
+def _default_driver_mem() -> str:
+    """min(48g, half of physical RAM): a fixed 48g heap on a smaller
+    host lets the JVM grow past what the machine has and be OOM-killed
+    mid-run instead of collecting garbage.  SPARK_GRAFT_DRIVER_MEM
+    overrides it."""
+    try:
+        ram_mb = (os.sysconf("SC_PAGE_SIZE")
+                  * os.sysconf("SC_PHYS_PAGES")) >> 20
+    except (ValueError, OSError):
+        return f"{_DRIVER_MEM_CAP_MB}m"
+    return f"{min(_DRIVER_MEM_CAP_MB, ram_mb // 2)}m"
+
+
 def get_spark(app: str = "spatialgraft",
               cpus: int | None = None,
               shuffle_partitions: int | None = None,
@@ -109,7 +126,8 @@ def get_spark(app: str = "spatialgraft",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                               _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -42,7 +42,7 @@ _INNER = textwrap.dedent('''
     ).selectExpr("qid", "qmx", "qmy",
                  "CAST(qmx - 180000 AS DOUBLE) / 1000.0 AS qx",
                  "CAST(qmy - 90000 AS DOUBLE) / 1000.0 AS qy")
-    got = knn_join(pts, qs, k=10, materialize=True)
+    got = knn_join(pts, qs, k=10)
     n = got.count()
     assert n == 50, f"expected 5 queries x k=10 = 50 rows, got {n}"
     w = Window.partitionBy("qid").orderBy("dist2", "doc_key")
@@ -51,23 +51,19 @@ _INNER = textwrap.dedent('''
                 "(qx - x) * (qx - x) + (qy - y) * (qy - y)"))
             .withColumn("rnk", F.row_number().over(w))
             .where("rnk <= 10").select("qid", "doc_key", "dist2", "rnk"))
-    wv = sorted(map(tuple, want.collect()))
-    assert sorted(map(tuple, got.collect())) == wv
-    # the lazy path walks the same expansion subtree
-    lz = knn_join(pts, qs, k=10, materialize=False)
-    assert sorted(map(tuple, lz.collect())) == wv
-    # the lazy SAT row has the driver SAT's layout on a non-power-of-two
-    # grid too (points spread over the whole 96x48 world)
+    assert sorted(map(tuple, got.collect())) == \
+        sorted(map(tuple, want.collect()))
+    # SAT ring counts equal brute-force sums on a non-power-of-two grid
+    # too (points spread over the whole 96x48 world)
     from spatialgraft.cells import with_cell
-    from spatialgraft.ops.knn import _sat_plan, _sat_rows
+    from tests.test_knn_paths import _assert_sat_ring_counts
     spread = spark.range(500).selectExpr(
         "(id * 7919) % 360000 AS mx", "(id * 104729) % 180000 AS my")
     cc = (with_cell(pts.select("mx", "my").unionByName(spread))
           .groupBy("cell").agg(F.count("*").alias("cellcnt")))
     counts = {r["cell"]: r["cellcnt"] for r in cc.collect()}
-    (row,) = _sat_plan(spark, cc).collect()
-    assert row["sat"] == _sat_rows(counts)
-    assert row["_total"] == 530, row["_total"]
+    assert sum(counts.values()) == 530
+    _assert_sat_ring_counts(spark, counts)
     spark.stop()
     print("GRID-OK")
 ''')

@@ -2,6 +2,9 @@
 (J9), data-side predicate (F6), and the fewer-than-k-points edge —
 each checked bit-exactly against a brute-force cross-join twin."""
 
+import random
+
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -38,23 +41,23 @@ def test_ring_expansion_matches_brute_force(spark, sf_smoke):
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
     qs = datagen.knn_queries(spark, sf_smoke)
     _assert_same(knn_join(pts, qs, k=25), _brute(pts, qs, k=25))
+    # the lazy plan is gone: asking for it fails before any job runs
+    with pytest.raises(ValueError, match="lazy kNN plan was removed"):
+        knn_join(pts, qs, k=25, materialize=False)
 
 
 def test_eager_deep_expansion_matches_brute_force(spark, sf_smoke):
-    """EAGER-path deep SAT expansion vs brute force: k=150 at sf0.001
-    underfills every ring, so every query's stage-2 radius flows
-    through the eager expansion subtree (driver SAT array + explode-
-    radii pick).  The k150 contract query runs this exact path
-    (materialize=True); before r7 only the LAZY construction was
-    brute-force-gated at k=150.  Also the regression gate for any
-    future expansion rewrite — an r7 candidate (inline CASE-chain
-    radius pick) was measured 2x slower from lateral-alias expression
-    inlining and rejected (OPTIMIZATION_r07.md, bench_records/
-    r7_expandpick_ab_sf01.jsonl)."""
+    """Deep SAT expansion vs brute force: k=150 at sf0.001 underfills
+    every ring, so every query's stage-2 radius flows through the
+    expansion subtree (driver SAT array + explode-radii pick).  The
+    k150 contract query runs this exact path.  Also the regression
+    gate for any future expansion rewrite — an r7 candidate (inline
+    CASE-chain radius pick) was measured 2x slower from lateral-alias
+    expression inlining and rejected (OPTIMIZATION_r07.md,
+    bench_records/r7_expandpick_ab_sf01.jsonl)."""
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
     qs = datagen.knn_queries(spark, sf_smoke)
-    _assert_same(knn_join(pts, qs, k=150, materialize=True),
-                 _brute(pts, qs, k=150))
+    _assert_same(knn_join(pts, qs, k=150), _brute(pts, qs, k=150))
 
 
 def test_fewer_points_than_k(spark, sf_smoke):
@@ -80,8 +83,8 @@ def test_salted_knn_identical_and_nonvacuous(spark, sf_correct):
 
 def test_uniform_salt_identical(spark, sf_correct):
     """knn_join(salt=N) — the plan-free skew knob — must be bit-exact
-    against the unsalted join in BOTH materialize modes (stage 1 AND
-    stage 2 key on (cell, salt) when salted).  The same twin also holds
+    against the unsalted join (stage 1 AND stage 2 key on (cell, salt)
+    when salted), cached and uncached.  The same twin also holds
     the shuffled shape (broadcast_queries=False, the bench.py and
     scripts/plancmp.py gate shape): ring and cover sort-merge joined
     against the points instead of broadcast."""
@@ -89,10 +92,9 @@ def test_uniform_salt_identical(spark, sf_correct):
     qs = datagen.knn_queries(spark, sf_correct)
     base = knn_join(pts, qs, k=10)
     _assert_same(knn_join(pts, qs, k=10, salt=8), base)
-    _assert_same(knn_join(pts, qs, k=10, salt=8, materialize=True), base)
-    # the uncached eager path (gate protocol) must also be bit-exact
-    _assert_same(knn_join(pts, qs, k=10, salt=8, materialize=True,
-                          cache_input=False), base)
+    # the uncached path (gate protocol) must also be bit-exact
+    _assert_same(knn_join(pts, qs, k=10, salt=8, cache_input=False),
+                 base)
     # with auto-broadcast off, only the engine's own O(#cells) hints
     # broadcast — the cell-keyed stage joins must plan as sort-merge
     # (the qid joins always do), so the shuffled case cannot pass on a
@@ -101,13 +103,10 @@ def test_uniform_salt_identical(spark, sf_correct):
     thr = spark.conf.get(thr_key)
     spark.conf.set(thr_key, "-1")
     try:
-        for mat in (False, True):
-            got = knn_join(pts, qs, k=10, broadcast_queries=False,
-                           materialize=mat)
-            plan = got._jdf.queryExecution().executedPlan().toString()
-            assert "SortMergeJoin [cell#" in plan, \
-                f"stage joins not shuffled (materialize={mat})"
-            _assert_same(got, base)
+        got = knn_join(pts, qs, k=10, broadcast_queries=False)
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin [cell#" in plan, "stage joins not shuffled"
+        _assert_same(got, base)
     finally:
         spark.conf.set(thr_key, thr)
 
@@ -148,50 +147,70 @@ def test_knn_pred_matches_filtered_brute_force(spark, sf_smoke):
                  _brute(pts, qs, k=5, pred=F.expr(pred)))
 
 
-def test_sat_plan_matches_driver_sat(spark, sf_smoke):
-    """The lazy SAT row (_sat_plan) must equal the driver-built one
-    (_sat_rows) entry for entry, and `_total` the table total.  The
-    brute-force twins only catch an over-counting SAT (the bound gets
-    too tight); an under-counting one merely loosens the bound, so the
-    layout is pinned here directly — on real data and an empty table."""
+def _sat_rects(counts):
+    """Cell rectangles (cxa, cxb, cya, cyb), inclusive, for the SAT
+    check: the full grid, the four edge rows/columns, the four corner
+    cells and every populated cell alone, clipped rings (the _RECT
+    shape) of several radii around populated and corner cells, and
+    seeded random rectangles."""
+    from spatialgraft import config as C
+    cx1, cy1 = C.CELL_CX - 1, C.CELL_CY - 1
+    rects = {(0, cx1, 0, cy1),
+             (0, cx1, 0, 0), (0, cx1, cy1, cy1),
+             (0, 0, 0, cy1), (cx1, cx1, 0, cy1)}
+    homes = [(0, 0), (0, cy1), (cx1, 0), (cx1, cy1)]
+    homes += [divmod(c, C.CELL_CY) for c in sorted(counts)[:50]]
+    for cx, cy in homes:
+        rects.add((cx, cx, cy, cy))
+        for r in (1, 2, 5, 17, max(C.CELL_CX, C.CELL_CY)):
+            rects.add((max(cx - r, 0), min(cx + r, cx1),
+                       max(cy - r, 0), min(cy + r, cy1)))
+    rng = random.Random(7)
+    for _ in range(100):
+        xa, xb = sorted(rng.randint(0, cx1) for _ in range(2))
+        ya, yb = sorted(rng.randint(0, cy1) for _ in range(2))
+        rects.add((xa, xb, ya, yb))
+    return sorted(rects)
+
+
+def _assert_sat_ring_counts(spark, counts):
+    """_ring_count_expr over the SAT row built by _sat_rows(counts) must
+    equal the Python sum of `counts` inside each _sat_rects rectangle.
+    The brute-force kNN twins only catch an over-counting SAT (the
+    bound gets too tight); an under-counting one merely loosens the
+    bound, so the layout is pinned here directly."""
+    from spatialgraft import config as C
+    from spatialgraft.ops.knn import _ring_count_expr, _sat_rows
+    rects = _sat_rects(counts)
+    sat_df = spark.createDataFrame([(_sat_rows(counts),)],
+                                   "sat array<bigint>")
+    df = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rects)],
+        "rid int, _cxa bigint, _cxb bigint, _cya bigint, _cyb bigint")
+    got = {r["rid"]: r["n"] for r in
+           _ring_count_expr(df, sat_df, "n").select("rid", "n").collect()}
+    for i, (xa, xb, ya, yb) in enumerate(rects):
+        want = sum(n for c, n in counts.items()
+                   if xa <= c // C.CELL_CY <= xb
+                   and ya <= c % C.CELL_CY <= yb)
+        assert got[i] == want, ((xa, xb, ya, yb), got[i], want)
+
+
+def test_sat_ring_count_matches_brute_sum(spark, sf_smoke):
     from spatialgraft.cells import with_cell
-    from spatialgraft.ops.knn import _sat_plan, _sat_rows
     pts = with_cell(with_geometry(datagen.documents_spans(spark, sf_smoke)))
-    cell_counts = pts.groupBy("cell").agg(F.count("*").alias("cellcnt"))
-    counts = {r["cell"]: r["cellcnt"] for r in cell_counts.collect()}
+    counts = {r["cell"]: r["cellcnt"] for r in
+              pts.groupBy("cell").agg(F.count("*").alias("cellcnt"))
+              .collect()}
     assert len(counts) > 100  # non-vacuous
-    for cc, want in ((cell_counts, counts),
-                     (cell_counts.where("false"), {})):
-        (row,) = _sat_plan(spark, cc).collect()
-        assert row["sat"] == _sat_rows(want)
-        assert row["_total"] == sum(want.values())
-
-
-def test_lazy_construction_runs_no_jobs(spark, sf_smoke):
-    """materialize=False must be a pure plan: no Spark job (histogram,
-    count, or otherwise) during knn_join() itself, and nothing left
-    persisted (the round-3 lazy path collected the histogram and leaked
-    three cached DataFrames per call)."""
-    pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
-    qs = datagen.knn_queries(spark, sf_smoke)
-    jsc = spark.sparkContext._jsc.sc()
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None))
-    cached_before = jsc.getPersistentRDDs().size()
-    df = knn_join(pts, qs, k=10, materialize=False)
-    after = set(tracker.getJobIdsForGroup(None))
-    assert after == before, f"lazy knn_join ran jobs {after - before}"
-    # plan inspection is also job-free
-    df._jdf.queryExecution().executedPlan().toString()
-    assert set(tracker.getJobIdsForGroup(None)) == before
-    # no hidden cache state left behind
-    assert jsc.getPersistentRDDs().size() == cached_before
+    _assert_sat_ring_counts(spark, counts)
+    _assert_sat_ring_counts(spark, {})
 
 
 def test_stage2_cover_prune_wired(spark, sf_smoke):
     """VERDICT r4 item 6: the stage-2 cover is presence-pruned (X6 ->
-    J7).  Wiring check: the lazy plan carries the left-semi prune; the
-    quantitative headroom on the sparse sf0.001 fixture is large (most
+    J7).  Wiring check: the result's plan carries the left-semi prune;
+    the quantitative headroom on the sparse sf0.001 fixture is large (most
     of the 32k cells hold no data, so most world-cover multicast rows
     die before the stage-2 shuffle).  Exactness of the pruned path is
     covered by the brute-force twins above, which all run through it."""
@@ -199,69 +218,28 @@ def test_stage2_cover_prune_wired(spark, sf_smoke):
     from spatialgraft.sfilter import presence_cells
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
     qs = datagen.knn_queries(spark, sf_smoke)
-    plan = (knn_join(pts, qs, k=25, materialize=False)
+    plan = (knn_join(pts, qs, k=25)
             ._jdf.queryExecution().optimizedPlan().toString())
-    assert "LeftSemi" in plan, "stage-2 cover prune not in lazy plan"
+    assert "LeftSemi" in plan, "stage-2 cover prune not in the plan"
     present = presence_cells(pts)
     assert len(present) < 0.2 * C.N_CELLS, \
         "sf0.001 fixture unexpectedly dense; prune test is vacuous"
 
 
-def test_lazy_equals_eager(spark, sf_smoke):
-    pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
-    qs = datagen.knn_queries(spark, sf_smoke)
-    _assert_same(knn_join(pts, qs, k=10, materialize=False),
-                 knn_join(pts, qs, k=10, materialize=True))
-
-
-def _assert_no_raw_generate_broadcast(plan_str):
-    """Every BroadcastExchange subtree that contains a Generate must
-    also contain an Aggregate below it: broadcasting an O(#cells)
-    aggregate OF generated lineage is safe by construction; broadcasting
-    the raw generated row stream is the measured driver crash."""
-    import re
-    lines = plan_str.splitlines()
-    art = [re.match(r"^[\s:+\-=*]*", ln).end() for ln in lines]
-    for i, ln in enumerate(lines):
-        if "BroadcastExchange" not in ln:
-            continue
-        depth = art[i]
-        sub = []
-        for j in range(i + 1, len(lines)):
-            if lines[j].strip() and art[j] <= depth:
-                break
-            sub.append(lines[j])
-        body = "\n".join(sub)
-        if "Generate" in body:
-            assert "Aggregate" in body, (
-                "raw generated lineage under a BroadcastExchange:\n"
-                + ln + "\n" + body[:1500])
-
-
-def test_lazy_generated_input_never_broadcast(spark, sf_smoke):
-    """VERDICT r5 item 1: Catalyst's explode-blind sizeInBytes could
-    plant a generated points side as a broadcast build (measured driver
-    maxResultSize crash at 1.05B rows).  The lazy path must detect the
-    Generate lineage and force sort-merge on the points side of both
-    stage joins — and must leave parquet-backed plans untouched."""
+def test_generated_input_matches_brute_force(spark, sf_smoke):
+    """VERDICT r5 item 1: Catalyst's explode-blind sizeInBytes once let
+    a generated points side be planted as a broadcast build (measured
+    driver maxResultSize crash at 1.05B rows, lazy plan).  The join
+    reads its points through the slim cache, whose stats are real; on
+    an exploded (Generate) input it must stay bit-exact against brute
+    force on the same input."""
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
     big = (pts.withColumn("_r", F.explode(F.sequence(F.lit(0),
                                                      F.lit(49))))
            .withColumn("doc_key", F.col("doc_key") * 50 + F.col("_r"))
            .drop("_r"))
     qs = datagen.knn_queries(spark, sf_smoke).limit(40)
-    lazy = knn_join(big, qs, k=3, materialize=False)
-    opt = lazy._jdf.queryExecution().optimizedPlan().toString()
-    assert opt.count("strategy=merge") >= 2, \
-        "guard did not hint both stage joins"
-    _assert_no_raw_generate_broadcast(
-        lazy._jdf.queryExecution().executedPlan().toString())
-    # parquet-backed input keeps today's unhinted plans
-    normal = knn_join(pts, qs, k=3, materialize=False)
-    assert "strategy=merge" not in \
-        normal._jdf.queryExecution().optimizedPlan().toString()
-    # and the guarded plan is still bit-exact vs the eager path
-    _assert_same(lazy, knn_join(big, qs, k=3, materialize=True))
+    _assert_same(knn_join(big, qs, k=3), _brute(big, qs, k=3))
 
 
 def test_broadcast_gate_counts_salt(spark, sf_smoke):
@@ -272,14 +250,14 @@ def test_broadcast_gate_counts_salt(spark, sf_smoke):
     qs = datagen.knn_queries(spark, sf_smoke)
     est, thr = plan_size_bytes(qs), threshold_bytes(spark)
     assert 0 < est * 9 <= thr, "fixture: unsalted ring must fit"
-    ring1, _cover1 = _bc_gates(spark, qs, 1, None)
+    ring1, _cover1 = _bc_gates(qs, 1, None)
     assert ring1
     big_salt = int(thr // (est * 9) + 1)
-    ring_s, cover_s = _bc_gates(spark, qs, big_salt, None)
+    ring_s, cover_s = _bc_gates(qs, big_salt, None)
     assert not ring_s and not cover_s
     # explicit flags still win over the gate
-    assert _bc_gates(spark, qs, big_salt, True) == (True, True)
-    assert _bc_gates(spark, qs, 1, False) == (False, False)
+    assert _bc_gates(qs, big_salt, True) == (True, True)
+    assert _bc_gates(qs, 1, False) == (False, False)
 
 
 def test_cache_sizing_advisory(spark):

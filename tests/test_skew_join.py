@@ -44,7 +44,7 @@ def test_partitioner_map_leaves_no_cache(spark, sf_correct):
     assert pids() - before == set()
     # eager salted kNN: only the returned (intentional) result persists
     qs = datagen.knn_queries(spark, sf_correct).limit(50)
-    res = knn_join(pts, qs, k=5, plan=plan, materialize=True)
+    res = knn_join(pts, qs, k=5, plan=plan)
     new = pids() - before
     assert len(new) == 1
     res.unpersist(blocking=True)
@@ -109,8 +109,8 @@ def test_no_hot_cell_plan_matches_unsalted(spark, sf_smoke):
 
     qs = datagen.knn_queries(spark, sf_smoke)
     cols = ["qid", "doc_key", "dist2", "rnk"]
-    want = knn_join(pts, qs, k=10, materialize=True)
-    got = knn_join(pts, qs, k=10, plan=plan, materialize=True)
+    want = knn_join(pts, qs, k=10)
+    got = knn_join(pts, qs, k=10, plan=plan)
     w = want.toPandas().sort_values(cols).reset_index(drop=True)
     g = got.toPandas().sort_values(cols).reset_index(drop=True)
     want.unpersist()
