@@ -66,8 +66,7 @@ def main() -> None:
         .withColumn("doc_key", F.col("doc_key") * rep + F.col("_r"))
         .drop("_r"))
     qs = datagen.knn_queries(spark, sf)
-    res = knn_join(pts, qs, k=10, broadcast_queries=False,
-                   cache_input=True)
+    res = knn_join(pts, qs, k=10, broadcast_queries=False)
     digest = _write_plan(res, out)
     print("rows", res.count(), "sha256", digest, "->", out)
     boxes = datagen.query_boxes(spark, sf)

@@ -34,13 +34,15 @@ from pyspark.sql import DataFrame
 COVER_FANOUT = 64
 RING_FANOUT = 9
 
+# the byte-size suffixes Spark's byteFromString accepts (binary units)
 _UNITS = {"b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
-          "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30}
+          "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40,
+          "tb": 1 << 40, "p": 1 << 50, "pb": 1 << 50}
 
 
 def threshold_bytes(spark) -> int:
-    """Parse spark.sql.autoBroadcastJoinThreshold ('10MB', '10485760b',
-    plain bytes, or -1 = disabled)."""
+    """Parse spark.sql.autoBroadcastJoinThreshold ('10MB', '1t',
+    '10485760b', plain bytes, or -1 = disabled)."""
     raw = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold",
                              "10485760")).strip().lower()
     for suffix, mult in sorted(_UNITS.items(), key=lambda kv: -len(kv[0])):

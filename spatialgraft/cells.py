@@ -10,6 +10,11 @@ SpatialRdd.scala:377-397).  Everything is a Catalyst column expression
   cell_x = mx * CX div WORLD_MX      (exact integer floor)
   cell   = cell_x * CY + cell_y
   cover(box) = explode(x-range) x explode(y-range)
+
+The same floor arithmetic serves every grid (join cells, tiles, index
+coarse cells): cell_expr / cover_cells take the grid dims.  The cell
+histogram's summed-area table (sat_rows / ring_count_expr) counts the
+points in any cell rectangle with 4 array lookups.
 """
 
 from __future__ import annotations
@@ -35,22 +40,67 @@ def with_cell(df: DataFrame, mx: str = "mx", my: str = "my",
 def cover_cells(boxes: DataFrame,
                 xmin: str = "xmin", ymin: str = "ymin",
                 xmax: str = "xmax", ymax: str = "ymax",
-                out: str = "cell") -> DataFrame:
+                out: str = "cell",
+                cx: int = C.CELL_CX, cy: int = C.CELL_CY) -> DataFrame:
     """One output row per (box, overlapped cell) — the multicast step.
 
     Cell ranges are computed with the same exact integer floor as point
     assignment, so a border-inclusive containment can never fall outside
-    the cover.
+    the cover.  cx/cy pick the grid (default: the join cell grid; the
+    tile grid for raster->vector).
     """
-    cx0 = F.expr(f"({xmin} * {C.CELL_CX}) div {C.WORLD_MX}")
-    cx1 = F.expr(f"({xmax} * {C.CELL_CX}) div {C.WORLD_MX}")
-    cy0 = F.expr(f"({ymin} * {C.CELL_CY}) div {C.WORLD_MY}")
-    cy1 = F.expr(f"({ymax} * {C.CELL_CY}) div {C.WORLD_MY}")
+    cx0 = F.expr(f"({xmin} * {cx}) div {C.WORLD_MX}")
+    cx1 = F.expr(f"({xmax} * {cx}) div {C.WORLD_MX}")
+    cy0 = F.expr(f"({ymin} * {cy}) div {C.WORLD_MY}")
+    cy1 = F.expr(f"({ymax} * {cy}) div {C.WORLD_MY}")
     return (boxes
             .withColumn("_cx", F.explode(F.sequence(cx0, cx1)))
             .withColumn("_cy", F.explode(F.sequence(cy0, cy1)))
-            .withColumn(out, F.col("_cx") * C.CELL_CY + F.col("_cy"))
+            .withColumn(out, F.col("_cx") * cy + F.col("_cy"))
             .drop("_cx", "_cy"))
+
+
+def sat_rows(counts: dict[int, int]) -> list[int]:
+    """Summed-area table (SAT) of a cell histogram: flattened inclusive
+    2-D prefix sums over the cell grid, with a zero row/column of
+    padding: entry (i, j), i in [0,CX], j in [0,CY], at 1-based index
+    i*(CY+1)+j+1, holds sum of counts over cells with cell_x < i and
+    cell_y < j.  O(#cells) memory — scale-independent."""
+    cx1, cy1 = C.CELL_CX + 1, C.CELL_CY + 1
+    sat = [0] * (cx1 * cy1)
+    for i in range(1, cx1):
+        row_acc = 0
+        base, prev = i * cy1, (i - 1) * cy1
+        for j in range(1, cy1):
+            row_acc += counts.get((i - 1) * C.CELL_CY + (j - 1), 0)
+            sat[base + j] = sat[prev + j] + row_acc
+    return sat
+
+
+def ring_count_sql(sat: str, cxa: str, cxb: str, cya: str, cyb: str
+                   ) -> str:
+    """Sum of cell counts over the inclusive cell-rectangle via 4 SAT
+    lookups (element_at is 1-based; the padding makes -1 edges safe)."""
+    cy1 = C.CELL_CY + 1
+
+    def at(i: str, j: str) -> str:
+        return (f"element_at({sat}, "
+                f"CAST(({i}) * {cy1} + ({j}) + 1 AS INT))")
+
+    return (f"{at(f'{cxb} + 1', f'{cyb} + 1')} - {at(cxa, f'{cyb} + 1')} "
+            f"- {at(f'{cxb} + 1', cya)} + {at(cxa, cya)}")
+
+
+def ring_count_expr(df: DataFrame, sat_df: DataFrame, out: str
+                    ) -> DataFrame:
+    """Add `out` = the point count of each row's cell rectangle
+    [_cxa, _cxb] x [_cya, _cyb]: the one-row SAT (`sat array<bigint>`,
+    from sat_rows) broadcast-cross-joined in, 4 element_at lookups
+    inline."""
+    return (df.crossJoin(F.broadcast(sat_df))
+            .withColumn(out, F.expr(ring_count_sql(
+                "sat", "_cxa", "_cxb", "_cya", "_cyb")))
+            .drop("sat"))
 
 
 def cover_join(points: DataFrame, queries: DataFrame,

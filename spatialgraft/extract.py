@@ -23,10 +23,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
-GEOM_FIELDS = ("doc_key bigint, mx bigint, my bigint, "
-               "x double, y double, text string")
-
-# name -> Spark type of the derived columns (order = GEOM_FIELDS order)
+# name -> Spark type of the derived columns, in full-width output order
 _GEOM_TYPES = {"doc_key": "bigint", "mx": "bigint", "my": "bigint",
                "x": "double", "y": "double", "text": "string"}
 
@@ -55,7 +52,7 @@ def _one_per_parent(values: pa.Array, parents: pa.Array, n_rows: int,
 
 
 def _extract_batch(batch: pa.RecordBatch,
-                   wanted: list[str] | None = None) -> pa.RecordBatch:
+                   wanted: list[str]) -> pa.RecordBatch:
     spans = batch.column("spans")
     n = batch.num_rows
     flat = pc.list_flatten(spans)
@@ -77,17 +74,8 @@ def _extract_batch(batch: pa.RecordBatch,
                           pc.filter(parents, txt_mask), n, "text")
 
     f64 = pa.float64()
-    if wanted is None:
-        x = pc.divide(pc.cast(pc.subtract(mx, 180000), f64), 1000.0)
-        y = pc.divide(pc.cast(pc.subtract(my, 90000), f64), 1000.0)
-        doc_key = pc.cast(batch.column("doc_id"), pa.int64())
-        arrays = list(batch.columns) + [doc_key, mx, my, x, y, txt]
-        names = list(batch.schema.names) + ["doc_key", "mx", "my", "x",
-                                            "y", "text"]
-        return pa.RecordBatch.from_arrays(arrays, names=names)
-
-    # projected output: compute only what crosses the boundary (the
-    # parse + alignment validation above always ran in full)
+    # compute only what crosses the boundary (the parse + alignment
+    # validation above always ran in full)
     def col(name: str):
         if name == "doc_key":
             return pc.cast(batch.column("doc_id"), pa.int64())
@@ -106,30 +94,27 @@ def _extract_batch(batch: pa.RecordBatch,
         return batch.column(name)
 
     return pa.RecordBatch.from_arrays([col(nm) for nm in wanted],
-                                      names=list(wanted))
+                                      names=wanted)
 
 
 def with_geometry(docs: DataFrame,
                   columns: list[str] | None = None) -> DataFrame:
     """documents(doc_id, spans, ...) -> geometry-extracted DataFrame.
 
-    columns=None (default): every input column + the GEOM_FIELDS, the
-    historical full-width output.  columns=[...]: exactly these columns
-    (any mix of input columns and derived geom fields) cross the
-    Python->JVM boundary — same parse, same validation, same rows."""
+    columns=[...]: exactly these columns (any mix of input columns and
+    derived geom fields) cross the Python->JVM boundary — same parse,
+    same validation, same rows.  columns=None (default): the full-width
+    output, every input column then doc_key, mx, my, x, y, text."""
     in_types = {f.name: f.dataType.simpleString()
                 for f in docs.schema.fields}
-    if columns is None:
-        in_schema = ", ".join(f"{n} {t}" for n, t in in_types.items())
-        out_schema = f"{in_schema}, {GEOM_FIELDS}"
-    else:
-        unknown = [c for c in columns
-                   if c not in _GEOM_TYPES and c not in in_types]
-        if unknown:
-            raise ValueError(f"with_geometry: unknown columns {unknown}")
-        out_schema = ", ".join(
-            f"{c} {_GEOM_TYPES.get(c) or in_types[c]}" for c in columns)
-    wanted = list(columns) if columns is not None else None
+    wanted = (list(in_types) + list(_GEOM_TYPES) if columns is None
+              else list(columns))
+    unknown = [c for c in wanted
+               if c not in _GEOM_TYPES and c not in in_types]
+    if unknown:
+        raise ValueError(f"with_geometry: unknown columns {unknown}")
+    out_schema = ", ".join(
+        f"{c} {_GEOM_TYPES.get(c) or in_types[c]}" for c in wanted)
 
     def fn(batches):
         for b in batches:

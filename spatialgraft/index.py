@@ -18,42 +18,40 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import config as C
-from .cells import with_cell
+from .cells import cell_expr, with_cell
 
 # 16 x 8 = 128 directories — bounded regardless of data size.
 PCOARSE_X = 16
 PCOARSE_Y = 8
+# per-file row cap: bounds individual file size under skew
+MAX_RECORDS_PER_FILE = 50_000_000
 
 
 def pcell_expr(mx: str = "mx", my: str = "my") -> F.Column:
-    return F.expr(f"(({mx} * {PCOARSE_X}) div {C.WORLD_MX}) * {PCOARSE_Y} "
-                  f"+ (({my} * {PCOARSE_Y}) div {C.WORLD_MY})")
+    return cell_expr(mx, my, PCOARSE_X, PCOARSE_Y)
 
 
-def write_indexed(points: DataFrame, path: str,
-                  n_tasks: int | None = None,
-                  max_records_per_file: int | None = 50_000_000) -> None:
+def write_indexed(points: DataFrame, path: str) -> None:
     """Write the indexed layout: partitioned by coarse cell, sorted by
     fine cell within partitions.
 
     Write parallelism scales with data, not with the 128 coarse cells:
-    repartitionByRange(n_tasks, pcell, cell) gives each task a
-    contiguous (pcell, cell) slice — so a hot coarse cell is split
-    across many writer tasks (no 128-task straggler/giant-file cap)
-    while each output file still covers a tight sorted cell run (row-
-    group pruning stays as sharp as the single-task-per-pcell layout).
-    maxRecordsPerFile bounds individual file size under skew."""
-    spark = points.sparkSession
-    if n_tasks is None:
-        n_tasks = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    w = (with_cell(points)
-         .withColumn("pcell", pcell_expr())
-         .repartitionByRange(n_tasks, "pcell", "cell")
-         .sortWithinPartitions("pcell", "cell")
-         .write.mode("overwrite"))
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
-    w.partitionBy("pcell").parquet(path)
+    repartitionByRange(spark.sql.shuffle.partitions, pcell, cell) gives
+    each task a contiguous (pcell, cell) slice — so a hot coarse cell is
+    split across many writer tasks (no 128-task straggler/giant-file
+    cap) while each output file still covers a tight sorted cell run
+    (row-group pruning stays as sharp as the single-task-per-pcell
+    layout).  MAX_RECORDS_PER_FILE bounds individual file size under
+    skew."""
+    n_tasks = int(points.sparkSession.conf.get(
+        "spark.sql.shuffle.partitions"))
+    (with_cell(points)
+     .withColumn("pcell", pcell_expr())
+     .repartitionByRange(n_tasks, "pcell", "cell")
+     .sortWithinPartitions("pcell", "cell")
+     .write.mode("overwrite")
+     .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
+     .partitionBy("pcell").parquet(path))
 
 
 def read_indexed(spark: SparkSession, path: str) -> DataFrame:

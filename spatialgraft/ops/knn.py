@@ -54,13 +54,14 @@ keep sub-expressions single-sourced) and the broadcast gate reads the
 optimizer's sizeInBytes estimate instead of running a count — the only
 jobs a call runs are the histogram collect and the result's count.
 
-Skew (J9): pass a SpatialPartitioning `plan` (or a uniform `salt=N`)
-and both stage joins key on (cell, salt) — the data side hashes hot
-cells into `nsplits` salt slices, the multicast ring and stage-2 cover
-replicate across them, all in spatialgraft.partitioner's one salt
-format (the reference salts skewed partitions inside kNN round 2,
-knnJoinRDD.scala:120-215).  Without a plan the ring join's probe side
-still gets AQE skew-split.
+Skew (J9): pass a SpatialPartitioning `plan` and both stage joins key
+on (cell, salt) — the data side hashes hot cells into `nsplits` salt
+slices, the multicast ring and stage-2 cover replicate across them, all
+in spatialgraft.partitioner's one salt format (the reference salts
+skewed partitions inside kNN round 2, knnJoinRDD.scala:120-215).
+Salting is data-driven only: a uniform salt=N lost its A/B (see
+knn_join).  Without a plan the ring join's probe side still gets AQE
+skew-split.
 
 Predicates (F6): `pred` restricts the data side before any join — the
 reference's `knnFilter(entry, k, z)` z-predicate
@@ -78,7 +79,7 @@ from pyspark.sql import functions as F
 
 from .. import config as C
 from ..broadcast import COVER_FANOUT, RING_FANOUT, decide
-from ..cells import cover_cells, with_cell
+from ..cells import cover_cells, ring_count_expr, sat_rows, with_cell
 from ..partitioner import salt_multicast, salt_points
 from ..sfilter import prune_cover
 
@@ -164,48 +165,8 @@ def _ring(qmeta: DataFrame) -> DataFrame:
                         f"_gx * {C.CELL_CY} + _gy AS cell"))
 
 
-def _sat_rows(counts: dict[int, int]) -> list[int]:
-    """Flattened inclusive 2-D prefix sums over the cell grid, with a
-    zero row/column of padding: entry (i, j), i in [0,CX], j in [0,CY],
-    at 1-based index i*(CY+1)+j+1, holds sum of counts over cells with
-    cell_x < i and cell_y < j.  O(#cells) memory — scale-independent."""
-    cx1, cy1 = C.CELL_CX + 1, C.CELL_CY + 1
-    sat = [0] * (cx1 * cy1)
-    for i in range(1, cx1):
-        row_acc = 0
-        base, prev = i * cy1, (i - 1) * cy1
-        for j in range(1, cy1):
-            row_acc += counts.get((i - 1) * C.CELL_CY + (j - 1), 0)
-            sat[base + j] = sat[prev + j] + row_acc
-    return sat
-
-
-def _ring_count_sql(sat: str, cxa: str, cxb: str, cya: str, cyb: str
-                    ) -> str:
-    """Sum of cell counts over the inclusive cell-rectangle via 4 SAT
-    lookups (element_at is 1-based; the padding makes -1 edges safe)."""
-    cy1 = C.CELL_CY + 1
-
-    def at(i: str, j: str) -> str:
-        return (f"element_at({sat}, "
-                f"CAST(({i}) * {cy1} + ({j}) + 1 AS INT))")
-
-    return (f"{at(f'{cxb} + 1', f'{cyb} + 1')} - {at(cxa, f'{cyb} + 1')} "
-            f"- {at(f'{cxb} + 1', cya)} + {at(cxa, cya)}")
-
-
-def _ring_count_expr(df: DataFrame, sat_df: DataFrame, out: str
-                     ) -> DataFrame:
-    """Add `out` = the point count of each row's cell rectangle: the
-    one-row SAT broadcast-cross-joined in, 4 element_at lookups inline."""
-    return (df.crossJoin(F.broadcast(sat_df))
-            .withColumn(out, F.expr(_ring_count_sql(
-                "sat", "_cxa", "_cxb", "_cya", "_cyb")))
-            .drop("sat"))
-
-
 def _stages(pts: DataFrame, queries: DataFrame, k: int,
-            salt_by, bc_ring: bool, bc_cover: bool,
+            plan, bc_ring: bool, bc_cover: bool,
             counts: dict[int, int]):
     """Stage-1 / split / expand / stage-2 assembly.  Every decision the
     collected cell histogram `counts` drives is made here: the broadcast
@@ -215,18 +176,17 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
     intermediates (cand1, stats) are persisted.  Returns
     (result, persisted).
 
-    salt_by: None (unsalted, joins key on cell) or what salted `pts`
-    (a plan or a uniform modulus N, see spatialgraft.partitioner) — the
-    multicast sides are then replicated over the same slices and both
-    joins key on (cell, salt)."""
+    plan: None (unsalted, joins key on cell) or the SpatialPartitioning
+    that salted `pts` — the multicast sides are then replicated over
+    the same slices and both joins key on (cell, salt)."""
     spark = pts.sparkSession
     persisted = []
     dense_thresh = 3 * k * C.KNN_SAMPLE_MOD
-    keys = ["cell"] if salt_by is None else ["cell", "salt"]
+    keys = ["cell"] if plan is None else ["cell", "salt"]
     cell_counts = spark.createDataFrame(
         [(c, n) for c, n in counts.items()] or [(0, 0)],
         "cell bigint, cellcnt bigint")
-    sat_df = spark.createDataFrame([(_sat_rows(counts),)],
+    sat_df = spark.createDataFrame([(sat_rows(counts),)],
                                    "sat array<bigint>")
     total = sum(counts.values())
     # short-circuit (free, from the driver-side histogram): when NO
@@ -237,8 +197,8 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
 
     qmeta = _with_ring_bounds(queries, cell_counts, k)
     ring = _ring(qmeta)
-    if salt_by is not None:
-        ring = salt_multicast(ring, ["qid", "qx", "qy"], salt_by)
+    if plan is not None:
+        ring = salt_multicast(ring, ["qid", "qx", "qy"], plan)
     if bc_ring:
         ring = F.broadcast(ring)
 
@@ -293,7 +253,7 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
     # cells: sum >= dense_thresh is conservative (sum >= max)
     agg = cand1.groupBy("qid").agg(F.count("*").alias("cnt"),
                                    F.max("dist2").alias("kth2"))
-    stats = (_ring_count_expr(qmeta, sat_df, "ring_sum")
+    stats = (ring_count_expr(qmeta, sat_df, "ring_sum")
              .select("qid", "qmx", "qmy", "qx", "qy", "_cx", "_cy",
                      "ring_sum",
                      "ring_x0", "ring_x1", "ring_y0", "ring_y1")
@@ -336,7 +296,7 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
                         "_cy", f"explode(array({radii})) AS _r")
             .selectExpr("qid", "qmx", "qmy", "qx", "qy", "_r", *_RECT))
         exp = (
-            _ring_count_expr(exp_base, sat_df, "_rc")
+            ring_count_expr(exp_base, sat_df, "_rc")
             .where(F.col("_rc") >= min(k, total))
             .withColumn("_pick", F.row_number().over(
                 Window.partitionBy("qid").orderBy("_r")))
@@ -371,15 +331,14 @@ def _stages(pts: DataFrame, queries: DataFrame, k: int,
     # exists for)
     if len(counts) < C.N_CELLS // 2:
         cover = prune_cover(cover, set(counts))
-    if salt_by is not None:
+    if plan is not None:
         # stage 2 joins on (cell, salt) too: the probe work of a dense
         # cell then spreads over its salt slices instead of landing in
         # one task (the measured 4N straggler), and the pts side's
         # (cell, salt) hash partitioning is reused with NO exchange
         # (the old cell-only join forced a full re-shuffle of pts on
         # the salted path)
-        cover = salt_multicast(cover, ["qid", "qx", "qy", "kth2"],
-                               salt_by)
+        cover = salt_multicast(cover, ["qid", "qx", "qy", "kth2"], plan)
     if bc_cover:
         cover = F.broadcast(cover)
 
@@ -427,13 +386,13 @@ def _warn_if_cache_exceeds_storage(spark, total_rows: int) -> bool:
         return False
     import warnings
     warnings.warn(
-        f"knn_join cache_input: estimated slim cache "
+        f"knn_join: estimated slim cache "
         f"({est / 1e9:.1f} GB for {total_rows} rows at "
         f"{_SLIM_CACHE_BYTES_PER_ROW} B/row) exceeds aggregate executor "
         f"storage capacity ({agg / 1e9:.1f} GB); eviction cost a "
         "measured +29% on the join wall at the 1.05B-row gate "
         "(bench_records/r6_knn_floor_4n_evlog.jsonl) — size executor "
-        "memory for the cache or pass cache_input=False",
+        "memory for the cache",
         stacklevel=3)
     return True
 
@@ -471,63 +430,41 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     pred: optional extra data-side predicate (knnFilter semantics, F6).
     plan: optional SpatialPartitioning -> salt hot cells in both stage
     joins (J9).
-    salt: uniform salt modulus (ignored when a plan is given): every
-    cell splits into `salt` slices keyed by pmod(xxhash64(doc_key), salt)
-    and both join stages key on (cell, salt) — the plan-free J9 knob for
-    the ONE-dominating-cell regime.  It is a knob, not the default,
-    because it costs everywhere else: the multicast sides replicate
-    x salt, and the stage-1 pre-rank keeps k rows PER SLICE, feeding
-    salt-times the rows into the global rank — A/B-measured at 1.05B
-    docs as a large net LOSS on uniformly dense data (4N knn wall
-    139.7 -> 268.0 s at salt=8; bench_records/r5_ab4n_x2304.jsonl).
-    Prefer plan= (per-hot-cell split factors) when stats are available.
     broadcast_queries: None = auto size-gate per join (ring fan-out 9,
     stage-2 cover fan-out ~64) against the session broadcast threshold,
     from the optimizer's plan-size estimate — no job runs.  True/False
     force.
 
-    materialize: accepted for existing callers; only True is valid.
-    The lazy materialize=False plan lost its A/B (349.8 s lazy+salt8
-    and a driver maxResultSize crash unsalted, against 139.7 s eager at
-    the x2304 gate, bench_records/r5_ab4n_x2304.jsonl) and was removed;
-    passing False raises ValueError.
+    salt / materialize / cache_input: accepted for existing callers;
+    only the defaults (None / True / True) are valid, anything else
+    raises ValueError before a job runs.  Each lost its A/B at the
+    x2304 gate (1.05B docs, bench_records/r5_ab4n_x2304.jsonl) against
+    the 139.7 s of this plan and was removed: uniform salt=8 ran
+    268.0 s (prefer plan=, per-hot-cell split factors), the uncached
+    input 206.4 s, and the lazy plan 349.8 s with salt=8 and a driver
+    maxResultSize crash without.
 
-    cache_input: False skips the slim-projection cache, so the
-    histogram job and the result job each re-run the input lineage
-    (shuffle files do NOT persist across separate query executions —
-    there is no cross-job exchange reuse).  A/B at the x2304 gate
-    (1.05B rows, 4 GiB executors) measured the cache WINNING despite
-    its build being 57% of the N wall: uncached walls were
-    139.7 -> 206.4 s at 4N and ~2x at N
-    (bench_records/r5_ab4n_x2304.jsonl).  Keep the default unless the
-    cache itself cannot fit executor storage+disk.  Executor SIZING
-    matters as much as the flag: when the slim cache does not fit the
-    aggregate heap, eviction (even to tmpfs disk) cost a measured
-    +29% on the join wall at the same gate (240.4 vs 188.2 s with
-    8 GiB executors, certified clean windows, r6_knn_floor_4n_evlog
-    .jsonl) — budget executor memory for the ~24 B/row slim cache
-    PLUS the working set of whatever shares the session.  The cache also
-    carries accurate InMemoryRelation stats — on exploded/generated
-    lineage whose static Catalyst estimate misses the multiplicity,
-    an uncached run can auto-broadcast a huge side.
+    The slim cache also carries accurate InMemoryRelation stats, so an
+    exploded/generated input whose static Catalyst estimate misses the
+    multiplicity is never auto-broadcast as a huge side.  Executor SIZING matters: when the slim cache does not fit the
+    aggregate heap, eviction (even to tmpfs disk) cost a measured +29%
+    on the join wall at the same gate (240.4 vs 188.2 s with 8 GiB
+    executors, certified clean windows, r6_knn_floor_4n_evlog.jsonl) —
+    budget executor memory for the ~24 B/row slim cache PLUS the
+    working set of whatever shares the session.
     """
-    if not materialize:
+    if salt is not None or not materialize or not cache_input:
         raise ValueError(
-            "knn_join(materialize=False): the lazy kNN plan was removed; "
-            "knn_join always runs the join and returns a persisted result")
+            f"knn_join(salt={salt!r}, materialize={materialize!r}, "
+            f"cache_input={cache_input!r}): uniform salt, the uncached "
+            "input and the lazy plan were removed; salt hot cells with "
+            "plan= instead")
     spark = points.sparkSession
-    # salt_by: the plan, else the uniform modulus, else None (unsalted).
-    # Its effective multiplier on the multicast sides: with salt=N (or a
-    # plan whose hottest cell splits N ways) the ring/cover rows are
-    # replicated a further N times by salt_multicast, so the broadcast
-    # size gate must count it (ADVICE r5: a salted query side up to Nx
-    # over the threshold could still be force-broadcast)
-    if plan is not None:
-        salt_by, eff_salt = plan, plan.max_splits
-    elif salt is not None and salt > 1:
-        salt_by = eff_salt = int(salt)
-    else:
-        salt_by, eff_salt = None, 1
+    # with a plan whose hottest cell splits N ways the ring/cover rows
+    # are replicated a further N times by salt_multicast, so the
+    # broadcast size gate must count it (ADVICE r5: a salted query side
+    # up to Nx over the threshold could still be force-broadcast)
+    eff_salt = plan.max_splits if plan is not None else 1
     bc_ring, bc_cover = _bc_gates(queries, eff_salt, broadcast_queries)
     if pred is not None:
         points = points.where(pred if isinstance(pred, Column)
@@ -546,9 +483,9 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
         F.col("mx").cast("int").alias("mx"),
         F.col("my").cast("int").alias("my"))
     keys = ["cell"]
-    if salt_by is not None:
+    if plan is not None:
         keys = ["cell", "salt"]
-        pts = salt_points(pts, ["cell", "doc_key", "mx", "my"], salt_by)
+        pts = salt_points(pts, ["cell", "doc_key", "mx", "my"], plan)
     # Repartition by (cell, salt) to the session shuffle width BEFORE
     # stage 1: (a) partition count then scales with configuration, not
     # core count — an input cached in defaultParallelism partitions made
@@ -560,22 +497,16 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     pts = pts.repartition(n_parts, *keys)
 
-    # SER cache (see docstring), one O(#cells) collect.  Without the
-    # cache the histogram job still runs the same map + O(#cells) agg;
-    # the result job re-runs the map once and its two probes (stage 1,
-    # stage 2) share that one exchange (ReuseExchange).
-    if cache_input:
-        pts = pts.persist(StorageLevel.MEMORY_AND_DISK)
+    # SER cache (see docstring), one O(#cells) collect
+    pts = pts.persist(StorageLevel.MEMORY_AND_DISK)
     hist = pts.groupBy("cell").agg(F.count("*").alias("cellcnt")).collect()
     counts = {int(r["cell"]): int(r["cellcnt"]) for r in hist}
-    if cache_input:
-        _warn_if_cache_exceeds_storage(spark, sum(counts.values()))
-    result, persisted = _stages(pts, queries, k, salt_by, bc_ring,
+    _warn_if_cache_exceeds_storage(spark, sum(counts.values()))
+    result, persisted = _stages(pts, queries, k, plan, bc_ring,
                                 bc_cover, counts)
     result = result.persist()
     result.count()
-    if cache_input:
-        pts.unpersist()
+    pts.unpersist()
     for df in persisted:
         df.unpersist()
     return result

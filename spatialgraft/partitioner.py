@@ -81,33 +81,28 @@ def plan_partitions(points: DataFrame,
          for cell, cnt in counts.items() if cnt > hot})
 
 
-def _with_nsplits(df: DataFrame, by: SpatialPartitioning | int
-                  ) -> tuple[DataFrame, str, str]:
-    """(df with the salt modulus in reach, modulus SQL, last-slice SQL):
-    a plan joins in its broadcast map (absent cell -> 1), an int N is a
-    literal."""
-    if isinstance(by, SpatialPartitioning):
-        m = F.broadcast(by.to_df(df.sparkSession))
-        return (df.join(m, on="cell", how="left"),
-                "coalesce(nsplits, 1)", "coalesce(nsplits, 1) - 1")
-    return df, str(int(by)), str(int(by) - 1)
+def _with_nsplits(df: DataFrame, plan: SpatialPartitioning) -> DataFrame:
+    """df with the plan's broadcast map joined in on `cell` (absent cell
+    -> NULL nsplits, read as 1)."""
+    m = F.broadcast(plan.to_df(df.sparkSession))
+    return df.join(m, on="cell", how="left")
 
 
 def salt_points(df: DataFrame, cols: list[str],
-                by: SpatialPartitioning | int) -> DataFrame:
+                plan: SpatialPartitioning) -> DataFrame:
     """Data side: project `cols` plus `salt`, the row's one slice of its
-    cell (by = the hot-cell plan, or a uniform modulus N)."""
-    df, n, _ = _with_nsplits(df, by)
-    return df.selectExpr(
-        *cols, f"pmod(xxhash64(doc_key), CAST({n} AS BIGINT)) AS salt")
+    cell under the hot-cell plan."""
+    return _with_nsplits(df, plan).selectExpr(
+        *cols,
+        "pmod(xxhash64(doc_key), CAST(coalesce(nsplits, 1) AS BIGINT)) "
+        "AS salt")
 
 
 def salt_multicast(df: DataFrame, cols: list[str],
-                   by: SpatialPartitioning | int) -> DataFrame:
+                   plan: SpatialPartitioning) -> DataFrame:
     """Multicast side: project `cols` plus `cell` and `salt`, one row per
     salt slice of the row's cell."""
-    df, _, last = _with_nsplits(df, by)
-    return df.selectExpr(
+    return _with_nsplits(df, plan).selectExpr(
         *cols, "cell",
-        f"explode(sequence(CAST(0 AS BIGINT), CAST({last} AS BIGINT))) "
-        "AS salt")
+        "explode(sequence(CAST(0 AS BIGINT), "
+        "CAST(coalesce(nsplits, 1) - 1 AS BIGINT))) AS salt")

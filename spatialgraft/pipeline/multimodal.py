@@ -46,8 +46,7 @@ def _fake_decode(doc_key: np.ndarray):
     return width, height, mean_px, n_frames
 
 
-def decode_features(docs_with_media: DataFrame,
-                    real_decode: bool = False) -> DataFrame:
+def decode_features(docs_with_media: DataFrame) -> DataFrame:
     """(doc_key, media_ref, width, height, mean_px, n_frames).
 
     Input needs doc_key + a media_ref column (extracted from the media
@@ -56,11 +55,6 @@ def decode_features(docs_with_media: DataFrame,
 
     def fn(batches):
         for pdf in batches:
-            if real_decode:
-                raise NotImplementedError(
-                    "media_ref points at an external object store this "
-                    "sandbox cannot reach; for the real in-column codec "
-                    "path use synth_media/decode_media")
             k = pdf["doc_key"].to_numpy(np.int64)
             w, h, m, f = _fake_decode(k)
             yield pd.DataFrame({

@@ -51,3 +51,19 @@ def test_decide_math(spark):
     # explicit flags always win
     assert decide(big, True, fanout=64) is True
     assert decide(small, False, fanout=64) is False
+
+
+def test_threshold_bytes_matches_spark_parse(spark):
+    """threshold_bytes reads every byte-size suffix Spark accepts for
+    spark.sql.autoBroadcastJoinThreshold (t/tb/p/pb included) as the
+    same byte count Spark's own conf parse gives."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    sql_conf = spark._jsparkSession.sessionState().conf()
+    try:
+        for raw in ["10MB", "1t", "1tb", "2TB", "1p", "1pb", "-1"]:
+            spark.conf.set(key, raw)
+            assert threshold_bytes(spark) == \
+                sql_conf.autoBroadcastJoinThreshold(), raw
+    finally:
+        spark.conf.set(key, old)

@@ -40,15 +40,21 @@ def test_indexed_partition_count_bounded(spark, sf_smoke, tmp_path):
 
 def test_indexed_write_parallelism_not_capped_by_pcell(spark, sf_smoke,
                                                       tmp_path):
-    """Forced-wide write: n_tasks=256 must produce >128 data files —
-    i.e. write parallelism follows the task count, not the 128 coarse
-    directories (the old repartition('pcell') capped at 128 writer
-    tasks, a straggler/giant-file factory at 100 TB) — while pruning
-    and exactness stay intact."""
+    """Forced-wide write: 256 shuffle partitions must produce >128 data
+    files — i.e. write parallelism follows the task count, not the 128
+    coarse directories (the old repartition('pcell') capped at 128
+    writer tasks, a straggler/giant-file factory at 100 TB) — while
+    pruning and exactness stay intact."""
     import glob
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
     path = str(tmp_path / "indexed_wide")
-    write_indexed(pts.select("doc_key", "mx", "my"), path, n_tasks=256)
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "256")
+    try:
+        write_indexed(pts.select("doc_key", "mx", "my"), path)
+    finally:
+        spark.conf.set(key, old)
     files = glob.glob(f"{path}/pcell=*/part-*.parquet")
     assert len(files) > 128, f"only {len(files)} data files"
     # exactness + pruning unchanged on the wide layout

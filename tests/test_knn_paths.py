@@ -1,5 +1,5 @@
-"""kNN scale paths: SAT ring expansion (no world cover), salted stage 1
-(J9), data-side predicate (F6), and the fewer-than-k-points edge —
+"""kNN scale paths: SAT ring expansion (no world cover), plan-salted
+stages (J9), data-side predicate (F6), and the fewer-than-k-points edge —
 each checked bit-exactly against a brute-force cross-join twin."""
 
 import random
@@ -41,9 +41,12 @@ def test_ring_expansion_matches_brute_force(spark, sf_smoke):
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
     qs = datagen.knn_queries(spark, sf_smoke)
     _assert_same(knn_join(pts, qs, k=25), _brute(pts, qs, k=25))
-    # the lazy plan is gone: asking for it fails before any job runs
-    with pytest.raises(ValueError, match="lazy kNN plan was removed"):
-        knn_join(pts, qs, k=25, materialize=False)
+    # the removed options (lazy plan, uncached input, uniform salt) are
+    # rejected up front
+    for removed in ({"materialize": False}, {"cache_input": False},
+                    {"salt": 8}):
+        with pytest.raises(ValueError, match="were removed"):
+            knn_join(pts, qs, k=25, **removed)
 
 
 def test_eager_deep_expansion_matches_brute_force(spark, sf_smoke):
@@ -81,20 +84,14 @@ def test_salted_knn_identical_and_nonvacuous(spark, sf_correct):
                  knn_join(pts, qs, k=10))
 
 
-def test_uniform_salt_identical(spark, sf_correct):
-    """knn_join(salt=N) — the plan-free skew knob — must be bit-exact
-    against the unsalted join (stage 1 AND stage 2 key on (cell, salt)
-    when salted), cached and uncached.  The same twin also holds
-    the shuffled shape (broadcast_queries=False, the bench.py and
-    scripts/plancmp.py gate shape): ring and cover sort-merge joined
-    against the points instead of broadcast."""
+def test_shuffled_stage_joins_identical(spark, sf_correct):
+    """The shuffled shape (broadcast_queries=False, the bench.py and
+    scripts/plancmp.py gate shape) must be bit-exact against the default
+    join: ring and cover sort-merge joined against the points instead
+    of broadcast."""
     pts = with_geometry(datagen.documents_spans(spark, sf_correct))
     qs = datagen.knn_queries(spark, sf_correct)
     base = knn_join(pts, qs, k=10)
-    _assert_same(knn_join(pts, qs, k=10, salt=8), base)
-    # the uncached path (gate protocol) must also be bit-exact
-    _assert_same(knn_join(pts, qs, k=10, salt=8, cache_input=False),
-                 base)
     # with auto-broadcast off, only the engine's own O(#cells) hints
     # broadcast — the cell-keyed stage joins must plan as sort-merge
     # (the qid joins always do), so the shuffled case cannot pass on a
@@ -174,21 +171,21 @@ def _sat_rects(counts):
 
 
 def _assert_sat_ring_counts(spark, counts):
-    """_ring_count_expr over the SAT row built by _sat_rows(counts) must
+    """ring_count_expr over the SAT row built by sat_rows(counts) must
     equal the Python sum of `counts` inside each _sat_rects rectangle.
     The brute-force kNN twins only catch an over-counting SAT (the
     bound gets too tight); an under-counting one merely loosens the
     bound, so the layout is pinned here directly."""
     from spatialgraft import config as C
-    from spatialgraft.ops.knn import _ring_count_expr, _sat_rows
+    from spatialgraft.cells import ring_count_expr, sat_rows
     rects = _sat_rects(counts)
-    sat_df = spark.createDataFrame([(_sat_rows(counts),)],
+    sat_df = spark.createDataFrame([(sat_rows(counts),)],
                                    "sat array<bigint>")
     df = spark.createDataFrame(
         [(i, *r) for i, r in enumerate(rects)],
         "rid int, _cxa bigint, _cxb bigint, _cya bigint, _cyb bigint")
     got = {r["rid"]: r["n"] for r in
-           _ring_count_expr(df, sat_df, "n").select("rid", "n").collect()}
+           ring_count_expr(df, sat_df, "n").select("rid", "n").collect()}
     for i, (xa, xb, ya, yb) in enumerate(rects):
         want = sum(n for c, n in counts.items()
                    if xa <= c // C.CELL_CY <= xb

@@ -20,9 +20,13 @@ def test_extract_roundtrip(spark, sf_smoke):
 
 
 def test_spans_preserved(spark, sf_smoke):
-    """Span-sequence invariant: extraction leaves spans untouched."""
+    """Span-sequence invariant: extraction leaves spans untouched, and
+    the full-width output keeps the input columns, then the derived
+    geometry fields, in order."""
     docs = datagen.documents_spans(spark, sf_smoke)
     out = with_geometry(docs)
+    assert out.columns == docs.columns + ["doc_key", "mx", "my", "x", "y",
+                                          "text"]
     a = docs.select("doc_id", F.to_json("spans").alias("j"))
     b = out.select("doc_id", F.to_json("spans").alias("j"))
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
