@@ -15,13 +15,17 @@ anomaly on ambient steal, not code (BENCH_BASELINE.md round 6).
 
 Usage: python scripts/plancmp.py OUT.txt  (run from the repo root)
 
-It prints the row count and the sha256 of the normalized plan, so a
-"default plan unchanged" check is one command per revision: equal
-hashes mean byte-identical plans.  The count_join operators
-(range_join_count, range_join, pip_join_count, pip_join_concave_count)
-on the same points, with the standard query boxes and polygons, go to
-OUT.txt.<op>; one extra line prints their sha256 values.  These plans
-are taken unexecuted, so no job runs for them.
+The count_join operators (range_join_count, range_join,
+pip_join_count, pip_join_concave_count) on the same points, with the
+standard query boxes and polygons, go to OUT.txt.<op>; one line prints
+their sha256 values.  These plans are taken unexecuted, so no job runs
+for them, and they are taken FIRST: Spark truncates long plan metadata
+(scan DataFilters) at a fixed length that counts the raw expression-id
+digits, so plans built after the kNN call would shift with however many
+ids the kNN code allocates.  Then the kNN line prints the row count,
+the sha256 of the normalized plan and the number of Spark jobs the
+knn_join call ran.  A "default plan unchanged" check is one command per
+revision: equal hashes mean byte-identical plans.
 """
 
 import hashlib
@@ -65,10 +69,6 @@ def main() -> None:
         "_r", F.explode(F.sequence(F.lit(0), F.lit(rep - 1))))
         .withColumn("doc_key", F.col("doc_key") * rep + F.col("_r"))
         .drop("_r"))
-    qs = datagen.knn_queries(spark, sf)
-    res = knn_join(pts, qs, k=10, broadcast_queries=False)
-    digest = _write_plan(res, out)
-    print("rows", res.count(), "sha256", digest, "->", out)
     boxes = datagen.query_boxes(spark, sf)
     polys = datagen.polygons(spark, sf)
     concave = datagen.polygons_concave(spark, sf)
@@ -80,6 +80,14 @@ def main() -> None:
     print("count_join", " ".join(
         f"{op} sha256 {_write_plan(df, f'{out}.{op}')}"
         for op, df in ops.items()))
+    qs = datagen.knn_queries(spark, sf)
+    sc = spark.sparkContext
+    sc.setJobGroup("plancmp-knn", "knn_join")
+    res = knn_join(pts, qs, k=10, broadcast_queries=False)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("plancmp-knn"))
+    sc.setJobGroup("plancmp", "plancmp")
+    digest = _write_plan(res, out)
+    print("rows", res.count(), "sha256", digest, "jobs", jobs, "->", out)
     spark.stop()
 
 

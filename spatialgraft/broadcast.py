@@ -1,13 +1,13 @@
 """Auto-selection between broadcast and shuffled multicast query sides.
 
-Every multicast join in the engine (range, intersects, PIP, kNN ring /
-stage-2 cover) takes a `broadcast_queries` flag.  True forces a driver-
+Every multicast join in the engine (range, intersects, PIP, the kNN
+cover) takes a `broadcast_queries` flag.  True forces a driver-
 side broadcast build — correct for small query sets, a driver hazard for
 huge ones; False forces a shuffled join.  The default (None) size-gates:
 the optimizer's own size estimate of the PRE-explode query side
 (`optimizedPlan().stats().sizeInBytes` — a driver-side plan statistic,
-NO job is run), multiplied by the operator's bounded fan-out (ring <= 9
-cells, box cover <= ~64 at the join cell level), compared against the
+NO job is run), multiplied by the operator's bounded fan-out (box cover
+<= ~64 cells at the join cell level), compared against the
 session's spark.sql.autoBroadcastJoinThreshold.  The decision then
 matches what a user would pick knowing the size — no flag knowledge
 required (VERDICT r2 item 4).
@@ -30,9 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# the bounded multicast fan-outs callers pass to decide() (see above)
+# the bounded multicast fan-out callers pass to decide() (see above)
 COVER_FANOUT = 64
-RING_FANOUT = 9
 
 # the byte-size suffixes Spark's byteFromString accepts (binary units)
 _UNITS = {"b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,

@@ -12,13 +12,16 @@ SpatialRdd.scala:377-397).  Everything is a Catalyst column expression
   cover(box) = explode(x-range) x explode(y-range)
 
 The same floor arithmetic serves every grid (join cells, tiles, index
-coarse cells): cell_expr / cover_cells take the grid dims.  The cell
-histogram's summed-area table (sat_rows / ring_count_expr) counts the
-points in any cell rectangle with 4 array lookups.
+coarse cells, the kNN SAT sub-grid): cell_expr / cover_cells /
+sat_rows / ring_count_sql take the grid dims.  A histogram's summed-area
+table (sat_rows / ring_count_expr) counts the points in any cell
+rectangle with 4 array lookups.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -60,46 +63,50 @@ def cover_cells(boxes: DataFrame,
             .drop("_cx", "_cy"))
 
 
-def sat_rows(counts: dict[int, int]) -> list[int]:
-    """Summed-area table (SAT) of a cell histogram: flattened inclusive
-    2-D prefix sums over the cell grid, with a zero row/column of
-    padding: entry (i, j), i in [0,CX], j in [0,CY], at 1-based index
-    i*(CY+1)+j+1, holds sum of counts over cells with cell_x < i and
-    cell_y < j.  O(#cells) memory — scale-independent."""
-    cx1, cy1 = C.CELL_CX + 1, C.CELL_CY + 1
-    sat = [0] * (cx1 * cy1)
-    for i in range(1, cx1):
-        row_acc = 0
-        base, prev = i * cy1, (i - 1) * cy1
-        for j in range(1, cy1):
-            row_acc += counts.get((i - 1) * C.CELL_CY + (j - 1), 0)
-            sat[base + j] = sat[prev + j] + row_acc
-    return sat
+def sat_rows(cells, counts, cx: int = C.CELL_CX, cy: int = C.CELL_CY
+             ) -> np.ndarray:
+    """Summed-area table (SAT) of a histogram on the cx x cy grid
+    (`cells[i]` = x * cy + y holds `counts[i]` points; ids unique):
+    flattened inclusive 2-D prefix sums with a zero row/column of
+    padding — entry (i, j), i in [0, cx], j in [0, cy], at 1-based
+    index i*(cy+1)+j+1, holds the count over cells with x < i and
+    y < j.  O(#cells) memory — scale-independent."""
+    grid = np.zeros((cx, cy), dtype=np.int64)
+    cells = np.asarray(cells, dtype=np.int64)
+    grid[cells // cy, cells % cy] = counts
+    sat = np.zeros((cx + 1, cy + 1), dtype=np.int64)
+    sat[1:, 1:] = grid.cumsum(0).cumsum(1)
+    return sat.ravel()
 
 
-def ring_count_sql(sat: str, cxa: str, cxb: str, cya: str, cyb: str
-                   ) -> str:
-    """Sum of cell counts over the inclusive cell-rectangle via 4 SAT
-    lookups (element_at is 1-based; the padding makes -1 edges safe)."""
-    cy1 = C.CELL_CY + 1
+def sat_df(spark, sat: np.ndarray) -> DataFrame:
+    """The SAT as a one-row `sat array<bigint>` DataFrame, built from a
+    pyarrow.Table (a local relation; no job, no per-entry Python)."""
+    col = pa.ListArray.from_arrays([0, len(sat)], pa.array(sat, pa.int64()))
+    return spark.createDataFrame(pa.table({"sat": col}))
 
+
+def ring_count_sql(sat: str, cxa: str, cxb: str, cya: str, cyb: str,
+                   cy: int = C.CELL_CY) -> str:
+    """Sum of counts over the inclusive cell rectangle via 4 SAT
+    lookups (element_at is 1-based; the padding makes -1 edges safe).
+    cy is the y-size of the SAT's grid."""
     def at(i: str, j: str) -> str:
         return (f"element_at({sat}, "
-                f"CAST(({i}) * {cy1} + ({j}) + 1 AS INT))")
+                f"CAST(({i}) * {cy + 1} + ({j}) + 1 AS INT))")
 
     return (f"{at(f'{cxb} + 1', f'{cyb} + 1')} - {at(cxa, f'{cyb} + 1')} "
             f"- {at(f'{cxb} + 1', cya)} + {at(cxa, cya)}")
 
 
-def ring_count_expr(df: DataFrame, sat_df: DataFrame, out: str
-                    ) -> DataFrame:
+def ring_count_expr(df: DataFrame, sat: DataFrame, out: str,
+                    cy: int = C.CELL_CY) -> DataFrame:
     """Add `out` = the point count of each row's cell rectangle
-    [_cxa, _cxb] x [_cya, _cyb]: the one-row SAT (`sat array<bigint>`,
-    from sat_rows) broadcast-cross-joined in, 4 element_at lookups
-    inline."""
-    return (df.crossJoin(F.broadcast(sat_df))
+    [_cxa, _cxb] x [_cya, _cyb]: the one-row SAT (sat_df) broadcast-
+    cross-joined in, 4 element_at lookups inline."""
+    return (df.crossJoin(F.broadcast(sat))
             .withColumn(out, F.expr(ring_count_sql(
-                "sat", "_cxa", "_cxb", "_cya", "_cyb")))
+                "sat", "_cxa", "_cxb", "_cya", "_cyb", cy)))
             .drop("sat"))
 
 

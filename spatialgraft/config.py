@@ -27,8 +27,8 @@ WORLD_MY = 180_000
 # multiply multicast cover rows and the O(#cells) driver structures.
 # Results are grid-INDEPENDENT (the grid only routes work; every
 # operator refines exactly), machine-checked by running the oracle
-# suite under a non-default grid.  All derived constants (N_CELLS,
-# Morton bit widths, SAT ring radii) follow automatically.
+# suite under a non-default grid.  All derived constants (N_CELLS, the
+# kNN SAT sub-grid and its ring radii) follow automatically.
 import os as _os
 
 CELL_CX = int(_os.environ.get("SPARK_GRAFT_CELL_CX", "256"))
@@ -37,7 +37,7 @@ CELL_CY = int(_os.environ.get("SPARK_GRAFT_CELL_CY", "128"))
 # breaks the div/pmod cell arithmetic silently, and a grid beyond 2^26
 # cells overruns the O(#cells) driver structures (histogram, SAT,
 # partition map) the design budgets for.  Non-power-of-two dims are
-# fine — the SAT expand radii derive from bit_length and span any grid.
+# fine — the kNN SAT ring radii derive from bit_length and span any grid.
 if CELL_CX < 1 or CELL_CY < 1:
     raise ValueError(
         f"SPARK_GRAFT_CELL_CX/_CY must be >= 1, got {CELL_CX}x{CELL_CY}")
@@ -100,15 +100,6 @@ STAR_OFFSETS = [
 ]
 
 DEFAULT_K = 10
-
-# kNN stage 1 samples cells denser than 3k*KNN_SAMPLE_MOD at rate
-# 1/KNN_SAMPLE_MOD: the sampled kth distance is a valid (slightly
-# looser) upper bound, and stage 2 re-joins the FULL data under that
-# bound with the dist2 filter ahead of any sort — so stage-1 sort
-# volume stops scaling with cell density (the 100 TB hotspot killer;
-# exactness is untouched because dense-ring queries are never marked
-# done in stage 1).
-KNN_SAMPLE_MOD = 8
 
 # --- real media codec content (shared Spark-UDF/DuckDB arithmetic) ------
 # Deterministic media payloads for the REAL decode path

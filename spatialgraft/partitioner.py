@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,8 +48,10 @@ class SpatialPartitioning:
         # here leaked one cached relation per plan object for session
         # lifetime (VERDICT r5 nit 2).
         if self._df is None:
-            self._df = spark.createDataFrame(
-                list(self.assignment.items()), "cell bigint, nsplits int")
+            self._df = spark.createDataFrame(pa.table({
+                "cell": pa.array(list(self.assignment), pa.int64()),
+                "nsplits": pa.array(list(self.assignment.values()),
+                                    pa.int32())}))
         return self._df
 
     def release(self) -> None:
@@ -70,15 +74,16 @@ def plan_partitions(points: DataFrame,
     one reducer never owns a whole hot cell."""
     hist = (with_cell(points)
             .groupBy("cell").count()
-            .collect())  # <= N_CELLS rows
-    counts = {int(r["cell"]): int(r["count"]) for r in hist}
-    if not counts:
+            .toArrow())  # <= N_CELLS rows
+    cells, counts = hist["cell"].to_numpy(), hist["count"].to_numpy()
+    if not len(counts):
         return SpatialPartitioning({})
-    hot = skew_ratio * max(1.0, sum(counts.values()) / len(counts))
+    hot = skew_ratio * max(1.0, counts.sum() / len(counts))
     slice_rows = max(1, int(hot))
-    return SpatialPartitioning(
-        {cell: min(n_partitions, -(-cnt // slice_rows))
-         for cell, cnt in counts.items() if cnt > hot})
+    is_hot = counts > hot
+    splits = np.minimum(n_partitions, -(-counts[is_hot] // slice_rows))
+    return SpatialPartitioning(dict(zip(cells[is_hot].tolist(),
+                                        splits.tolist())))
 
 
 def _with_nsplits(df: DataFrame, plan: SpatialPartitioning) -> DataFrame:

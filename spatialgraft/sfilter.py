@@ -14,6 +14,7 @@ The set costs one distinct(cell) stats job.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -22,8 +23,8 @@ from .cells import with_cell
 
 def presence_cells(points: DataFrame) -> set[int]:
     """Exact cell-presence set (one tiny stats job)."""
-    rows = with_cell(points).select("cell").distinct().collect()
-    return {int(r["cell"]) for r in rows}
+    return set(with_cell(points).select("cell").distinct().toArrow()
+               ["cell"].to_pylist())
 
 
 # Above this size, an isin() literal list bloats the compiled plan and
@@ -62,5 +63,5 @@ def prune_cover(cover: DataFrame, cells: set[int]) -> DataFrame:
         return cover.where(F.col("cell").isin(list(cells)))
     spark = cover.sparkSession
     present = spark.createDataFrame(
-        [(int(c),) for c in sorted(cells)], "cell bigint")
+        pa.table({"cell": pa.array(sorted(cells), pa.int64())}))
     return cover.join(F.broadcast(present), on="cell", how="left_semi")

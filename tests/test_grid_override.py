@@ -1,10 +1,10 @@
 """Non-power-of-two grid override (ADVICE r5, medium): the grid knobs
-SPARK_GRAFT_CELL_CX/_CY are deployment config; the kNN SAT ring-
-expansion radii must span ANY grid, not just power-of-two dims — under
-the old radii derivation a corner query on a 96x48 grid whose nearest
-data sat beyond cell radius 64 matched no expansion radius and was
-silently dropped (kNN returned < k rows).  Runs in a subprocess because
-the grid constants bind at module import."""
+SPARK_GRAFT_CELL_CX/_CY are deployment config; the kNN SAT ring radii
+must span ANY grid's sub-grid, not just power-of-two dims — under an
+old radii derivation a corner query on a 96x48 grid whose nearest data
+sat beyond cell radius 64 matched no radius and was silently dropped
+(kNN returned < k rows).  Runs in a subprocess because the grid
+constants bind at module import."""
 
 import os
 import subprocess
@@ -16,20 +16,21 @@ _INNER = textwrap.dedent('''
     assert os.environ["SPARK_GRAFT_CELL_CX"] == "96"
     from spatialgraft import config as C
     assert C.CELL_CX == 96 and C.CELL_CY == 48
-    from spatialgraft.ops.knn import _EXPAND_RADII
-    # the largest radius must reach the far edge of the grid
-    assert max(_EXPAND_RADII) >= max(C.CELL_CX, C.CELL_CY) - 1, \\
-        _EXPAND_RADII
+    from spatialgraft.ops import knn
+    # the sub-grid splits each cell 4x4, and the largest ring radius
+    # reaches its far edge
+    assert (knn._SCX, knn._SCY) == (4 * 96, 4 * 48)
+    assert max(knn._RADII) >= max(knn._SCX, knn._SCY) - 1, knn._RADII
     from pyspark.sql import Window
     from pyspark.sql import functions as F
     from spatialgraft.ops.knn import knn_join
     from spatialgraft.session import get_spark
     spark = get_spark("grid-override", cpus=4)
     # 30 points clustered in the far corner (cell_x ~ 95), queries in
-    # the opposite corner (cell_x 0): every 3x3 ring is empty, so the
-    # SAT expansion must reach radius ~CELL_CX - 1 = 95 to satisfy the
-    # queries.  The old power-of-two radii cap (64 for a 96-wide grid)
-    # made these queries vanish.
+    # the opposite corner (cell_x 0): the SAT ring must reach sub-cell
+    # radius ~4 * CELL_CX - 1 = 383 to satisfy the queries.  An old
+    # power-of-two radii cap (64 cells for a 96-wide grid) made such
+    # queries vanish.
     pts = spark.createDataFrame(
         [(i, 358000 + (i * 37) % 1500, 178000 + (i * 53) % 1500)
          for i in range(30)], "doc_key bigint, mx bigint, my bigint"
@@ -54,16 +55,15 @@ _INNER = textwrap.dedent('''
     assert sorted(map(tuple, got.collect())) == \
         sorted(map(tuple, want.collect()))
     # SAT ring counts equal brute-force sums on a non-power-of-two grid
-    # too (points spread over the whole 96x48 world)
-    from spatialgraft.cells import with_cell
-    from tests.test_knn_paths import _assert_sat_ring_counts
+    # and its sub-grid too (points spread over the whole world)
+    from tests.test_knn_paths import _assert_sat_ring_counts, _histogram
     spread = spark.range(500).selectExpr(
         "(id * 7919) % 360000 AS mx", "(id * 104729) % 180000 AS my")
-    cc = (with_cell(pts.select("mx", "my").unionByName(spread))
-          .groupBy("cell").agg(F.count("*").alias("cellcnt")))
-    counts = {r["cell"]: r["cellcnt"] for r in cc.collect()}
-    assert sum(counts.values()) == 530
-    _assert_sat_ring_counts(spark, counts)
+    both = pts.select("mx", "my").unionByName(spread)
+    for cx, cy in ((C.CELL_CX, C.CELL_CY), (knn._SCX, knn._SCY)):
+        counts = _histogram(both, cx, cy)
+        assert sum(counts.values()) == 530
+        _assert_sat_ring_counts(spark, counts, cx, cy)
     spark.stop()
     print("GRID-OK")
 ''')

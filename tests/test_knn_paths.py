@@ -1,6 +1,7 @@
-"""kNN scale paths: SAT ring expansion (no world cover), plan-salted
-stages (J9), data-side predicate (F6), and the fewer-than-k-points edge —
-each checked bit-exactly against a brute-force cross-join twin."""
+"""kNN scale paths: the SAT ring bound (no world cover), dense cells,
+the plan-salted join (J9), data-side predicate (F6), and the
+fewer-than-k-points and empty-table edges — each checked bit-exactly
+against a brute-force cross-join twin."""
 
 import random
 
@@ -36,8 +37,8 @@ def _assert_same(got_df, want_df):
 
 
 def test_ring_expansion_matches_brute_force(spark, sf_smoke):
-    # sf0.001 is sparse over 32k cells: k=25 underfills most 3x3 rings,
-    # exercising the SAT expansion on nearly every query
+    # sf0.001 is sparse over 32k cells: k=25 needs a SAT ring of many
+    # sub-cells on nearly every query
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
     qs = datagen.knn_queries(spark, sf_smoke)
     _assert_same(knn_join(pts, qs, k=25), _brute(pts, qs, k=25))
@@ -50,14 +51,14 @@ def test_ring_expansion_matches_brute_force(spark, sf_smoke):
 
 
 def test_eager_deep_expansion_matches_brute_force(spark, sf_smoke):
-    """Deep SAT expansion vs brute force: k=150 at sf0.001 underfills
-    every ring, so every query's stage-2 radius flows through the
-    expansion subtree (driver SAT array + explode-radii pick).  The
-    k150 contract query runs this exact path.  Also the regression
-    gate for any future expansion rewrite — an r7 candidate (inline
-    CASE-chain radius pick) was measured 2x slower from lateral-alias
-    expression inlining and rejected (OPTIMIZATION_r07.md,
-    bench_records/r7_expandpick_ab_sf01.jsonl)."""
+    """Deep SAT bound vs brute force: k=150 at sf0.001 needs a wide
+    sub-cell ring for every query, so every kth bound comes from a
+    large radius of the driver-built SAT (one filter over the candidate
+    radii).  The k150 contract query runs this exact path.  Also the
+    regression gate for any future bound rewrite — an r7 candidate
+    (inline CASE-chain radius pick) was measured 2x slower from
+    lateral-alias expression inlining and rejected
+    (OPTIMIZATION_r07.md, bench_records/r7_expandpick_ab_sf01.jsonl)."""
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
     qs = datagen.knn_queries(spark, sf_smoke)
     _assert_same(knn_join(pts, qs, k=150), _brute(pts, qs, k=150))
@@ -74,6 +75,52 @@ def test_fewer_points_than_k(spark, sf_smoke):
     _assert_same(got, _brute(pts, qs, k=10))
 
 
+def test_empty_table(spark, sf_smoke):
+    pts = with_geometry(datagen.documents_spans(spark, sf_smoke)).where(
+        F.lit(False))
+    qs = datagen.knn_queries(spark, sf_smoke).limit(7)
+    assert knn_join(pts, qs, k=10).count() == 0
+
+
+def test_dense_cells_match_brute_force(spark, sf_smoke):
+    """Every location holds COPIES >= k points (the replicated-input
+    shape of the x2304 gate), so each query's bound comes from its own
+    sub-cell at radius 0; k > COPIES must reach past the copies of the
+    nearest location.  Unsalted and with a hot-cell plan."""
+    copies = 12
+    base = with_geometry(datagen.documents_spans(spark, sf_smoke))
+    pts = (base.withColumn("_r", F.explode(F.sequence(F.lit(0),
+                                                      F.lit(copies - 1))))
+           .withColumn("doc_key", F.col("doc_key") * copies + F.col("_r"))
+           .drop("_r"))
+    qs = datagen.knn_queries(spark, sf_smoke).limit(40)
+    plan = plan_partitions(pts.select("doc_key", "mx", "my"))
+    assert plan.max_splits > 1, "no salted cell: the plan leg is vacuous"
+    for k in (10, 25):
+        want = _brute(pts, qs, k)
+        _assert_same(knn_join(pts, qs, k=k), want)
+        _assert_same(knn_join(pts, qs, k=k, plan=plan), want)
+
+
+# Spark jobs one knn_join call runs at sf0.001, as measured: the sub-cell
+# histogram collect and the result count with their query stages and
+# broadcasts.  An added stage or driver collect fails here.
+KNN_JOBS_MAX = 11
+
+
+def test_knn_job_count_pinned(spark, sf_smoke):
+    pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
+    qs = datagen.knn_queries(spark, sf_smoke)
+    sc = spark.sparkContext
+    sc.setJobGroup("test-knn-jobs", "knn_join job count")
+    try:
+        knn_join(pts, qs, k=10).unpersist()
+        jobs = sc.statusTracker().getJobIdsForGroup("test-knn-jobs")
+    finally:
+        sc.setJobGroup("test-knn-jobs-done", "")
+    assert 0 < len(jobs) <= KNN_JOBS_MAX, sorted(jobs)
+
+
 def test_salted_knn_identical_and_nonvacuous(spark, sf_correct):
     pts = with_geometry(datagen.documents_spans(spark, sf_correct))
     qs = datagen.knn_queries(spark, sf_correct)
@@ -87,46 +134,35 @@ def test_salted_knn_identical_and_nonvacuous(spark, sf_correct):
 def test_shuffled_stage_joins_identical(spark, sf_correct):
     """The shuffled shape (broadcast_queries=False, the bench.py and
     scripts/plancmp.py gate shape) must be bit-exact against the default
-    join: ring and cover sort-merge joined against the points instead
-    of broadcast."""
+    join: the cover sort-merge joined against the points instead of
+    broadcast."""
     pts = with_geometry(datagen.documents_spans(spark, sf_correct))
     qs = datagen.knn_queries(spark, sf_correct)
     base = knn_join(pts, qs, k=10)
+    want = base.toPandas()
+    # drop the persisted result first: the shuffled call's plan differs
+    # from it only by join hints, which the cache lookup ignores, so the
+    # shuffled call would read this result back instead of running
+    base.unpersist()
     # with auto-broadcast off, only the engine's own O(#cells) hints
-    # broadcast — the cell-keyed stage joins must plan as sort-merge
-    # (the qid joins always do), so the shuffled case cannot pass on a
-    # broadcast plan
+    # broadcast — the cell-keyed join must plan as sort-merge, so the
+    # shuffled case cannot pass on a broadcast plan
     thr_key = "spark.sql.autoBroadcastJoinThreshold"
     thr = spark.conf.get(thr_key)
     spark.conf.set(thr_key, "-1")
     try:
         got = knn_join(pts, qs, k=10, broadcast_queries=False)
         plan = got._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin [cell#" in plan, "stage joins not shuffled"
-        _assert_same(got, base)
+        assert "SortMergeJoin [cell#" in plan, "cover join not shuffled"
+        _assert_same(got, spark.createDataFrame(want))
     finally:
         spark.conf.set(thr_key, thr)
 
 
-def test_sampling_short_circuit_identical(spark, sf_smoke, monkeypatch):
-    # the same input answered through both stage-1 regimes — sampling
-    # forced on (threshold 0 via KNN_SAMPLE_MOD=1 -> every cell with
-    # >= 3k points samples) vs the driver-side short-circuit when no
-    # cell crosses the threshold — must be bit-identical
-    from spatialgraft import config as C
-    pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
-    qs = datagen.knn_queries(spark, sf_smoke).limit(50)
-    fast = knn_join(pts, qs, k=3)
-    monkeypatch.setattr(C, "KNN_SAMPLE_MOD", 1)
-    sampled = knn_join(pts, qs, k=3)
-    _assert_same(sampled, fast)
-
-
 def test_k150_matches_brute_force(spark, sf_smoke, sf_correct):
     """Reference-scale k (its benchmarks run k up to 200,
-    reference README.md:51): k=150 exercises deep SAT expansion at
-    sf0.001 (most rings underfill) and the dense pre-rank/sampling
-    machinery at sf0.01 — both must stay bit-exact."""
+    reference README.md:51): k=150 exercises wide SAT rings at sf0.001
+    and the dense pre-rank at sf0.01 — both must stay bit-exact."""
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
     qs = datagen.knn_queries(spark, sf_smoke)
     _assert_same(knn_join(pts, qs, k=150), _brute(pts, qs, k=150))
@@ -144,24 +180,23 @@ def test_knn_pred_matches_filtered_brute_force(spark, sf_smoke):
                  _brute(pts, qs, k=5, pred=F.expr(pred)))
 
 
-def _sat_rects(counts):
-    """Cell rectangles (cxa, cxb, cya, cyb), inclusive, for the SAT
-    check: the full grid, the four edge rows/columns, the four corner
-    cells and every populated cell alone, clipped rings (the _RECT
-    shape) of several radii around populated and corner cells, and
-    seeded random rectangles."""
-    from spatialgraft import config as C
-    cx1, cy1 = C.CELL_CX - 1, C.CELL_CY - 1
+def _sat_rects(counts, cx, cy):
+    """Cell rectangles (cxa, cxb, cya, cyb), inclusive, on the cx x cy
+    grid for the SAT check: the full grid, the four edge rows/columns,
+    the four corner cells and populated cells alone, clipped rings of
+    several radii around populated and corner cells, and seeded random
+    rectangles."""
+    cx1, cy1 = cx - 1, cy - 1
     rects = {(0, cx1, 0, cy1),
              (0, cx1, 0, 0), (0, cx1, cy1, cy1),
              (0, 0, 0, cy1), (cx1, cx1, 0, cy1)}
     homes = [(0, 0), (0, cy1), (cx1, 0), (cx1, cy1)]
-    homes += [divmod(c, C.CELL_CY) for c in sorted(counts)[:50]]
-    for cx, cy in homes:
-        rects.add((cx, cx, cy, cy))
-        for r in (1, 2, 5, 17, max(C.CELL_CX, C.CELL_CY)):
-            rects.add((max(cx - r, 0), min(cx + r, cx1),
-                       max(cy - r, 0), min(cy + r, cy1)))
+    homes += [divmod(c, cy) for c in sorted(counts)[:50]]
+    for hx, hy in homes:
+        rects.add((hx, hx, hy, hy))
+        for r in (1, 2, 5, 17, max(cx, cy)):
+            rects.add((max(hx - r, 0), min(hx + r, cx1),
+                       max(hy - r, 0), min(hy + r, cy1)))
     rng = random.Random(7)
     for _ in range(100):
         xa, xb = sorted(rng.randint(0, cx1) for _ in range(2))
@@ -170,46 +205,53 @@ def _sat_rects(counts):
     return sorted(rects)
 
 
-def _assert_sat_ring_counts(spark, counts):
-    """ring_count_expr over the SAT row built by sat_rows(counts) must
-    equal the Python sum of `counts` inside each _sat_rects rectangle.
-    The brute-force kNN twins only catch an over-counting SAT (the
-    bound gets too tight); an under-counting one merely loosens the
-    bound, so the layout is pinned here directly."""
-    from spatialgraft import config as C
-    from spatialgraft.cells import ring_count_expr, sat_rows
-    rects = _sat_rects(counts)
-    sat_df = spark.createDataFrame([(sat_rows(counts),)],
-                                   "sat array<bigint>")
+def _histogram(points, cx, cy):
+    from spatialgraft.cells import cell_expr
+    return {r["c"]: r["n"] for r in
+            points.groupBy(cell_expr(cx=cx, cy=cy).alias("c"))
+            .agg(F.count("*").alias("n")).collect()}
+
+
+def _assert_sat_ring_counts(spark, counts, cx, cy):
+    """ring_count_expr over the SAT built by sat_rows from `counts`
+    (cell -> n on the cx x cy grid) must equal the Python sum of
+    `counts` inside each _sat_rects rectangle.  The brute-force kNN
+    twins only catch an over-counting SAT (the bound gets too tight);
+    an under-counting one merely loosens the bound, so the layout is
+    pinned here directly."""
+    from spatialgraft.cells import ring_count_expr, sat_df, sat_rows
+    rects = _sat_rects(counts, cx, cy)
+    sat = sat_df(spark, sat_rows(list(counts), list(counts.values()),
+                                 cx, cy))
     df = spark.createDataFrame(
         [(i, *r) for i, r in enumerate(rects)],
         "rid int, _cxa bigint, _cxb bigint, _cya bigint, _cyb bigint")
     got = {r["rid"]: r["n"] for r in
-           ring_count_expr(df, sat_df, "n").select("rid", "n").collect()}
+           ring_count_expr(df, sat, "n", cy).select("rid", "n").collect()}
     for i, (xa, xb, ya, yb) in enumerate(rects):
         want = sum(n for c, n in counts.items()
-                   if xa <= c // C.CELL_CY <= xb
-                   and ya <= c % C.CELL_CY <= yb)
+                   if xa <= c // cy <= xb and ya <= c % cy <= yb)
         assert got[i] == want, ((xa, xb, ya, yb), got[i], want)
 
 
 def test_sat_ring_count_matches_brute_sum(spark, sf_smoke):
-    from spatialgraft.cells import with_cell
-    pts = with_cell(with_geometry(datagen.documents_spans(spark, sf_smoke)))
-    counts = {r["cell"]: r["cellcnt"] for r in
-              pts.groupBy("cell").agg(F.count("*").alias("cellcnt"))
-              .collect()}
-    assert len(counts) > 100  # non-vacuous
-    _assert_sat_ring_counts(spark, counts)
-    _assert_sat_ring_counts(spark, {})
+    """On the join-cell grid and on the kNN bound's sub-grid."""
+    from spatialgraft import config as C
+    from spatialgraft.ops import knn
+    pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
+    for cx, cy in ((C.CELL_CX, C.CELL_CY), (knn._SCX, knn._SCY)):
+        counts = _histogram(pts, cx, cy)
+        assert len(counts) > 100  # non-vacuous
+        _assert_sat_ring_counts(spark, counts, cx, cy)
+        _assert_sat_ring_counts(spark, {}, cx, cy)
 
 
 def test_stage2_cover_prune_wired(spark, sf_smoke):
-    """VERDICT r4 item 6: the stage-2 cover is presence-pruned (X6 ->
-    J7).  Wiring check: the result's plan carries the left-semi prune;
-    the quantitative headroom on the sparse sf0.001 fixture is large (most
-    of the 32k cells hold no data, so most world-cover multicast rows
-    die before the stage-2 shuffle).  Exactness of the pruned path is
+    """VERDICT r4 item 6: the cover is presence-pruned (X6 -> J7).
+    Wiring check: the result's plan carries the left-semi prune; the
+    quantitative headroom on the sparse sf0.001 fixture is large (most
+    of the 32k cells hold no data, so most cover multicast rows die
+    before the shuffle).  Exactness of the pruned path is
     covered by the brute-force twins above, which all run through it."""
     from spatialgraft import config as C
     from spatialgraft.sfilter import presence_cells
@@ -217,7 +259,7 @@ def test_stage2_cover_prune_wired(spark, sf_smoke):
     qs = datagen.knn_queries(spark, sf_smoke)
     plan = (knn_join(pts, qs, k=25)
             ._jdf.queryExecution().optimizedPlan().toString())
-    assert "LeftSemi" in plan, "stage-2 cover prune not in the plan"
+    assert "LeftSemi" in plan, "cover prune not in the plan"
     present = presence_cells(pts)
     assert len(present) < 0.2 * C.N_CELLS, \
         "sf0.001 fixture unexpectedly dense; prune test is vacuous"
@@ -240,21 +282,20 @@ def test_generated_input_matches_brute_force(spark, sf_smoke):
 
 
 def test_broadcast_gate_counts_salt(spark, sf_smoke):
-    """ADVICE r5: the ring/cover auto-broadcast gate must multiply the
+    """ADVICE r5: the cover auto-broadcast gate must multiply the
     fan-out by the effective salt replication of the multicast side."""
-    from spatialgraft.broadcast import plan_size_bytes, threshold_bytes
-    from spatialgraft.ops.knn import _bc_gates
+    from spatialgraft.broadcast import (COVER_FANOUT, plan_size_bytes,
+                                        threshold_bytes)
+    from spatialgraft.ops.knn import _bc_gate
     qs = datagen.knn_queries(spark, sf_smoke)
     est, thr = plan_size_bytes(qs), threshold_bytes(spark)
-    assert 0 < est * 9 <= thr, "fixture: unsalted ring must fit"
-    ring1, _cover1 = _bc_gates(qs, 1, None)
-    assert ring1
-    big_salt = int(thr // (est * 9) + 1)
-    ring_s, cover_s = _bc_gates(qs, big_salt, None)
-    assert not ring_s and not cover_s
+    assert 0 < est * COVER_FANOUT <= thr, "fixture: unsalted cover must fit"
+    assert _bc_gate(qs, 1, None)
+    big_salt = int(thr // (est * COVER_FANOUT) + 1)
+    assert not _bc_gate(qs, big_salt, None)
     # explicit flags still win over the gate
-    assert _bc_gates(qs, big_salt, True) == (True, True)
-    assert _bc_gates(qs, 1, False) == (False, False)
+    assert _bc_gate(qs, big_salt, True) is True
+    assert _bc_gate(qs, 1, False) is False
 
 
 def test_cache_sizing_advisory(spark):
