@@ -24,8 +24,12 @@ for them, and they are taken FIRST: Spark truncates long plan metadata
 digits, so plans built after the kNN call would shift with however many
 ids the kNN code allocates.  Then the kNN line prints the row count,
 the sha256 of the normalized plan and the number of Spark jobs the
-knn_join call ran.  A "default plan unchanged" check is one command per
-revision: equal hashes mean byte-identical plans.
+knn_join call ran.  Last, the skew-scheduled range_join_count_salted
+(salted by plan_partitions on the same points, which runs one histogram
+job) goes to OUT.txt.range_join_count_salted and prints its sha256; it
+comes after the kNN line so that it cannot shift the hashes above.  A
+"default plan unchanged" check is one command per revision: equal
+hashes mean byte-identical plans.
 """
 
 import hashlib
@@ -43,6 +47,7 @@ from spatialgraft.extract import with_geometry  # noqa: E402
 from spatialgraft.ops import pip as pops  # noqa: E402
 from spatialgraft.ops import range as rops  # noqa: E402
 from spatialgraft.ops.knn import knn_join  # noqa: E402
+from spatialgraft.partitioner import plan_partitions  # noqa: E402
 from spatialgraft.session import get_spark  # noqa: E402
 
 
@@ -88,6 +93,10 @@ def main() -> None:
     sc.setJobGroup("plancmp", "plancmp")
     digest = _write_plan(res, out)
     print("rows", res.count(), "sha256", digest, "jobs", jobs, "->", out)
+    plan = plan_partitions(pts.select("doc_key", "mx", "my"))
+    salted = rops.range_join_count_salted(pts, boxes, plan)
+    print("range_join_count_salted sha256", _write_plan(
+        salted, f"{out}.range_join_count_salted"))
     spark.stop()
 
 

@@ -13,9 +13,10 @@ SpatialRdd.scala:377-397).  Everything is a Catalyst column expression
 
 The same floor arithmetic serves every grid (join cells, tiles, index
 coarse cells, the kNN SAT sub-grid): cell_expr / cover_cells /
-sat_rows / ring_count_sql take the grid dims.  A histogram's summed-area
-table (sat_rows / ring_count_expr) counts the points in any cell
-rectangle with 4 array lookups.
+cover_ids (its driver-side twin) / sat_rows / ring_count_sql take the
+grid dims.  A histogram's summed-area table (sat_rows /
+ring_count_expr) counts the points in any cell rectangle with 4 array
+lookups.
 """
 
 from __future__ import annotations
@@ -61,6 +62,18 @@ def cover_cells(boxes: DataFrame,
             .withColumn("_cy", F.explode(F.sequence(cy0, cy1)))
             .withColumn(out, F.col("_cx") * cy + F.col("_cy"))
             .drop("_cx", "_cy"))
+
+
+def cover_ids(xmin: int, ymin: int, xmax: int, ymax: int,
+              cx: int = C.CELL_CX, cy: int = C.CELL_CY) -> list[int]:
+    """Python twin of cover_cells for one milli box: the ids of the
+    cells it covers on the cx x cy grid, with the same floor arithmetic
+    (driver-side planning: sFilter ratios, index directory pruning)."""
+    return [x * cy + y
+            for x in range(xmin * cx // C.WORLD_MX,
+                           xmax * cx // C.WORLD_MX + 1)
+            for y in range(ymin * cy // C.WORLD_MY,
+                           ymax * cy // C.WORLD_MY + 1)]
 
 
 def sat_rows(cells, counts, cx: int = C.CELL_CX, cy: int = C.CELL_CY
@@ -110,25 +123,41 @@ def ring_count_expr(df: DataFrame, sat: DataFrame, out: str,
             .drop("sat"))
 
 
+def cover_broadcast(queries: DataFrame, flag: bool | None,
+                    plan=None) -> bool:
+    """The one broadcast gate of a cover (multicast) side: the box-cover
+    fan-out (~64 cells) times the plan's salt replication (its largest
+    `nsplits`; 1 without a plan), size-gated by
+    spatialgraft.broadcast.decide.  An explicit flag wins; no job runs."""
+    splits = 1 if plan is None else plan.max_splits
+    return decide(queries, flag, COVER_FANOUT * splits)
+
+
 def cover_join(points: DataFrame, queries: DataFrame,
                broadcast: bool | None, refine: str,
-               presence: set[int] | None = None) -> DataFrame:
-    """The cover -> equi-join -> refine kernel shared by the range and
-    PIP joins: points (mx, my) get their cell, each query is multicast to
-    the cells its bbox (xmin..ymax) covers, the two hash-join on `cell`,
-    and the exact `refine` SQL predicate keeps the true matches.
+               plan=None) -> DataFrame:
+    """The cover -> equi-join -> refine kernel shared by the range,
+    PIP and salted range joins: points (mx, my) get their cell, each
+    query is multicast to the cells its bbox (xmin..ymax) covers, the
+    two hash-join on `cell`, and the exact `refine` SQL predicate keeps
+    the true matches.
 
     broadcast: None = auto size-gate of the multicast side
-    (spatialgraft.broadcast.decide); True/False force.
-    presence: optional sFilter cell-presence set — multicast rows whose
-    cell holds no data are dropped before the shuffle
-    (spatialgraft.sfilter.prune_cover)."""
+    (cover_broadcast); True/False force.
+    plan: optional SpatialPartitioning — both sides are salted in
+    spatialgraft.partitioner's salt format (a point goes to one slice
+    of its cell, a cover row to every slice) and the join keys on
+    (cell, salt), so no single task owns a whole hot cell."""
     pts = with_cell(points)
-    bc = decide(queries, broadcast, COVER_FANOUT)
+    bc = cover_broadcast(queries, broadcast, plan)
     cover = cover_cells(queries)
-    if presence is not None:
-        from .sfilter import prune_cover
-        cover = prune_cover(cover, presence)
+    keys = "cell"
+    if plan is not None:
+        # imported here: partitioner imports with_cell from this module
+        from .partitioner import salt_multicast, salt_points
+        pts = salt_points(pts, pts.columns, plan)
+        cover = salt_multicast(cover, queries.columns, plan)
+        keys = ["cell", "salt"]
     if bc:
         cover = F.broadcast(cover)
-    return pts.join(cover, on="cell", how="inner").where(F.expr(refine))
+    return pts.join(cover, on=keys, how="inner").where(F.expr(refine))

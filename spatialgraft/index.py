@@ -17,8 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import config as C
-from .cells import cell_expr, with_cell
+from .cells import cell_expr, cover_ids, with_cell
 
 # 16 x 8 = 128 directories — bounded regardless of data size.
 PCOARSE_X = 16
@@ -58,16 +57,6 @@ def read_indexed(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def _pcell_cover(xmin: int, ymin: int, xmax: int, ymax: int) -> list[int]:
-    px0 = xmin * PCOARSE_X // C.WORLD_MX
-    px1 = xmax * PCOARSE_X // C.WORLD_MX
-    py0 = ymin * PCOARSE_Y // C.WORLD_MY
-    py1 = ymax * PCOARSE_Y // C.WORLD_MY
-    return [px * PCOARSE_Y + py
-            for px in range(px0, px1 + 1)
-            for py in range(py0, py1 + 1)]
-
-
 def range_filter_indexed(spark: SparkSession, path: str,
                          xmin: int, ymin: int, xmax: int, ymax: int
                          ) -> DataFrame:
@@ -76,6 +65,7 @@ def range_filter_indexed(spark: SparkSession, path: str,
     pushed to parquet row groups."""
     df = read_indexed(spark, path)
     return df.where(
-        F.col("pcell").isin(_pcell_cover(xmin, ymin, xmax, ymax)) &
+        F.col("pcell").isin(cover_ids(xmin, ymin, xmax, ymax,
+                                       PCOARSE_X, PCOARSE_Y)) &
         (F.col("mx") >= xmin) & (F.col("mx") <= xmax) &
         (F.col("my") >= ymin) & (F.col("my") <= ymax))

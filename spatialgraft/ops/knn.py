@@ -68,9 +68,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import config as C
-from ..broadcast import COVER_FANOUT, decide
-from ..cells import (cell_expr, cover_cells, ring_count_sql, sat_df,
-                     sat_rows, with_cell)
+from ..cells import (cell_expr, cover_broadcast, cover_cells,
+                     ring_count_sql, sat_df, sat_rows, with_cell)
 from ..partitioner import salt_multicast, salt_points
 from ..sfilter import prune_cover
 
@@ -246,14 +245,6 @@ def _warn_if_cache_exceeds_storage(spark, total_rows: int) -> bool:
     return True
 
 
-def _bc_gate(queries: DataFrame, eff_salt: int, flag: bool | None
-             ) -> bool:
-    """Resolve the cover's broadcast decision: the multicast fan-out
-    (~64 cells) TIMES the effective salt replication, size-gated by
-    spatialgraft.broadcast.decide (explicit flag wins, no job runs)."""
-    return decide(queries, flag, COVER_FANOUT * eff_salt)
-
-
 def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
              broadcast_queries: bool | None = None,
              pred: Column | str | None = None,
@@ -277,10 +268,11 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     pred: optional extra data-side predicate (knnFilter semantics, F6).
     plan: optional SpatialPartitioning -> salt hot cells in the join
     (J9).
-    broadcast_queries: None = auto size-gate of the cover (fan-out ~64
-    times the plan's salt replication) against the session broadcast
-    threshold, from the optimizer's plan-size estimate — no job runs.
-    True/False force.
+    broadcast_queries: None = auto size-gate of the cover
+    (cells.cover_broadcast, the range/PIP gate: fan-out ~64 times the
+    plan's salt replication) against the session broadcast threshold,
+    from the optimizer's plan-size estimate — no job runs.  True/False
+    force.
 
     salt / materialize / cache_input: accepted for existing callers;
     only the defaults (None / True / True) are valid, anything else
@@ -308,12 +300,7 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
             "input and the lazy plan were removed; salt hot cells with "
             "plan= instead")
     spark = points.sparkSession
-    # with a plan whose hottest cell splits N ways the cover rows are
-    # replicated a further N times by salt_multicast, so the broadcast
-    # size gate must count it (ADVICE r5: a salted query side up to Nx
-    # over the threshold could still be force-broadcast)
-    bc_cover = _bc_gate(queries, plan.max_splits if plan is not None
-                        else 1, broadcast_queries)
+    bc_cover = cover_broadcast(queries, broadcast_queries, plan)
     if pred is not None:
         points = points.where(pred if isinstance(pred, Column)
                               else F.expr(pred))

@@ -16,38 +16,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..broadcast import COVER_FANOUT, decide as _decide_broadcast
-from ..cells import cover_cells, cover_join, with_cell
-from ..partitioner import SpatialPartitioning, salt_multicast, salt_points
+from ..cells import cell_expr, cover_broadcast, cover_cells, cover_join
 
 CONTAINS = ("mx >= xmin AND mx <= xmax AND "
             "my >= ymin AND my <= ymax")
-
-# None = auto: size-gate the multicast side against the session
-# broadcast threshold (spatialgraft.broadcast.decide) — a huge query
-# set shuffles instead of building a driver-side broadcast, with no
-# flag knowledge required.  Explicit True/False still force.
-_BROADCAST_DEFAULT: bool | None = None
-
-
-def _joined(points: DataFrame, boxes: DataFrame,
-            broadcast_queries: bool | None = _BROADCAST_DEFAULT,
-            presence: set[int] | None = None,
-            pred: str | None = None) -> DataFrame:
-    """points (with mx,my) x boxes (milli bbox) -> matched pairs.
-
-    `presence`: optional sFilter cell-presence set — multicast rows whose
-    cell holds no data are dropped before the shuffle
-    (spatialgraft.sfilter; exact version of the reference's sFilter
-    pruning, SBQTree.scala:46-257).
-    `pred`: optional extra data-side predicate — the reference's
-    `z: Entry[V] => Boolean` argument on rangeFilter/sjoin
-    (SpatialRdd.scala:117,264); applied before the join so it pushes
-    into the scan."""
-    if pred is not None:
-        points = points.where(F.expr(pred) if isinstance(pred, str)
-                              else pred)
-    return cover_join(points, boxes, broadcast_queries, CONTAINS, presence)
 
 
 def range_filter(points: DataFrame, xmin: int, ymin: int,
@@ -63,29 +35,29 @@ def range_filter(points: DataFrame, xmin: int, ymin: int,
 
 
 def range_join(points: DataFrame, boxes: DataFrame,
-               broadcast_queries: bool | None = _BROADCAST_DEFAULT,
-               presence: set[int] | None = None,
-               pred: str | None = None) -> DataFrame:
+               broadcast_queries: bool | None = None) -> DataFrame:
     """sjoin (J1): (box_id, doc_key) matched pairs.
+
+    broadcast_queries: None = auto size-gate of the multicast side
+    (cells.cover_broadcast) — a huge query set shuffles instead of
+    building a driver-side broadcast; True/False force.
 
     Pairs are unique by construction — a point belongs to exactly one
     cell and a box's cover lists each cell once — so no distinct shuffle
     is needed (the reference dedupes because its multicast can route one
     box to a partition several times, SpatialRdd.scala:264-284; our cell
     cover cannot)."""
-    j = _joined(points, boxes, broadcast_queries, presence, pred)
-    return j.select("box_id", "doc_key")
+    return (cover_join(points, boxes, broadcast_queries, CONTAINS)
+            .select("box_id", "doc_key"))
 
 
 def range_join_count(points: DataFrame, boxes: DataFrame,
-                     broadcast_queries: bool | None = _BROADCAST_DEFAULT,
-                     presence: set[int] | None = None,
-                     pred: str | None = None) -> DataFrame:
+                     broadcast_queries: bool | None = None) -> DataFrame:
     """rjoin (J2) with count aggregate — the SpatialJoinApp query
     (reference examples/SpatialJoinApp.scala:81-96)."""
     # Within one box's cover, cells never overlap, so each (box, point)
     # pair appears exactly once: count needs no dedup.
-    j = _joined(points, boxes, broadcast_queries, presence, pred)
+    j = cover_join(points, boxes, broadcast_queries, CONTAINS)
     return j.groupBy("box_id").agg(F.count("*").alias("cnt"))
 
 
@@ -102,7 +74,7 @@ INTERSECTS = ("d_xmin <= xmax AND xmin <= d_xmax AND "
 
 
 def intersects_join(dboxes: DataFrame, qboxes: DataFrame,
-                    broadcast_queries: bool | None = _BROADCAST_DEFAULT
+                    broadcast_queries: bool | None = None
                     ) -> DataFrame:
     """F3: box-data x box-query intersects join -> (box_id, dbox_id).
 
@@ -114,13 +86,11 @@ def intersects_join(dboxes: DataFrame, qboxes: DataFrame,
     reference-point rule (only the cell owning the intersection's
     lower-left corner reports it), so no distinct shuffle is needed —
     the standard dedup-free partitioned spatial-join shape."""
-    from ..cells import cell_expr
-
     d = cover_cells(dboxes.selectExpr(
         "dbox_id", "xmin AS d_xmin", "ymin AS d_ymin",
         "xmax AS d_xmax", "ymax AS d_ymax"),
         xmin="d_xmin", ymin="d_ymin", xmax="d_xmax", ymax="d_ymax")
-    bc = _decide_broadcast(qboxes, broadcast_queries, COVER_FANOUT)
+    bc = cover_broadcast(qboxes, broadcast_queries)
     q = cover_cells(qboxes)
     if bc:
         q = F.broadcast(q)
@@ -137,18 +107,13 @@ def range_join_count_salted(points: DataFrame, boxes: DataFrame,
     """J8: skew-scheduled range join — the explicit analogue of the
     reference's joinScheduler (scheduler/joinScheduler.scala:102-167).
 
-    Hot cells (from the exact cell histogram in `plan`) are split into
-    `nsplits` salt slices: the data side hashes into one slice, the
-    multicast query side replicates across all slices, and the join key
-    becomes (cell, salt) — so no single reducer owns a whole hot cell
-    even when AQE's probe-side splitting isn't enough.  The salt format
-    is spatialgraft.partitioner's.  Results are identical to
-    range_join_count (tested)."""
-    assert isinstance(plan, SpatialPartitioning)
-    pts = salt_points(with_cell(points), ["cell", "mx", "my", "doc_key"],
-                      plan)
-    cover = salt_multicast(cover_cells(boxes),
-                           ["box_id", "xmin", "ymin", "xmax", "ymax"], plan)
-    j = (pts.join(cover, on=["cell", "salt"], how="inner")
-         .where(F.expr(CONTAINS)))
+    Hot cells (from the exact cell histogram in the SpatialPartitioning
+    `plan`) are split into `nsplits` salt slices: the data side hashes
+    into one slice, the multicast query side replicates across all
+    slices, and the join keys on (cell, salt) — so no single reducer
+    owns a whole hot cell even when AQE's probe-side splitting isn't
+    enough.  The same cells.cover_join kernel as range_join_count, so
+    the cover's auto broadcast gate counts the salt replication.
+    Results are identical to range_join_count (tested)."""
+    j = cover_join(points, boxes, None, CONTAINS, plan)
     return j.groupBy("box_id").agg(F.count("*").alias("cnt"))

@@ -30,9 +30,3 @@ def tiles_for_boxes(boxes: DataFrame, id_col: str = "box_id") -> DataFrame:
     """raster->vector: one row per (id, overlapped tile)."""
     return (cover_cells(boxes, cx=C.TILE_TX, cy=C.TILE_TY, out="tile")
             .select(id_col, "tile"))
-
-
-def tile_histogram(points: DataFrame) -> DataFrame:
-    """Per-tile doc counts — the rollup feeding raster rendering."""
-    return (points.select(tile_expr().alias("tile"))
-            .groupBy("tile").agg(F.count("*").alias("cnt")))

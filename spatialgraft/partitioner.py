@@ -54,16 +54,6 @@ class SpatialPartitioning:
                                     pa.int32())}))
         return self._df
 
-    def release(self) -> None:
-        """Drop the memoized map DataFrame (and any cache a caller may
-        have layered on it).  to_df() after release() rebuilds it."""
-        if self._df is not None:
-            try:
-                self._df.unpersist()
-            except Exception:
-                pass
-            self._df = None
-
 
 def plan_partitions(points: DataFrame,
                     n_partitions: int = C.DEFAULT_PARTITIONS,

@@ -18,7 +18,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cells import with_cell
+from .cells import cover_ids, with_cell
 
 
 def presence_cells(points: DataFrame) -> set[int]:
@@ -41,16 +41,9 @@ def query_box_with_p(cells: set[int],
     the presence set instead of a lossy bit tree.  1.0 = the box can be
     skipped entirely; a scheduler can deprioritize boxes above a
     threshold before any shuffle."""
-    from . import config as C
-    cx0 = xmin * C.CELL_CX // C.WORLD_MX
-    cx1 = xmax * C.CELL_CX // C.WORLD_MX
-    cy0 = ymin * C.CELL_CY // C.WORLD_MY
-    cy1 = ymax * C.CELL_CY // C.WORLD_MY
-    total = (cx1 - cx0 + 1) * (cy1 - cy0 + 1)
-    empty = sum(1 for cx in range(cx0, cx1 + 1)
-                for cy in range(cy0, cy1 + 1)
-                if cx * C.CELL_CY + cy not in cells)
-    return empty / total if total else 1.0
+    ids = cover_ids(xmin, ymin, xmax, ymax)
+    empty = sum(1 for c in ids if c not in cells)
+    return empty / len(ids) if ids else 1.0
 
 
 def prune_cover(cover: DataFrame, cells: set[int]) -> DataFrame:

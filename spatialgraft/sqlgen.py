@@ -32,18 +32,26 @@ POINTS_KEYS_INNER = ("SELECT DISTINCT CAST(l_orderkey AS BIGINT) * 8 "
                      "+ CAST(l_linenumber AS BIGINT) AS k FROM lineitem")
 
 
-def _points_fragments(dialect: str) -> dict[str, str]:
-    """Aliased derived-column expressions over a relation with column k.
-    Single source of truth for points_cte AND datagen.documents_spans
-    (which derives AFTER its slim key shuffle) — the emitted CTE text is
-    byte-identical to pre-refactor (tests/test_sqlgen_text_pinned.py)."""
-    k = "k"
+def _point_location(k: str) -> tuple[str, str]:
+    """The (mx, my) CASE expressions of document key column k: a hashed
+    world position, every 5th key moved into the hotspot.  Shared by
+    the points and the data-box derivations."""
     h1 = f"(({k} * {C.PT_A1} + {C.PT_B1}) % {C.WORLD_MX})"
     h2 = f"(({k} * {C.PT_A2} + {C.PT_B2}) % {C.WORLD_MY})"
     mx = (f"(CASE WHEN {k} % 5 = 0 THEN {C.HOT_MX0} + ({h1} % {C.HOT_MXW}) "
           f"ELSE {h1} END)")
     my = (f"(CASE WHEN {k} % 5 = 0 THEN {C.HOT_MY0} + ({h2} % {C.HOT_MYW}) "
           f"ELSE {h2} END)")
+    return mx, my
+
+
+def _points_fragments(dialect: str) -> dict[str, str]:
+    """Aliased derived-column expressions over a relation with column k.
+    Single source of truth for points_cte AND datagen.documents_spans
+    (which derives AFTER its slim key shuffle) — the emitted CTE text is
+    byte-identical to pre-refactor (tests/test_sqlgen_text_pinned.py)."""
+    k = "k"
+    mx, my = _point_location(k)
     text = (f"printf('item %d flag %s status %s', {k}, "
             f"CASE WHEN {k} % 3 = 0 THEN 'R' WHEN {k} % 3 = 1 "
             f"THEN 'A' ELSE 'N' END, "
@@ -104,13 +112,7 @@ def data_boxes_cte(dialect: str = "duckdb") -> str:
     box-geometry data entries like the reference's Box entries
     (reference Geom.scala:184-221).  dbox_id = doc_key."""
     k = "k"
-    inner = POINTS_KEYS_INNER
-    h1 = f"(({k} * {C.PT_A1} + {C.PT_B1}) % {C.WORLD_MX})"
-    h2 = f"(({k} * {C.PT_A2} + {C.PT_B2}) % {C.WORLD_MY})"
-    cx = (f"(CASE WHEN {k} % 5 = 0 THEN {C.HOT_MX0} + ({h1} % {C.HOT_MXW}) "
-          f"ELSE {h1} END)")
-    cy = (f"(CASE WHEN {k} % 5 = 0 THEN {C.HOT_MY0} + ({h2} % {C.HOT_MYW}) "
-          f"ELSE {h2} END)")
+    cx, cy = _point_location(k)
     bw = f"(200 + ({k} * 13) % 1300)"
     bh = f"(100 + ({k} * 17) % 650)"
     return (f"SELECT {k} AS dbox_id, "
@@ -118,7 +120,7 @@ def data_boxes_cte(dialect: str = "duckdb") -> str:
             f"GREATEST(0, {cy} - {bh}) AS ymin, "
             f"LEAST({C.WORLD_MX - 1}, {cx} + {bw}) AS xmax, "
             f"LEAST({C.WORLD_MY - 1}, {cy} + {bh}) AS ymax "
-            f"FROM ({inner}) base")
+            f"FROM ({POINTS_KEYS_INNER}) base")
 
 
 def knn_queries_cte(dialect: str = "duckdb") -> str:

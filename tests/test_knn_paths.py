@@ -281,21 +281,47 @@ def test_generated_input_matches_brute_force(spark, sf_smoke):
     _assert_same(knn_join(big, qs, k=3), _brute(big, qs, k=3))
 
 
+def _salted_cover_hinted(df) -> bool:
+    """Whether the salted cover (the Project carrying `salt` right under
+    a broadcast hint) is broadcast-hinted in df's analyzed plan."""
+    lines = df._jdf.queryExecution().analyzed().toString().splitlines()
+    return any("ResolvedHint (strategy=broadcast)" in a and "salt#" in b
+               for a, b in zip(lines, lines[1:]))
+
+
 def test_broadcast_gate_counts_salt(spark, sf_smoke):
-    """ADVICE r5: the cover auto-broadcast gate must multiply the
-    fan-out by the effective salt replication of the multicast side."""
+    """ADVICE r5: the cover's auto-broadcast gate multiplies the fan-out
+    by the plan's salt replication.  It is one rule
+    (cells.cover_broadcast), so the salted range join and kNN decide
+    alike: both hint their salted cover as a broadcast while the gate
+    passes, and neither does once max_splits pushes it over."""
     from spatialgraft.broadcast import (COVER_FANOUT, plan_size_bytes,
                                         threshold_bytes)
-    from spatialgraft.ops.knn import _bc_gate
+    from spatialgraft.cells import cover_broadcast
+    from spatialgraft.ops import range as rops
+    from spatialgraft.partitioner import SpatialPartitioning
+    pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
     qs = datagen.knn_queries(spark, sf_smoke)
-    est, thr = plan_size_bytes(qs), threshold_bytes(spark)
-    assert 0 < est * COVER_FANOUT <= thr, "fixture: unsalted cover must fit"
-    assert _bc_gate(qs, 1, None)
-    big_salt = int(thr // (est * COVER_FANOUT) + 1)
-    assert not _bc_gate(qs, big_salt, None)
-    # explicit flags still win over the gate
-    assert _bc_gate(qs, big_salt, True) is True
-    assert _bc_gate(qs, 1, False) is False
+    boxes = datagen.query_boxes(spark, sf_smoke)
+    ests, thr = [plan_size_bytes(qs), plan_size_bytes(boxes)], \
+        threshold_bytes(spark)
+    assert 0 < max(ests) * COVER_FANOUT * 2 <= thr, \
+        "fixture: a 2-way salted cover must fit"
+    fits = SpatialPartitioning({0: 2})
+    over = SpatialPartitioning({0: thr // (min(ests) * COVER_FANOUT) + 1})
+    for side in (qs, boxes):
+        assert cover_broadcast(side, None)
+        assert cover_broadcast(side, None, fits)
+        assert not cover_broadcast(side, None, over)
+        # explicit flags still win over the gate
+        assert cover_broadcast(side, True, over) is True
+        assert cover_broadcast(side, False) is False
+    for plan, hinted in ((fits, True), (over, False)):
+        rj = rops.range_join_count_salted(pts, boxes, plan)
+        assert _salted_cover_hinted(rj) is hinted
+        res = knn_join(pts, qs, k=5, plan=plan)
+        assert _salted_cover_hinted(res) is hinted
+        res.unpersist()
 
 
 def test_cache_sizing_advisory(spark):

@@ -1,10 +1,14 @@
 import json
 import os
 
+from pyspark.sql import functions as F
+
+from spatialgraft import config as C
 from spatialgraft import datagen
+from spatialgraft.cells import cover_cells, with_cell
 from spatialgraft.extract import with_geometry
-from spatialgraft.ops import range as rops
-from spatialgraft.sfilter import presence_cells
+from spatialgraft.ops.range import CONTAINS
+from spatialgraft.sfilter import presence_cells, prune_cover
 from spatialgraft.checkpoint import CheckpointManager, \
     checkpointed_range_join
 
@@ -14,17 +18,22 @@ def _pts(spark, sf):
 
 
 def test_sfilter_identical_results(spark, sf_smoke):
+    """Pruning the range cover by the presence set drops only cells
+    that hold no point: the per-box counts of the join are unchanged."""
     pts = _pts(spark, sf_smoke)
-    boxes = datagen.query_boxes(spark, sf_smoke)
     cells = presence_cells(pts)
-    base = rops.range_join_count(pts, boxes).toPandas()
-    pruned = rops.range_join_count(pts, boxes, presence=cells).toPandas()
-    b = base.sort_values(["box_id"]).reset_index(drop=True)
-    p = pruned.sort_values(["box_id"]).reset_index(drop=True)
-    assert b.equals(p)
+    cover = cover_cells(datagen.query_boxes(spark, sf_smoke))
+    pruned = prune_cover(cover, cells)
+
+    def counts(c):
+        return (with_cell(pts).join(c, on="cell").where(F.expr(CONTAINS))
+                .groupBy("box_id").count().toPandas()
+                .sort_values("box_id").reset_index(drop=True))
+
+    assert counts(cover).equals(counts(pruned))
     # and the filter actually prunes something at smoke scale
-    from spatialgraft import config as C
     assert len(cells) < C.N_CELLS
+    assert pruned.count() < cover.count()
 
 
 def test_checkpoint_resume(spark, sf_smoke, tmp_path):
