@@ -3,7 +3,11 @@
 Every multicast join in the engine (range, intersects, PIP, the kNN
 cover) takes a `broadcast_queries` flag.  True forces a driver-
 side broadcast build — correct for small query sets, a driver hazard for
-huge ones; False forces a shuffled join.  The default (None) size-gates:
+huge ones.  False withholds that hint; the two cover kernels
+(cells.cover_join / cover_count: range and PIP) also hint an explicit
+False cover to a sort-merge join, so Catalyst cannot broadcast it on
+its own size estimate, while intersects and the kNN cover leave the
+physical join to Catalyst.  The default (None) size-gates:
 the optimizer's own size estimate of the PRE-explode query side
 (`optimizedPlan().stats().sizeInBytes` — a driver-side plan statistic,
 NO job is run), multiplied by the operator's bounded fan-out (box cover
@@ -64,7 +68,9 @@ def plan_size_bytes(side: DataFrame) -> int:
 def decide(side: DataFrame, flag: bool | None, fanout: int) -> bool:
     """Resolve a broadcast_queries flag: explicit True/False wins; None
     size-gates the exploded multicast estimate against the session
-    broadcast threshold — without running a job."""
+    broadcast threshold — without running a job.  A False resolved from
+    None means "no broadcast hint", not "shuffle": the caller keeps its
+    default plan (see the module docstring)."""
     if flag is not None:
         return flag
     thr = threshold_bytes(side.sparkSession)

@@ -7,8 +7,21 @@ query boxes are multicast to their covering grid cells (cover_cells), the
 points side carries the same cell id, and Catalyst runs a hash equi-join on
 `cell` followed by an exact int64 refine predicate — the dual-tree local
 join (RTree.scala:185-300) collapses into join+filter with AQE handling
-skew at runtime.  Aggregation rides Catalyst's partial+final hash agg
+skew at runtime (cells.cover_join, behind range_join).
+
+The counts (range_join_count, range_join_count_salted) never build the
+pairs of a box's interior cells: cells.cover_count counts the points per
+cell and per spot in one GROUPING SETS pass, a cover cell strictly inside
+its box's cell range joins its cell's count (every point there is a true
+hit, as in Raster Intervals), and only perimeter cells join point rows
+and refine.  The per-box sum rides Catalyst's partial+final hash agg
 (replacing the hand-rolled flush at RTree.scala:315-356).
+
+broadcast_queries (every join here): None = auto size-gate of the
+multicast side (cells.cover_broadcast) — a huge query set is not
+hinted to a driver-side broadcast; True forces the broadcast; False
+forces a shuffled join in the cover kernels (a sort-merge hint on the
+cover) and only withholds the broadcast hint in intersects_join.
 """
 
 from __future__ import annotations
@@ -16,7 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cells import cell_expr, cover_broadcast, cover_cells, cover_join
+from ..cells import (cell_expr, cover_broadcast, cover_cells, cover_count,
+                     cover_join)
 
 CONTAINS = ("mx >= xmin AND mx <= xmax AND "
             "my >= ymin AND my <= ymax")
@@ -38,10 +52,6 @@ def range_join(points: DataFrame, boxes: DataFrame,
                broadcast_queries: bool | None = None) -> DataFrame:
     """sjoin (J1): (box_id, doc_key) matched pairs.
 
-    broadcast_queries: None = auto size-gate of the multicast side
-    (cells.cover_broadcast) — a huge query set shuffles instead of
-    building a driver-side broadcast; True/False force.
-
     Pairs are unique by construction — a point belongs to exactly one
     cell and a box's cover lists each cell once — so no distinct shuffle
     is needed (the reference dedupes because its multicast can route one
@@ -54,11 +64,12 @@ def range_join(points: DataFrame, boxes: DataFrame,
 def range_join_count(points: DataFrame, boxes: DataFrame,
                      broadcast_queries: bool | None = None) -> DataFrame:
     """rjoin (J2) with count aggregate — the SpatialJoinApp query
-    (reference examples/SpatialJoinApp.scala:81-96)."""
-    # Within one box's cover, cells never overlap, so each (box, point)
-    # pair appears exactly once: count needs no dedup.
-    j = cover_join(points, boxes, broadcast_queries, CONTAINS)
-    return j.groupBy("box_id").agg(F.count("*").alias("cnt"))
+    (reference examples/SpatialJoinApp.scala:81-96): (box_id, cnt) for
+    every box holding a point, through cells.cover_count (interior
+    cells counted per cell, perimeter cells refined per point).  The
+    points shuffle into that count, so a call with very few boxes can
+    be slightly slower than a plain broadcast join (see cover_count)."""
+    return cover_count(points, boxes, broadcast_queries, CONTAINS, "box_id")
 
 
 def spatio_textual_filter(points: DataFrame, xmin: int, ymin: int,
@@ -112,8 +123,9 @@ def range_join_count_salted(points: DataFrame, boxes: DataFrame,
     into one slice, the multicast query side replicates across all
     slices, and the join keys on (cell, salt) — so no single reducer
     owns a whole hot cell even when AQE's probe-side splitting isn't
-    enough.  The same cells.cover_join kernel as range_join_count, so
-    the cover's auto broadcast gate counts the salt replication.
-    Results are identical to range_join_count (tested)."""
-    j = cover_join(points, boxes, None, CONTAINS, plan)
-    return j.groupBy("box_id").agg(F.count("*").alias("cnt"))
+    enough.  The same cells.cover_count kernel as range_join_count: the
+    points are salted before its per-cell grouping, both grouping sets
+    carry the salt and the join keys on (cell, salt, g); the cover's
+    auto broadcast gate counts the salt replication.  Results are
+    identical to range_join_count (tested)."""
+    return cover_count(points, boxes, None, CONTAINS, "box_id", plan)

@@ -133,7 +133,35 @@ def get_spark(app: str = "spatialgraft",
     )
 
 
+# local parquet path -> (its sorted (file, size, mtime_ns), schema):
+# Spark infers a parquet schema with a job (footer reads) on every read;
+# a read of unchanged files passes the memoized schema and runs none.
+# One entry per path, so rewriting a table never grows the memo.
+_SCHEMAS: dict = {}
+
+
+def _local_files(path: str) -> tuple | None:
+    """Sorted (file, size, mtime_ns) of every file at a local path (one
+    file or a directory tree); None when the path is not local."""
+    if os.path.isfile(path):
+        files = [path]
+    elif os.path.isdir(path):
+        files = [os.path.join(d, f)
+                 for d, _, names in os.walk(path) for f in names]
+    else:
+        return None
+    return tuple(sorted((f, (st := os.stat(f)).st_size, st.st_mtime_ns)
+                        for f in files))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str):
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    files = _local_files(path)
+    seen, schema = _SCHEMAS.get(path, (None, None))
+    reader = (spark.read if schema is None or seen != files
+              else spark.read.schema(schema))
+    df = reader.parquet(path)
+    if files is not None:
+        _SCHEMAS[path] = (files, df.schema)
     df.createOrReplaceTempView(name)
     return df

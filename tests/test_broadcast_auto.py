@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from spatialgraft import datagen
 from spatialgraft.broadcast import decide, threshold_bytes
 from spatialgraft.extract import with_geometry
-from spatialgraft.ops.range import range_join_count
+from spatialgraft.ops.range import range_join, range_join_count
 
 
 def _plan(df) -> str:
@@ -39,6 +39,26 @@ def test_large_query_side_not_forced_broadcast(spark, sf_smoke):
     forced = range_join_count(pts, big, broadcast_queries=True) \
         ._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" in forced
+
+
+def test_explicit_false_shuffles_the_cover(spark, sf_smoke):
+    """broadcast_queries=False hints the cover to a shuffled join, so
+    the cell join is not broadcast even where Catalyst would broadcast
+    the small cover on its own estimate (at sf0.001 it does), and the
+    results stay the same.  Checked on the executed plan of both cover
+    kernels: range_join (cover_join) and range_join_count
+    (cover_count)."""
+    pts = with_geometry(datagen.documents_spans(spark, sf_smoke),
+                        columns=["doc_key", "mx", "my"])
+    boxes = datagen.query_boxes(spark, sf_smoke)
+    for op in (range_join_count, range_join):
+        want = sorted(map(tuple, op(pts, boxes).collect()))
+        df = op(pts, boxes, broadcast_queries=False)
+        got = sorted(map(tuple, df.collect()))
+        plan = _plan(df)
+        assert "BroadcastHashJoin [cell" not in plan, op.__name__
+        assert "SortMergeJoin [cell" in plan, op.__name__
+        assert got == want and len(want) > 0, op.__name__
 
 
 def test_decide_math(spark):

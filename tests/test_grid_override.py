@@ -3,8 +3,9 @@ SPARK_GRAFT_CELL_CX/_CY are deployment config; the kNN SAT ring radii
 must span ANY grid's sub-grid, not just power-of-two dims — under an
 old radii derivation a corner query on a 96x48 grid whose nearest data
 sat beyond cell radius 64 matched no radius and was silently dropped
-(kNN returned < k rows).  Runs in a subprocess because the grid
-constants bind at module import."""
+(kNN returned < k rows).  The same subprocess reruns the range count's
+brute-force twins (tests/test_cover_count.py) on that grid.  Runs in a
+subprocess because the grid constants bind at module import."""
 
 import os
 import subprocess
@@ -64,6 +65,11 @@ _INNER = textwrap.dedent('''
         counts = _histogram(both, cx, cy)
         assert sum(counts.values()) == 530
         _assert_sat_ring_counts(spark, counts, cx, cy)
+    # the range count's interior-cell rule is exact on this grid too
+    from tests.test_cover_count import (assert_cover_count_twin,
+                                        assert_salted_cover_count_twin)
+    assert_cover_count_twin(spark)
+    assert_salted_cover_count_twin(spark)
     spark.stop()
     print("GRID-OK")
 ''')
