@@ -4,10 +4,11 @@ Every multicast join in the engine (range, intersects, PIP, the kNN
 cover) takes a `broadcast_queries` flag.  True forces a driver-
 side broadcast build — correct for small query sets, a driver hazard for
 huge ones.  False withholds that hint; the two cover kernels
-(cells.cover_join / cover_count: range and PIP) also hint an explicit
-False cover to a sort-merge join, so Catalyst cannot broadcast it on
-its own size estimate, while intersects and the kNN cover leave the
-physical join to Catalyst.  The default (None) size-gates:
+(cells.cover_join and ops.range.cover_count: range and PIP) hint an
+explicit False cover to a sort-merge join (cells.hint_cover), so
+Catalyst cannot broadcast it on its own size estimate, while
+intersects and the kNN cover leave the physical join to Catalyst.
+The default (None) size-gates:
 the optimizer's own size estimate of the PRE-explode query side
 (`optimizedPlan().stats().sizeInBytes` — a driver-side plan statistic,
 NO job is run), multiplied by the operator's bounded fan-out (box cover

@@ -45,23 +45,37 @@ def cover_cells(boxes: DataFrame,
                 xmin: str = "xmin", ymin: str = "ymin",
                 xmax: str = "xmax", ymax: str = "ymax",
                 out: str = "cell",
-                cx: int = C.CELL_CX, cy: int = C.CELL_CY) -> DataFrame:
+                cx: int = C.CELL_CX, cy: int = C.CELL_CY,
+                interior: bool = False) -> DataFrame:
     """One output row per (box, overlapped cell) — the multicast step.
 
     Cell ranges are computed with the same exact integer floor as point
     assignment, so a border-inclusive containment can never fall outside
     the cover.  cx/cy pick the grid (default: the join cell grid; the
     tile grid for raster->vector).
+
+    interior: also add `g` = 1 on the cover cells strictly inside the
+    box's cell range on both axes (cx0 < column < cx1 and cy0 < row <
+    cy1), else 0.  Exact on any grid by floor monotonicity: a point of
+    cell column > cx0 = (xmin * cx) div WORLD_MX has mx > xmin (mx <=
+    xmin would floor to <= cx0), and likewise mx < xmax, ymin < my <
+    ymax, so every point of a g = 1 cell lies inside the box.  g is a
+    non-null CASE, so a join on it infers no isnotnull(g) filter that
+    would evaluate the test a second time.
     """
     cx0 = F.expr(f"({xmin} * {cx}) div {C.WORLD_MX}")
     cx1 = F.expr(f"({xmax} * {cx}) div {C.WORLD_MX}")
     cy0 = F.expr(f"({ymin} * {cy}) div {C.WORLD_MY}")
     cy1 = F.expr(f"({ymax} * {cy}) div {C.WORLD_MY}")
-    return (boxes
-            .withColumn("_cx", F.explode(F.sequence(cx0, cx1)))
-            .withColumn("_cy", F.explode(F.sequence(cy0, cy1)))
-            .withColumn(out, F.col("_cx") * cy + F.col("_cy"))
-            .drop("_cx", "_cy"))
+    x, y = F.col("_cx"), F.col("_cy")
+    df = (boxes
+          .withColumn("_cx", F.explode(F.sequence(cx0, cx1)))
+          .withColumn("_cy", F.explode(F.sequence(cy0, cy1)))
+          .withColumn(out, x * cy + y))
+    if interior:
+        inner = (cx0 < x) & (x < cx1) & (cy0 < y) & (y < cy1)
+        df = df.withColumn("g", F.when(inner, 1).otherwise(0))
+    return df.drop("_cx", "_cy")
 
 
 def cover_ids(xmin: int, ymin: int, xmax: int, ymax: int,
@@ -133,12 +147,14 @@ def cover_broadcast(queries: DataFrame, flag: bool | None,
     return decide(queries, flag, COVER_FANOUT * splits)
 
 
-def _hinted(cover: DataFrame, flag: bool | None, bc: bool) -> DataFrame:
-    """The cover with its join hint: broadcast when the gate said so, a
-    sort-merge (shuffled) join when the caller passed an explicit False,
-    none when the gate resolved None to False: Catalyst then plans the
-    join from its own size estimates."""
-    if bc:
+def hint_cover(cover: DataFrame, queries: DataFrame,
+               flag: bool | None, plan=None) -> DataFrame:
+    """`cover` (the multicast of `queries`) with its join hint:
+    broadcast when cover_broadcast says so, a sort-merge (shuffled)
+    join when the caller passed an explicit False, none when the gate
+    resolved None to False: Catalyst then plans the join from its own
+    size estimates."""
+    if cover_broadcast(queries, flag, plan):
         return F.broadcast(cover)
     if flag is False:
         return cover.hint("merge")
@@ -154,75 +170,7 @@ def cover_join(points: DataFrame, queries: DataFrame,
 
     broadcast: None = auto size-gate of the multicast side
     (cover_broadcast); True forces a broadcast of the cover, False a
-    shuffled sort-merge join."""
-    pts = with_cell(points)
-    bc = cover_broadcast(queries, broadcast)
-    cover = _hinted(cover_cells(queries), broadcast, bc)
-    return pts.join(cover, on="cell", how="inner").where(F.expr(refine))
-
-
-def interior_cover(boxes: DataFrame) -> DataFrame:
-    """cover_cells(boxes) plus `g` = 1 on the cover cells that lie
-    strictly inside the box's cell range on both axes
-    (cx0 < cell div CY < cx1 and cy0 < cell % CY < cy1), else 0.
-
-    Exact on any grid by floor monotonicity: a point of cell column
-    cell_x > cx0 = (xmin * CX) div WORLD_MX has mx > xmin (mx <= xmin
-    would floor to <= cx0), and likewise mx < xmax, ymin < my < ymax,
-    so every point of a g = 1 cell lies inside the box."""
-    cx, cy = C.CELL_CX, C.CELL_CY
-    inner = (f"(xmin * {cx}) div {C.WORLD_MX} < cell div {cy} "
-             f"AND cell div {cy} < (xmax * {cx}) div {C.WORLD_MX} "
-             f"AND (ymin * {cy}) div {C.WORLD_MY} < cell % {cy} "
-             f"AND cell % {cy} < (ymax * {cy}) div {C.WORLD_MY}")
-    return cover_cells(boxes).withColumn(
-        "g", F.expr(f"CAST({inner} AS INT)"))
-
-
-def cover_count(points: DataFrame, boxes: DataFrame,
-                broadcast: bool | None, refine: str, key: str,
-                plan=None) -> DataFrame:
-    """The counting twin of cover_join: (key, cnt) = the number of
-    points each box's `refine` predicate keeps, for boxes with cnt > 0,
-    without joining a point of a box's interior cells pair by pair.
-
-    One pass over the points groups them with GROUPING SETS into
-    per-spot rows (cell, mx, my; g = 0, w = points at that spot) and
-    per-cell counts (cell; g = 1, w = points in the cell).  The cover
-    (interior_cover) joins them on (cell, g): an interior cell meets its
-    one count row, a perimeter cell its spot rows, which `refine`
-    filters (on a count row mx/my are NULL, so only `g = 1` keeps it).
-    cnt = sum(w) per key.  `refine` must hold for every point strictly
-    inside the box (xmin, ymin, xmax, ymax), as box containment does:
-    interior-cell points are counted without it.
-
-    broadcast: as cover_join (the same gate and hints).
-    plan: optional SpatialPartitioning — the points are salted in
-    spatialgraft.partitioner's salt format before the grouping (a point
-    goes to one slice of its cell by doc_key), salt joins both grouping
-    sets and the cover is replicated over the slices, so the join keys
-    on (cell, salt, g) and no single task owns a whole hot cell.
-
-    Trade-off: the points shuffle into the grouping instead of
-    streaming into a broadcast join, so a call with few boxes is slower
-    than a plain cover_join + count (15 boxes over 262k points, 4
-    cores: 1.30 s -> 1.56 s); with many boxes the pairs it never builds
-    dominate (7500 boxes: 34.5M candidate pairs -> 1.68M perimeter
-    (spot, box) rows plus 180k interior cover rows, 2.22 s -> 1.58 s)."""
-    pts = with_cell(points)
-    bc = cover_broadcast(boxes, broadcast, plan)
-    cover = interior_cover(boxes)
-    keys = ["cell"]
-    if plan is not None:
-        # imported here: partitioner imports with_cell from this module
-        from .partitioner import salt_multicast, salt_points
-        pts = salt_points(pts, ["cell", "mx", "my"], plan)
-        cover = salt_multicast(cover, [*boxes.columns, "g"], plan)
-        keys = ["cell", "salt"]
-    counts = (pts.groupingSets([[*keys, "mx", "my"], keys],
-                               *keys, "mx", "my")
-              .agg(F.grouping("mx").alias("g"), F.count("*").alias("w")))
-    cover = _hinted(cover, broadcast, bc)
-    return (counts.join(cover, on=[*keys, "g"], how="inner")
-            .where(F.expr(f"g = 1 OR ({refine})"))
-            .groupBy(key).agg(F.sum("w").alias("cnt")))
+    shuffled sort-merge join (hint_cover)."""
+    cover = hint_cover(cover_cells(queries), queries, broadcast)
+    return (with_cell(points).join(cover, on="cell", how="inner")
+            .where(F.expr(refine)))

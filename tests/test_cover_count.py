@@ -1,4 +1,4 @@
-"""cells.cover_count against a brute-force count, on inputs built from
+"""ops.range.cover_count against a brute-force count, on inputs built from
 the grid's own cell borders: boxes that start and end exactly on a
 border or one milli past it, one- and two-cell-wide boxes (no interior
 cell), world-edge and world-spanning boxes, a zero-area box, duplicate
@@ -8,9 +8,10 @@ so tests/test_grid_override.py reruns them on a 96x48 grid."""
 
 from spatialgraft import config as C
 from spatialgraft import datagen
-from spatialgraft.cells import cover_count, interior_cover, with_cell
+from spatialgraft.cells import cover_cells, with_cell
 from spatialgraft.extract import with_geometry
 from spatialgraft.ops import range as rops
+from spatialgraft.ops.range import cover_count
 from spatialgraft.partitioner import plan_partitions
 
 _PTS = "doc_key bigint, mx bigint, my bigint"
@@ -86,8 +87,7 @@ def _counts(df) -> dict[int, int]:
 
 
 def _count(pts, boxes, plan=None, broadcast=None):
-    return _counts(cover_count(pts, boxes, broadcast, rops.CONTAINS,
-                               "box_id", plan))
+    return _counts(cover_count(pts, boxes, broadcast, plan))
 
 
 def assert_cover_count_twin(spark) -> None:
@@ -103,7 +103,7 @@ def assert_cover_count_twin(spark) -> None:
     assert _count(pts, bx, broadcast=False) == want
     # non-vacuous: interior cells with points joined, and the one- and
     # two-cell-wide boxes have no interior cell at all
-    inner = interior_cover(bx).where("g = 1")
+    inner = cover_cells(bx, interior=True).where("g = 1")
     assert inner.join(with_cell(pts), "cell").count() > 0
     assert inner.where("box_id IN (2, 3, 4, 8)").count() == 0
     assert _count(spark.createDataFrame([], _PTS), bx) == {}
@@ -153,7 +153,7 @@ def test_interior_rows_join_on_generated_data(spark, sf_smoke):
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke),
                         columns=["doc_key", "mx", "my"])
     boxes = datagen.query_boxes(spark, sf_smoke)
-    inner = interior_cover(boxes).where("g = 1")
+    inner = cover_cells(boxes, interior=True).where("g = 1")
     assert inner.join(with_cell(pts), "cell").count() > 0
     pairs = rops.range_join(pts, boxes).groupBy("box_id").count()
     assert _counts(rops.range_join_count(pts, boxes)) == \
