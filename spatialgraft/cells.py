@@ -15,7 +15,7 @@ The same floor arithmetic serves every grid (join cells, tiles, index
 coarse cells, the kNN SAT sub-grid): cell_expr / cover_cells /
 cover_ids (its driver-side twin) / sat_rows / ring_count_sql take the
 grid dims.  A histogram's summed-area table (sat_rows /
-ring_count_expr) counts the points in any cell rectangle with 4 array
+ring_count_sql) counts the points in any cell rectangle with 4 array
 lookups.
 """
 
@@ -124,17 +124,6 @@ def ring_count_sql(sat: str, cxa: str, cxb: str, cya: str, cyb: str,
 
     return (f"{at(f'{cxb} + 1', f'{cyb} + 1')} - {at(cxa, f'{cyb} + 1')} "
             f"- {at(f'{cxb} + 1', cya)} + {at(cxa, cya)}")
-
-
-def ring_count_expr(df: DataFrame, sat: DataFrame, out: str,
-                    cy: int = C.CELL_CY) -> DataFrame:
-    """Add `out` = the point count of each row's cell rectangle
-    [_cxa, _cxb] x [_cya, _cyb]: the one-row SAT (sat_df) broadcast-
-    cross-joined in, 4 element_at lookups inline."""
-    return (df.crossJoin(F.broadcast(sat))
-            .withColumn(out, F.expr(ring_count_sql(
-                "sat", "_cxa", "_cxb", "_cya", "_cyb", cy)))
-            .drop("sat"))
 
 
 def cover_broadcast(queries: DataFrame, flag: bool | None,

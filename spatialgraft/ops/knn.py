@@ -8,12 +8,6 @@ crosses a partition, as ONE bounded join of pure DataFrame operations
 cogroup variant was 10-30x slower at scale because the grouped-Arrow
 plumbing dominates):
 
-  layout   the slim point projection repartitions by (cell, salt) to
-           the session shuffle width and caches: partition sizing then
-           follows configuration (spark.sql.shuffle.partitions), not
-           core count, and hash(cell, salt) satisfies the pre-rank
-           window's clustering below — the candidate stream is never
-           exchanged.
   bound    one O(#sub-cells) histogram collect (Arrow) over a sub-grid
            SAT_SUBDIV x SAT_SUBDIV finer than the join cells; numpy
            turns it into a 2-D summed-area table (SAT) that ships as
@@ -31,17 +25,17 @@ plumbing dominates):
            SIGMOD 2023).
   join     each query re-joins the points over cover_cells of its
            kth2 box with the exact filter dist2 <= kth2 (the
-           reference's `rkjoin`, RtreePartition.scala:294-324); a
-           per-(cell[, salt], qid) pre-rank keeps <= k rows per group
-           before the global qid window.
-  rank     row_number over (dist2, doc_key) pins a deterministic total
-           order (the reference's sort+slice at knnJoinRDD.scala:217-231
-           is tie-unstable; ties are real here, so the canon matters).
+           reference's `rkjoin`, RtreePartition.scala:294-324).
+  rank     the survivors, a few k per query, take one row_number over
+           (dist2, doc_key) per qid: a deterministic total order (the
+           reference's local top-k plus sort+slice,
+           knnJoinRDD.scala:100-140, 217-231, is tie-unstable; ties are
+           real here, so the canon matters).
 
 Driver-side construction cost matters too: each logical step is ONE
 selectExpr (lateral column aliases keep sub-expressions single-
-sourced), the driver-built SAT and presence set reach Spark as
-pyarrow.Tables (local relations, no job), and the broadcast gate reads
+sourced), the driver-built SAT reaches Spark as a pyarrow.Table (a
+local relation, no job), and the broadcast gate reads
 the optimizer's sizeInBytes estimate instead of running a count — the
 only jobs a call runs are the histogram collect and the result's count.
 
@@ -71,7 +65,6 @@ from .. import config as C
 from ..cells import (cell_expr, cover_broadcast, cover_cells,
                      ring_count_sql, sat_df, sat_rows, with_cell)
 from ..partitioner import salt_multicast, salt_points
-from ..sfilter import prune_cover
 
 # x/y are recomputed inline from the int milli coords with the exact
 # expression shape of extract.py:65 (int subtract -> cast -> /1000.0),
@@ -156,10 +149,9 @@ def _bound(queries: DataFrame, sat: DataFrame, need: int) -> DataFrame:
 
 def _join(pts: DataFrame, queries: DataFrame, k: int, plan,
           bc_cover: bool, hist) -> DataFrame:
-    """Bound -> cover join -> pre-rank -> rank.  `hist` is the collected
+    """Bound -> cover join -> rank.  `hist` is the collected
     sub-cell histogram (pyarrow: cell, sub, n); it drives every
-    data-dependent decision: the SAT, `need` = min(k, total) and the
-    presence prune.
+    data-dependent decision: the SAT and `need` = min(k, total).
 
     plan: None (unsalted, the join keys on cell) or the
     SpatialPartitioning that salted `pts` — the cover is then replicated
@@ -169,16 +161,6 @@ def _join(pts: DataFrame, queries: DataFrame, k: int, plan,
     sat = sat_df(pts.sparkSession,
                  sat_rows(hist["sub"].to_numpy(), n, _SCX, _SCY))
     cover = cover_cells(_bound(queries, sat, min(k, int(n.sum()))))
-    # sFilter presence pruning of the cover (X6 wired into J7, VERDICT
-    # r4 item 6): multicast (query, cell) rows whose cell holds no data
-    # can never match the inner join, so they are dropped BEFORE the
-    # shuffle.  Its win is bounded by the empty fraction: on a dense
-    # grid (sf0.1 is ~70% occupied) the >1024-cell broadcast semi-join
-    # is pure overhead per call — prune only when at least half the
-    # grid is empty (the sparse regime X6 exists for)
-    present = set(hist["cell"].unique().to_pylist())
-    if len(present) < C.N_CELLS // 2:
-        cover = prune_cover(cover, present)
     if plan is not None:
         # the join keys on (cell, salt): the probe work of a dense cell
         # spreads over its salt slices instead of landing in one task
@@ -188,23 +170,15 @@ def _join(pts: DataFrame, queries: DataFrame, k: int, plan,
     if bc_cover:
         cover = F.broadcast(cover)
 
-    # equi-join, exact dist filter, then the per-(keys, qid) pre-rank:
-    # its <= k rows per group feed the global qid rank.  The projection
-    # down to (keys, qid, doc_key, dist2) BEFORE the pre-rank matters:
-    # those are the rows the per-group sort streams (the measured 4N
-    # bottleneck is the memory bus, not ALU)
+    # equi-join and the exact dist filter; the bound leaves a few k
+    # survivors per query, which go straight to the one qid rank
     w = Window.partitionBy("qid").orderBy("dist2", "doc_key")
-    wpre = Window.partitionBy(*keys, "qid").orderBy("dist2", "doc_key")
     return (pts.join(cover, on=keys, how="inner")
-            .selectExpr(*keys, "qid", "doc_key", "kth2", f"{_D2} AS dist2")
+            .selectExpr("qid", "doc_key", "kth2", f"{_D2} AS dist2")
             .where(F.col("dist2") <= F.col("kth2"))
-            .select(*keys, "qid", "doc_key", "dist2")
-            .withColumn("prnk", F.row_number().over(wpre))
-            .where(F.col("prnk") <= k)
             .select("qid", "doc_key", "dist2")
             .withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= k)
-            .select("qid", "doc_key", "dist2", "rnk"))
+            .where(F.col("rnk") <= k))
 
 
 # ~24 B/row: (cell, doc_key) int64 + mx/my int32 in the serialized slim
@@ -322,13 +296,10 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
         keys = ["cell", "salt"]
         pts = salt_points(pts, ["cell", "doc_key", "mx", "my"], plan)
     # Repartition by (cell, salt) to the session shuffle width BEFORE
-    # the join: (a) partition count then scales with configuration, not
+    # the join: partition count then scales with configuration, not
     # core count — an input cached in defaultParallelism partitions made
     # each map task sort (candidates/cores) rows and OOM at 24x input
-    # on one executor; (b) hash(cell, salt) satisfies the pre-rank
-    # window's clustering, so it sorts in place with NO exchange of the
-    # candidate stream — the only full-data shuffle in the whole join
-    # is this one slim-projection shuffle.
+    # on one executor.
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     pts = pts.repartition(n_parts, *keys)
 

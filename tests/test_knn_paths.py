@@ -4,6 +4,7 @@ fewer-than-k-points and empty-table edges — each checked bit-exactly
 against a brute-force cross-join twin."""
 
 import random
+import re
 
 import pytest
 from pyspark.sql import Window
@@ -105,7 +106,7 @@ def test_dense_cells_match_brute_force(spark, sf_smoke):
 # Spark jobs one knn_join call runs at sf0.001, as measured: the sub-cell
 # histogram collect and the result count with their query stages and
 # broadcasts.  An added stage or driver collect fails here.
-KNN_JOBS_MAX = 11
+KNN_JOBS_MAX = 10
 
 
 def test_knn_job_count_pinned(spark, sf_smoke):
@@ -119,6 +120,30 @@ def test_knn_job_count_pinned(spark, sf_smoke):
     finally:
         sc.setJobGroup("test-knn-jobs-done", "")
     assert 0 < len(jobs) <= KNN_JOBS_MAX, sorted(jobs)
+
+
+def _final_windows(df) -> int:
+    """Window operators in the final physical plan behind a persisted
+    result: the cached relation's adaptive plan, once executed (the
+    executedPlan string would print its initial plan too)."""
+    cached = (df._jdf.queryExecution().executedPlan().inputPlan()
+              .relation().cachedPlan())
+    assert cached.isFinalPlan()
+    return len(re.findall(r"\bWindow \[",
+                          cached.executedPlan().toString()))
+
+
+def test_knn_ranks_once(spark, sf_smoke):
+    """The bounded join's survivors (a few k per query) go straight to
+    the one qid rank: exactly one Window in the plan, unsalted and with
+    a 2-way plan, so no per-(cell[, salt], qid) ranking comes back."""
+    from spatialgraft.partitioner import SpatialPartitioning
+    pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
+    qs = datagen.knn_queries(spark, sf_smoke)
+    for plan in (None, SpatialPartitioning({0: 2})):
+        res = knn_join(pts, qs, k=10, plan=plan)
+        assert _final_windows(res) == 1
+        res.unpersist()
 
 
 def test_salted_knn_identical_and_nonvacuous(spark, sf_correct):
@@ -162,7 +187,8 @@ def test_shuffled_stage_joins_identical(spark, sf_correct):
 def test_k150_matches_brute_force(spark, sf_smoke, sf_correct):
     """Reference-scale k (its benchmarks run k up to 200,
     reference README.md:51): k=150 exercises wide SAT rings at sf0.001
-    and the dense pre-rank at sf0.01 — both must stay bit-exact."""
+    and the dense cells' survivor ranks at sf0.01 — both must stay
+    bit-exact."""
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
     qs = datagen.knn_queries(spark, sf_smoke)
     _assert_same(knn_join(pts, qs, k=150), _brute(pts, qs, k=150))
@@ -213,21 +239,23 @@ def _histogram(points, cx, cy):
 
 
 def _assert_sat_ring_counts(spark, counts, cx, cy):
-    """ring_count_expr over the SAT built by sat_rows from `counts`
-    (cell -> n on the cx x cy grid) must equal the Python sum of
-    `counts` inside each _sat_rects rectangle.  The brute-force kNN
-    twins only catch an over-counting SAT (the bound gets too tight);
-    an under-counting one merely loosens the bound, so the layout is
-    pinned here directly."""
-    from spatialgraft.cells import ring_count_expr, sat_df, sat_rows
+    """ring_count_sql over the SAT built by sat_rows from `counts`
+    (cell -> n on the cx x cy grid), cross-joined in as the kNN bound
+    does, must equal the Python sum of `counts` inside each _sat_rects
+    rectangle.  The brute-force kNN twins only catch an over-counting
+    SAT (the bound gets too tight); an under-counting one merely
+    loosens the bound, so the layout is pinned here directly."""
+    from spatialgraft.cells import ring_count_sql, sat_df, sat_rows
     rects = _sat_rects(counts, cx, cy)
     sat = sat_df(spark, sat_rows(list(counts), list(counts.values()),
                                  cx, cy))
     df = spark.createDataFrame(
         [(i, *r) for i, r in enumerate(rects)],
         "rid int, _cxa bigint, _cxb bigint, _cya bigint, _cyb bigint")
+    ring = ring_count_sql("sat", "_cxa", "_cxb", "_cya", "_cyb", cy)
     got = {r["rid"]: r["n"] for r in
-           ring_count_expr(df, sat, "n", cy).select("rid", "n").collect()}
+           df.crossJoin(F.broadcast(sat))
+           .selectExpr("rid", f"{ring} AS n").collect()}
     for i, (xa, xb, ya, yb) in enumerate(rects):
         want = sum(n for c, n in counts.items()
                    if xa <= c // cy <= xb and ya <= c % cy <= yb)
@@ -244,25 +272,6 @@ def test_sat_ring_count_matches_brute_sum(spark, sf_smoke):
         assert len(counts) > 100  # non-vacuous
         _assert_sat_ring_counts(spark, counts, cx, cy)
         _assert_sat_ring_counts(spark, {}, cx, cy)
-
-
-def test_stage2_cover_prune_wired(spark, sf_smoke):
-    """VERDICT r4 item 6: the cover is presence-pruned (X6 -> J7).
-    Wiring check: the result's plan carries the left-semi prune; the
-    quantitative headroom on the sparse sf0.001 fixture is large (most
-    of the 32k cells hold no data, so most cover multicast rows die
-    before the shuffle).  Exactness of the pruned path is
-    covered by the brute-force twins above, which all run through it."""
-    from spatialgraft import config as C
-    from spatialgraft.sfilter import presence_cells
-    pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
-    qs = datagen.knn_queries(spark, sf_smoke)
-    plan = (knn_join(pts, qs, k=25)
-            ._jdf.queryExecution().optimizedPlan().toString())
-    assert "LeftSemi" in plan, "cover prune not in the plan"
-    present = presence_cells(pts)
-    assert len(present) < 0.2 * C.N_CELLS, \
-        "sf0.001 fixture unexpectedly dense; prune test is vacuous"
 
 
 def test_generated_input_matches_brute_force(spark, sf_smoke):

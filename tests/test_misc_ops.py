@@ -1,7 +1,6 @@
 """Coverage for the small operators the round-1 verdict flagged as
-untested: put/delete round-trips, multiput min/max merges, the
-sample_fraction determinism, and sfilter.prune_cover's broadcast
-semi-join path (cell sets above the isin threshold)."""
+untested: put/delete round-trips, multiput min/max merges and the
+sample_fraction determinism."""
 
 from pyspark.sql import functions as F
 
@@ -78,24 +77,6 @@ def test_sample_fraction_deterministic(spark):
     b = misc.sample_fraction(pts, 0.1, seed=42).collect()
     assert a == b
     assert 500 < len(a) < 1500
-
-
-def test_prune_cover_semi_join_path(spark):
-    """Above _ISIN_MAX cells, prune_cover switches to a broadcast
-    semi-join; results must be identical to the isin path."""
-    from spatialgraft import sfilter
-    cover = spark.range(5000).selectExpr("id AS cell", "id AS box_id")
-    small = set(range(0, 600))          # isin path
-    big = set(range(0, 3000))           # semi-join path
-    assert len(big) > sfilter._ISIN_MAX
-    got_small = sfilter.prune_cover(cover, small).count()
-    got_big = sfilter.prune_cover(cover, big).count()
-    assert got_small == 600
-    assert got_big == 3000
-    # plan check: the big path must be a join, not a giant in-list
-    plan = sfilter.prune_cover(cover, big)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "LeftSemi" in plan
 
 
 def test_multiget_broadcast_and_shuffle_paths_identical(spark, sf_smoke):

@@ -8,7 +8,7 @@ from spatialgraft import datagen
 from spatialgraft.cells import cover_cells, with_cell
 from spatialgraft.extract import with_geometry
 from spatialgraft.ops.range import CONTAINS
-from spatialgraft.sfilter import presence_cells, prune_cover
+from spatialgraft.sfilter import presence_cells
 from spatialgraft.checkpoint import CheckpointManager, \
     checkpointed_range_join
 
@@ -18,12 +18,13 @@ def _pts(spark, sf):
 
 
 def test_sfilter_identical_results(spark, sf_smoke):
-    """Pruning the range cover by the presence set drops only cells
-    that hold no point: the per-box counts of the join are unchanged."""
+    """The presence set is exact: dropping the range cover's cells
+    outside it drops only cells that hold no point, so the per-box
+    counts of the join are unchanged."""
     pts = _pts(spark, sf_smoke)
     cells = presence_cells(pts)
     cover = cover_cells(datagen.query_boxes(spark, sf_smoke))
-    pruned = prune_cover(cover, cells)
+    pruned = cover.where(F.col("cell").isin(list(cells)))
 
     def counts(c):
         return (with_cell(pts).join(c, on="cell").where(F.expr(CONTAINS))
