@@ -27,7 +27,12 @@ the sha256 of the normalized plan and the number of Spark jobs the
 knn_join call ran.  Last, the skew-scheduled range_join_count_salted
 (salted by plan_partitions on the same points, which runs one histogram
 job) goes to OUT.txt.range_join_count_salted and prints its sha256; it
-comes after the kNN line so that it cannot shift the hashes above.  A
+comes after the kNN line so that it cannot shift the hashes above.
+Last of all, knn_join with the default broadcast_queries (None, the
+auto gate) goes to OUT.txt.knn_default and prints its row count,
+sha256 and job count; the shuffled kNN result is unpersisted first, so
+that the default call cannot read it back from the cache (the two
+plans differ only by join hints, which the cache lookup ignores).  A
 "default plan unchanged" check is one command per revision: equal
 hashes mean byte-identical plans.
 """
@@ -97,6 +102,13 @@ def main() -> None:
     salted = rops.range_join_count_salted(pts, boxes, plan)
     print("range_join_count_salted sha256", _write_plan(
         salted, f"{out}.range_join_count_salted"))
+    res.unpersist()
+    sc.setJobGroup("plancmp-knn-default", "knn_join")
+    auto = knn_join(pts, qs, k=10)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("plancmp-knn-default"))
+    sc.setJobGroup("plancmp", "plancmp")
+    digest = _write_plan(auto, f"{out}.knn_default")
+    print("knn_default rows", auto.count(), "sha256", digest, "jobs", jobs)
     spark.stop()
 
 

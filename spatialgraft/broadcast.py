@@ -1,21 +1,20 @@
 """Auto-selection between broadcast and shuffled multicast query sides.
 
-Every multicast join in the engine (range, intersects, PIP, the kNN
-cover) takes a `broadcast_queries` flag.  True forces a driver-
-side broadcast build — correct for small query sets, a driver hazard for
-huge ones.  False withholds that hint; the two cover kernels
-(cells.cover_join and ops.range.cover_count: range and PIP) hint an
-explicit False cover to a sort-merge join (cells.hint_cover), so
-Catalyst cannot broadcast it on its own size estimate, while
-intersects and the kNN cover leave the physical join to Catalyst.
-The default (None) size-gates:
-the optimizer's own size estimate of the PRE-explode query side
+The size gate of every multicast join in the engine (range, PIP,
+intersects, the kNN cover; cells.hint_cover applies it) and of
+ops.misc.multiget's key side.  decide() compares the optimizer's own
+size estimate of the PRE-explode query side
 (`optimizedPlan().stats().sizeInBytes` — a driver-side plan statistic,
 NO job is run), multiplied by the operator's bounded fan-out (box cover
-<= ~64 cells at the join cell level), compared against the
-session's spark.sql.autoBroadcastJoinThreshold.  The decision then
-matches what a user would pick knowing the size — no flag knowledge
-required (VERDICT r2 item 4).
+<= ~64 cells at the join cell level), against the session's
+spark.sql.autoBroadcastJoinThreshold.  The decision then matches what
+a user would pick knowing the size — no flag knowledge required
+(VERDICT r2 item 4).  A side that fails the gate gets no hint: Catalyst
+plans that join from its own estimates.  The explicit
+`broadcast_queries` flag of range_join_count and knn_join is resolved
+in cells.hint_cover, not here: True broadcasts the cover, False
+sort-merge joins it in range_join_count and only withholds the hint in
+knn_join.
 
 Why plan stats and not a count: decide() runs at PLAN CONSTRUCTION time
 on every range/pip/intersects/kNN call, and an eager side.count() there
@@ -29,7 +28,7 @@ fanout multiplier is the margin that absorbs that expansion (the
 multicast explode itself is what the threshold must survive, and the
 fanout over-counts it for typical selective covers).  When the
 estimate is garbage (huge BigInt for a multiply-exploded plan) the
-answer degrades to False = shuffle, the scale-safe side."""
+answer degrades to False (no broadcast hint), the scale-safe side."""
 
 from __future__ import annotations
 
@@ -66,14 +65,9 @@ def plan_size_bytes(side: DataFrame) -> int:
         return 1 << 62
 
 
-def decide(side: DataFrame, flag: bool | None, fanout: int) -> bool:
-    """Resolve a broadcast_queries flag: explicit True/False wins; None
-    size-gates the exploded multicast estimate against the session
-    broadcast threshold — without running a job.  A False resolved from
-    None means "no broadcast hint", not "shuffle": the caller keeps its
-    default plan (see the module docstring)."""
-    if flag is not None:
-        return flag
+def decide(side: DataFrame, fanout: int) -> bool:
+    """Whether `side` exploded `fanout` times fits the session broadcast
+    threshold, by the optimizer's estimate — no job runs."""
     thr = threshold_bytes(side.sparkSession)
     if thr <= 0:
         return False

@@ -36,9 +36,8 @@ def cell_expr(mx: str = "mx", my: str = "my",
                   f"+ (({my} * {cy}) div {C.WORLD_MY})")
 
 
-def with_cell(df: DataFrame, mx: str = "mx", my: str = "my",
-              out: str = "cell") -> DataFrame:
-    return df.withColumn(out, cell_expr(mx, my))
+def with_cell(df: DataFrame) -> DataFrame:
+    return df.withColumn("cell", cell_expr())
 
 
 def cover_cells(boxes: DataFrame,
@@ -126,40 +125,31 @@ def ring_count_sql(sat: str, cxa: str, cxb: str, cya: str, cyb: str,
             f"- {at(f'{cxb} + 1', cya)} + {at(cxa, cya)}")
 
 
-def cover_broadcast(queries: DataFrame, flag: bool | None,
-                    plan=None) -> bool:
-    """The one broadcast gate of a cover (multicast) side: the box-cover
-    fan-out (~64 cells) times the plan's salt replication (its largest
-    `nsplits`; 1 without a plan), size-gated by
-    spatialgraft.broadcast.decide.  An explicit flag wins; no job runs."""
-    splits = 1 if plan is None else plan.max_splits
-    return decide(queries, flag, COVER_FANOUT * splits)
-
-
 def hint_cover(cover: DataFrame, queries: DataFrame,
-               flag: bool | None, plan=None) -> DataFrame:
-    """`cover` (the multicast of `queries`) with its join hint:
-    broadcast when cover_broadcast says so, a sort-merge (shuffled)
-    join when the caller passed an explicit False, none when the gate
-    resolved None to False: Catalyst then plans the join from its own
-    size estimates."""
-    if cover_broadcast(queries, flag, plan):
-        return F.broadcast(cover)
+               flag: bool | None = None, plan=None) -> DataFrame:
+    """`cover` (the multicast of `queries`) with its join hint — the
+    one broadcast policy of every multicast join.  False hints a
+    sort-merge (shuffled) join; True, or None while the size gate
+    passes, a broadcast; otherwise no hint, and Catalyst plans the join
+    from its own size estimates.  The gate is
+    spatialgraft.broadcast.decide on the box-cover fan-out (~64 cells)
+    times the plan's salt replication (its largest `nsplits`; 1 without
+    a plan); no job runs."""
     if flag is False:
         return cover.hint("merge")
+    splits = 1 if plan is None else plan.max_splits
+    if flag or decide(queries, COVER_FANOUT * splits):
+        return F.broadcast(cover)
     return cover
 
 
 def cover_join(points: DataFrame, queries: DataFrame,
-               broadcast: bool | None, refine: str) -> DataFrame:
+               refine: str) -> DataFrame:
     """The cover -> equi-join -> refine kernel of the range pairs and
     PIP joins: points (mx, my) get their cell, each query is multicast
     to the cells its bbox (xmin..ymax) covers, the two hash-join on
     `cell`, and the exact `refine` SQL predicate keeps the true matches.
-
-    broadcast: None = auto size-gate of the multicast side
-    (cover_broadcast); True forces a broadcast of the cover, False a
-    shuffled sort-merge join (hint_cover)."""
-    cover = hint_cover(cover_cells(queries), queries, broadcast)
+    The cover carries the auto hint of hint_cover."""
+    cover = hint_cover(cover_cells(queries), queries)
     return (with_cell(points).join(cover, on="cell", how="inner")
             .where(F.expr(refine)))

@@ -62,8 +62,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import config as C
-from ..cells import (cell_expr, cover_broadcast, cover_cells,
-                     ring_count_sql, sat_df, sat_rows, with_cell)
+from ..cells import (cell_expr, cover_cells, hint_cover, ring_count_sql,
+                     sat_df, sat_rows, with_cell)
 from ..partitioner import salt_multicast, salt_points
 
 # x/y are recomputed inline from the int milli coords with the exact
@@ -148,10 +148,11 @@ def _bound(queries: DataFrame, sat: DataFrame, need: int) -> DataFrame:
 
 
 def _join(pts: DataFrame, queries: DataFrame, k: int, plan,
-          bc_cover: bool, hist) -> DataFrame:
+          broadcast: bool | None, hist) -> DataFrame:
     """Bound -> cover join -> rank.  `hist` is the collected
-    sub-cell histogram (pyarrow: cell, sub, n); it drives every
+    sub-cell histogram (pyarrow: sub, n); it drives every
     data-dependent decision: the SAT and `need` = min(k, total).
+    `broadcast` is knn_join's broadcast_queries.
 
     plan: None (unsalted, the join keys on cell) or the
     SpatialPartitioning that salted `pts` — the cover is then replicated
@@ -167,8 +168,10 @@ def _join(pts: DataFrame, queries: DataFrame, k: int, plan,
         # (the measured 4N straggler), and the pts side's (cell, salt)
         # hash partitioning is reused with NO exchange
         cover = salt_multicast(cover, ["qid", "qx", "qy", "kth2"], plan)
-    if bc_cover:
-        cover = F.broadcast(cover)
+    if broadcast is not False:
+        # a sort-merge hint for False lost to Catalyst's own choice at
+        # x1024 (bench_records/knn_false_merge_x1024.jsonl)
+        cover = hint_cover(cover, queries, broadcast, plan)
 
     # equi-join and the exact dist filter; the bound leaves a few k
     # survivors per query, which go straight to the one qid rank
@@ -243,10 +246,13 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     plan: optional SpatialPartitioning -> salt hot cells in the join
     (J9).
     broadcast_queries: None = auto size-gate of the cover
-    (cells.cover_broadcast, the range/PIP gate: fan-out ~64 times the
+    (cells.hint_cover, the range/PIP gate: fan-out ~64 times the
     plan's salt replication) against the session broadcast threshold,
-    from the optimizer's plan-size estimate — no job runs.  True/False
-    force.
+    from the optimizer's plan-size estimate — no job runs.  True
+    broadcasts the cover.  False only withholds the hint: Catalyst
+    still picks the physical join from its own estimates and may
+    broadcast the cover (unlike range_join_count, where False forces a
+    sort-merge join).
 
     salt / materialize / cache_input: accepted for existing callers;
     only the defaults (None / True / True) are valid, anything else
@@ -274,7 +280,6 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
             "input and the lazy plan were removed; salt hot cells with "
             "plan= instead")
     spark = points.sparkSession
-    bc_cover = cover_broadcast(queries, broadcast_queries, plan)
     if pred is not None:
         points = points.where(pred if isinstance(pred, Column)
                               else F.expr(pred))
@@ -304,14 +309,16 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     pts = pts.repartition(n_parts, *keys)
 
     # SER cache (see docstring), one O(#sub-cells) collect; grouping on
-    # cell too keeps the unsalted histogram on pts' own partitioning
+    # cell too keeps the unsalted histogram on pts' own partitioning,
+    # and only (sub, n) is collected (a sub-cell lies in one cell)
     pts = pts.persist(StorageLevel.MEMORY_AND_DISK)
     sub = cell_expr("CAST(mx AS BIGINT)", "CAST(my AS BIGINT)",
                     _SCX, _SCY)
     hist = (pts.groupBy("cell", sub.alias("sub"))
-            .agg(F.count("*").alias("n")).toArrow())
+            .agg(F.count("*").alias("n")).select("sub", "n").toArrow())
     _warn_if_cache_exceeds_storage(spark, int(hist["n"].to_numpy().sum()))
-    result = _join(pts, queries, k, plan, bc_cover, hist).persist()
+    result = _join(pts, queries, k, plan, broadcast_queries,
+                   hist).persist()
     result.count()
     pts.unpersist()
     return result

@@ -22,22 +22,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..broadcast import decide
 from ..cells import cell_expr, with_cell
 
 
-def multiget(points: DataFrame, keys: DataFrame,
-             broadcast_keys: bool | None = None) -> DataFrame:
+def multiget(points: DataFrame, keys: DataFrame) -> DataFrame:
     """Exact lookups: keys(kmx, kmy) -> matching point rows.
 
     Equality on exact milli ints; the cell equi-join key makes the
-    probe prunable when data is cell-partitioned.  broadcast_keys
-    None = auto size-gate (spatialgraft.broadcast.decide, fanout 1 —
-    each key maps to exactly one cell row): small key sets broadcast,
-    a huge key DataFrame falls back to a shuffled join on cell instead
-    of being built on the driver."""
-    from ..broadcast import decide as _decide_broadcast
+    probe prunable when data is cell-partitioned.  The key side is
+    size-gated (spatialgraft.broadcast.decide, fanout 1 — each key maps
+    to exactly one cell row): small key sets broadcast, a huge key
+    DataFrame gets no hint instead of being built on the driver."""
     k = keys.withColumn("cell", cell_expr("kmx", "kmy"))
-    if _decide_broadcast(keys, broadcast_keys, fanout=1):
+    if decide(keys, 1):
         k = F.broadcast(k)
     return (with_cell(points).join(
         k, on="cell", how="inner")

@@ -32,25 +32,21 @@ from ..sqlgen import pip_concave_predicate, pip_predicate
 from .range import CONTAINS
 
 
-def pip_join(points: DataFrame, polys: DataFrame,
-             broadcast_polys: bool | None = None) -> DataFrame:
+def pip_join(points: DataFrame, polys: DataFrame) -> DataFrame:
     """(poly_id, doc_key) pairs: points contained in each convex polygon.
 
-    broadcast_polys None = auto size-gate on the polygon count
-    (spatialgraft.broadcast.decide) — huge polygon sets shuffle."""
-    return (cover_join(points, polys, broadcast_polys,
-                       pip_predicate("mx", "my"))
+    The polygon cover is broadcast while the auto size gate passes
+    (cells.hint_cover); a huge polygon set gets no hint."""
+    return (cover_join(points, polys, pip_predicate("mx", "my"))
             .select("poly_id", "doc_key"))
 
 
-def pip_join_count(points: DataFrame, polys: DataFrame,
-                   broadcast_polys: bool | None = None) -> DataFrame:
-    j = pip_join(points, polys, broadcast_polys)
+def pip_join_count(points: DataFrame, polys: DataFrame) -> DataFrame:
+    j = pip_join(points, polys)
     return j.groupBy("poly_id").agg(F.count("*").alias("cnt"))
 
 
-def pip_join_concave(points: DataFrame, polys: DataFrame,
-                     broadcast_polys: bool | None = None) -> DataFrame:
+def pip_join_concave(points: DataFrame, polys: DataFrame) -> DataFrame:
     """(poly_id, doc_key) pairs for ARBITRARY simple polygons given as
     vertex arrays (poly_id, vxs, vys, xmin, ymin, xmax, ymax) — exact
     int64 even-odd ray-cast, border-inclusive, concave-safe.
@@ -65,13 +61,10 @@ def pip_join_concave(points: DataFrame, polys: DataFrame,
     superset of the polygon, so the conjunct never drops a contained
     point)."""
     pred = pip_concave_predicate("mx", "my", "vxs", "vys", "spark")
-    return (cover_join(points, polys, broadcast_polys,
-                       f"{CONTAINS} AND {pred}")
+    return (cover_join(points, polys, f"{CONTAINS} AND {pred}")
             .select("poly_id", "doc_key"))
 
 
-def pip_join_concave_count(points: DataFrame, polys: DataFrame,
-                           broadcast_polys: bool | None = None
-                           ) -> DataFrame:
-    j = pip_join_concave(points, polys, broadcast_polys)
+def pip_join_concave_count(points: DataFrame, polys: DataFrame) -> DataFrame:
+    j = pip_join_concave(points, polys)
     return j.groupBy("poly_id").agg(F.count("*").alias("cnt"))

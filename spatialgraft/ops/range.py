@@ -17,11 +17,11 @@ hit, as in Raster Intervals), and only perimeter cells join point rows
 and refine.  The per-box sum rides Catalyst's partial+final hash agg
 (replacing the hand-rolled flush at RTree.scala:315-356).
 
-broadcast_queries (every join here): None = auto size-gate of the
-multicast side (cells.cover_broadcast) — a huge query set is not
-hinted to a driver-side broadcast; True forces the broadcast; False
-forces a shuffled join in the cover kernels (a sort-merge hint on the
-cover) and only withholds the broadcast hint in intersects_join.
+Every join here hints its multicast side through cells.hint_cover:
+a cover whose query set passes the size gate is broadcast, a huge one
+gets no hint.  range_join_count alone keeps a broadcast_queries flag:
+True forces the broadcast, False a shuffled (sort-merge) join.  (kNN's
+flag differs on False; see ops.knn.knn_join.)
 """
 
 from __future__ import annotations
@@ -29,8 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cells import (cell_expr, cover_broadcast, cover_cells, cover_join,
-                     hint_cover, with_cell)
+from ..cells import cell_expr, cover_cells, cover_join, hint_cover, with_cell
 from ..partitioner import salt_multicast, salt_points
 
 CONTAINS = ("mx >= xmin AND mx <= xmax AND "
@@ -49,8 +48,7 @@ def range_filter(points: DataFrame, xmin: int, ymin: int,
         (F.col("my") >= ymin) & (F.col("my") <= ymax))
 
 
-def range_join(points: DataFrame, boxes: DataFrame,
-               broadcast_queries: bool | None = None) -> DataFrame:
+def range_join(points: DataFrame, boxes: DataFrame) -> DataFrame:
     """sjoin (J1): (box_id, doc_key) matched pairs.
 
     Pairs are unique by construction — a point belongs to exactly one
@@ -58,7 +56,7 @@ def range_join(points: DataFrame, boxes: DataFrame,
     is needed (the reference dedupes because its multicast can route one
     box to a partition several times, SpatialRdd.scala:264-284; our cell
     cover cannot)."""
-    return (cover_join(points, boxes, broadcast_queries, CONTAINS)
+    return (cover_join(points, boxes, CONTAINS)
             .select("box_id", "doc_key"))
 
 
@@ -90,7 +88,8 @@ def cover_count(points: DataFrame, boxes: DataFrame,
     points skip the refine; that is exact because the interior test
     reads the same bbox columns CONTAINS does.
 
-    broadcast: as cover_join (the gate and hints of cells.hint_cover).
+    broadcast: the flag of cells.hint_cover (None = auto gate, True
+    broadcast, False sort-merge).
     plan: optional SpatialPartitioning — the points are salted
     (partitioner.salt_points: a point goes to one slice of its cell by
     doc_key) before the grouping, salt joins both grouping sets and the
@@ -135,9 +134,7 @@ INTERSECTS = ("d_xmin <= xmax AND xmin <= d_xmax AND "
               "d_ymin <= ymax AND ymin <= d_ymax")
 
 
-def intersects_join(dboxes: DataFrame, qboxes: DataFrame,
-                    broadcast_queries: bool | None = None
-                    ) -> DataFrame:
+def intersects_join(dboxes: DataFrame, qboxes: DataFrame) -> DataFrame:
     """F3: box-data x box-query intersects join -> (box_id, dbox_id).
 
     Border-inclusive interval overlap on both axes — the reference's
@@ -152,10 +149,7 @@ def intersects_join(dboxes: DataFrame, qboxes: DataFrame,
         "dbox_id", "xmin AS d_xmin", "ymin AS d_ymin",
         "xmax AS d_xmax", "ymax AS d_ymax"),
         xmin="d_xmin", ymin="d_ymin", xmax="d_xmax", ymax="d_ymax")
-    bc = cover_broadcast(qboxes, broadcast_queries)
-    q = cover_cells(qboxes)
-    if bc:
-        q = F.broadcast(q)
+    q = hint_cover(cover_cells(qboxes), qboxes)
     refpt_cell = cell_expr("greatest(d_xmin, xmin)",
                            "greatest(d_ymin, ymin)")
     return (d.join(q, on="cell", how="inner")

@@ -6,9 +6,9 @@ runtime from real stats, which is the desired behavior at scale)."""
 from pyspark.sql import functions as F
 
 from spatialgraft import datagen
-from spatialgraft.broadcast import decide, threshold_bytes
+from spatialgraft.broadcast import decide, plan_size_bytes, threshold_bytes
 from spatialgraft.extract import with_geometry
-from spatialgraft.ops.range import range_join, range_join_count
+from spatialgraft.ops.range import range_join_count
 
 
 def _plan(df) -> str:
@@ -45,20 +45,18 @@ def test_explicit_false_shuffles_the_cover(spark, sf_smoke):
     """broadcast_queries=False hints the cover to a shuffled join, so
     the cell join is not broadcast even where Catalyst would broadcast
     the small cover on its own estimate (at sf0.001 it does), and the
-    results stay the same.  Checked on the executed plan of both cover
-    kernels: range_join (cover_join) and range_join_count
-    (cover_count)."""
+    results stay the same.  Checked on the executed plan of
+    range_join_count (cover_count)."""
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke),
                         columns=["doc_key", "mx", "my"])
     boxes = datagen.query_boxes(spark, sf_smoke)
-    for op in (range_join_count, range_join):
-        want = sorted(map(tuple, op(pts, boxes).collect()))
-        df = op(pts, boxes, broadcast_queries=False)
-        got = sorted(map(tuple, df.collect()))
-        plan = _plan(df)
-        assert "BroadcastHashJoin [cell" not in plan, op.__name__
-        assert "SortMergeJoin [cell" in plan, op.__name__
-        assert got == want and len(want) > 0, op.__name__
+    want = sorted(map(tuple, range_join_count(pts, boxes).collect()))
+    df = range_join_count(pts, boxes, broadcast_queries=False)
+    got = sorted(map(tuple, df.collect()))
+    plan = _plan(df)
+    assert "BroadcastHashJoin [cell" not in plan
+    assert "SortMergeJoin [cell" in plan
+    assert got == want and len(want) > 0
 
 
 def test_decide_math(spark):
@@ -66,11 +64,17 @@ def test_decide_math(spark):
     assert thr > 0
     small = spark.range(10).selectExpr("id AS box_id")
     big = spark.range(2_000_000).selectExpr("id AS box_id")
-    assert decide(small, None, fanout=64) is True
-    assert decide(big, None, fanout=64) is False
-    # explicit flags always win
-    assert decide(big, True, fanout=64) is True
-    assert decide(small, False, fanout=64) is False
+    assert decide(small, fanout=64) is True
+    assert decide(big, fanout=64) is False
+
+
+def test_plan_size_hook_gives_real_estimate(spark):
+    """Every auto gate reads Catalyst's sizeInBytes through a PySpark
+    internal (plan_size_bytes); if that API changes shape the hook falls
+    back to its 1 << 62 sentinel and every gate silently stops
+    broadcasting.  Pin a real estimate on the installed PySpark."""
+    est = plan_size_bytes(spark.range(10))
+    assert 0 < est < 1 << 62
 
 
 def test_threshold_bytes_matches_spark_parse(spark):

@@ -301,12 +301,12 @@ def _salted_cover_hinted(df) -> bool:
 def test_broadcast_gate_counts_salt(spark, sf_smoke):
     """ADVICE r5: the cover's auto-broadcast gate multiplies the fan-out
     by the plan's salt replication.  It is one rule
-    (cells.cover_broadcast), so the salted range join and kNN decide
+    (cells.hint_cover), so the salted range join and kNN decide
     alike: both hint their salted cover as a broadcast while the gate
     passes, and neither does once max_splits pushes it over."""
     from spatialgraft.broadcast import (COVER_FANOUT, plan_size_bytes,
                                         threshold_bytes)
-    from spatialgraft.cells import cover_broadcast
+    from spatialgraft.cells import cover_cells, hint_cover
     from spatialgraft.ops import range as rops
     from spatialgraft.partitioner import SpatialPartitioning
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
@@ -318,13 +318,16 @@ def test_broadcast_gate_counts_salt(spark, sf_smoke):
         "fixture: a 2-way salted cover must fit"
     fits = SpatialPartitioning({0: 2})
     over = SpatialPartitioning({0: thr // (min(ests) * COVER_FANOUT) + 1})
+
+    def gated(side, plan):
+        cover = hint_cover(cover_cells(boxes), side, plan=plan)
+        return "ResolvedHint (strategy=broadcast)" in \
+            cover._jdf.queryExecution().analyzed().toString()
+
     for side in (qs, boxes):
-        assert cover_broadcast(side, None)
-        assert cover_broadcast(side, None, fits)
-        assert not cover_broadcast(side, None, over)
-        # explicit flags still win over the gate
-        assert cover_broadcast(side, True, over) is True
-        assert cover_broadcast(side, False) is False
+        assert gated(side, None)
+        assert gated(side, fits)
+        assert not gated(side, over)
     for plan, hinted in ((fits, True), (over, False)):
         rj = rops.range_join_count_salted(pts, boxes, plan)
         assert _salted_cover_hinted(rj) is hinted
