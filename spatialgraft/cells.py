@@ -13,8 +13,8 @@ SpatialRdd.scala:377-397).  Everything is a Catalyst column expression
 
 The same floor arithmetic serves every grid (join cells, tiles, index
 coarse cells, the kNN SAT sub-grid): cell_expr / cover_cells /
-cover_ids (its driver-side twin) / sat_rows / ring_count_sql take the
-grid dims.  A histogram's summed-area table (sat_rows /
+cover_ids (its driver-side twin, for index directory pruning) /
+sat_rows / ring_count_sql take the grid dims.  A histogram's summed-area table (sat_rows /
 ring_count_sql) counts the points in any cell rectangle with 4 array
 lookups.
 """
@@ -81,7 +81,7 @@ def cover_ids(xmin: int, ymin: int, xmax: int, ymax: int,
               cx: int = C.CELL_CX, cy: int = C.CELL_CY) -> list[int]:
     """Python twin of cover_cells for one milli box: the ids of the
     cells it covers on the cx x cy grid, with the same floor arithmetic
-    (driver-side planning: sFilter ratios, index directory pruning)."""
+    (driver-side planning: index directory pruning)."""
     return [x * cy + y
             for x in range(xmin * cx // C.WORLD_MX,
                            xmax * cx // C.WORLD_MX + 1)

@@ -25,7 +25,12 @@ plumbing dominates):
            SIGMOD 2023).
   join     each query re-joins the points over cover_cells of its
            kth2 box with the exact filter dist2 <= kth2 (the
-           reference's `rkjoin`, RtreePartition.scala:294-324).
+           reference's `rkjoin`, RtreePartition.scala:294-324).  The
+           points reach the join in their input partitions: like the
+           reference's query multicast, the cover carries each query to
+           every cell it can reach, so a broadcast cover meets every
+           point where it sits and no point is shuffled; a
+           non-broadcast cover shuffles them once, after the cache.
   rank     the survivors, a few k per query, take one row_number over
            (dist2, doc_key) per qid: a deterministic total order (the
            reference's local top-k plus sort+slice,
@@ -163,10 +168,9 @@ def _join(pts: DataFrame, queries: DataFrame, k: int, plan,
                  sat_rows(hist["sub"].to_numpy(), n, _SCX, _SCY))
     cover = cover_cells(_bound(queries, sat, min(k, int(n.sum()))))
     if plan is not None:
-        # the join keys on (cell, salt): the probe work of a dense cell
-        # spreads over its salt slices instead of landing in one task
-        # (the measured 4N straggler), and the pts side's (cell, salt)
-        # hash partitioning is reused with NO exchange
+        # the join keys on (cell, salt): when the join is shuffled, the
+        # probe work of a dense cell spreads over its salt slices instead
+        # of landing in one task (the measured 4N straggler)
         cover = salt_multicast(cover, ["qid", "qx", "qy", "kth2"], plan)
     if broadcast is not False:
         # a sort-merge hint for False lost to Catalyst's own choice at
@@ -234,13 +238,17 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     (dist2, doc_key).
 
     The call runs the join in one pass: the slim point projection is
-    cached (SERIALIZED level — deserialized object-graph caching was a
-    measured GC death spiral near the storage pool at 263M rows), the
+    cached in the input's own partitions (SERIALIZED level —
+    deserialized object-graph caching was a measured GC death spiral
+    near the storage pool at 263M rows), the
     sub-cell histogram is collected once (O(#sub-cells), Arrow) to
     build the SAT that bounds every query's kth distance, one cover
     join under that bound is ranked, persisted and counted, and the
-    slim cache is unpersisted before returning.  The returned
-    DataFrame stays persisted; the caller unpersists it when done.
+    slim cache is unpersisted before returning.  The points reach the
+    join in their input partitions: a broadcast cover streams them with
+    no shuffle, and a shuffled cover makes Catalyst hash them by
+    (cell[, salt]) once, above the cache.  The returned DataFrame stays
+    persisted; the caller unpersists it when done.
 
     pred: optional extra data-side predicate (knnFilter semantics, F6).
     plan: optional SpatialPartitioning -> salt hot cells in the join
@@ -296,26 +304,16 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
         "cell", "doc_key",
         F.col("mx").cast("int").alias("mx"),
         F.col("my").cast("int").alias("my"))
-    keys = ["cell"]
     if plan is not None:
-        keys = ["cell", "salt"]
         pts = salt_points(pts, ["cell", "doc_key", "mx", "my"], plan)
-    # Repartition by (cell, salt) to the session shuffle width BEFORE
-    # the join: partition count then scales with configuration, not
-    # core count — an input cached in defaultParallelism partitions made
-    # each map task sort (candidates/cores) rows and OOM at 24x input
-    # on one executor.
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    pts = pts.repartition(n_parts, *keys)
 
-    # SER cache (see docstring), one O(#sub-cells) collect; grouping on
-    # cell too keeps the unsalted histogram on pts' own partitioning,
-    # and only (sub, n) is collected (a sub-cell lies in one cell)
+    # SER cache (see docstring) in the input's own partitions, and one
+    # O(#sub-cells) collect
     pts = pts.persist(StorageLevel.MEMORY_AND_DISK)
     sub = cell_expr("CAST(mx AS BIGINT)", "CAST(my AS BIGINT)",
                     _SCX, _SCY)
-    hist = (pts.groupBy("cell", sub.alias("sub"))
-            .agg(F.count("*").alias("n")).select("sub", "n").toArrow())
+    hist = (pts.groupBy(sub.alias("sub"))
+            .agg(F.count("*").alias("n")).toArrow())
     _warn_if_cache_exceeds_storage(spark, int(hist["n"].to_numpy().sum()))
     result = _join(pts, queries, k, plan, broadcast_queries,
                    hist).persist()

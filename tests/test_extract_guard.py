@@ -26,18 +26,3 @@ def test_empty_batch_passes():
     p = pa.array([], type=pa.int64())
     assert len(_one_per_parent(v, p, 0, "x")) == 0
 
-
-def test_query_box_with_p_exact():
-    """sFilter empty-area ratio: exact from the presence set."""
-    from spatialgraft import config as C
-    from spatialgraft.sfilter import query_box_with_p
-    # one cell present: a box covering exactly that cell -> 0.0 empty
-    cell = 5 * C.CELL_CY + 7
-    x0 = 5 * C.WORLD_MX // C.CELL_CX + 1
-    y0 = 7 * C.WORLD_MY // C.CELL_CY + 1
-    assert query_box_with_p({cell}, x0, y0, x0, y0) == 0.0
-    # empty presence set -> everything empty
-    assert query_box_with_p(set(), x0, y0, x0, y0) == 1.0
-    # 2-cell cover with one present -> 0.5
-    x1 = 6 * C.WORLD_MX // C.CELL_CX + 1
-    assert query_box_with_p({cell}, x0, y0, x1, y0) == 0.5

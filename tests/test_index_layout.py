@@ -33,10 +33,10 @@ def test_indexed_layout_roundtrip_and_pruning(spark, sf_smoke, tmp_path):
 
 
 def test_cover_ids_matches_cover_cells(spark):
-    """cells.cover_ids (the driver-side cover behind sFilter ratios and
-    index directory pruning) lists exactly the cells cover_cells
-    explodes, on the join grid and on the 16x8 index grid: seeded boxes
-    of every size, plus world-edge and single-point boxes."""
+    """cells.cover_ids (the driver-side cover behind index directory
+    pruning) lists exactly the cells cover_cells explodes, on the join
+    grid and on the 16x8 index grid: seeded boxes of every size, plus
+    world-edge and single-point boxes."""
     rng = random.Random(12)
     boxes = [(0, 0, C.WORLD_MX - 1, C.WORLD_MY - 1),
              (C.WORLD_MX - 1, C.WORLD_MY - 1, C.WORLD_MX - 1, C.WORLD_MY - 1),

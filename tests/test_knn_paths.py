@@ -122,27 +122,58 @@ def test_knn_job_count_pinned(spark, sf_smoke):
     assert 0 < len(jobs) <= KNN_JOBS_MAX, sorted(jobs)
 
 
-def _final_windows(df) -> int:
-    """Window operators in the final physical plan behind a persisted
-    result: the cached relation's adaptive plan, once executed (the
-    executedPlan string would print its initial plan too)."""
+def _final_plan(df) -> str:
+    """The final physical plan behind a persisted result: the cached
+    relation's adaptive plan, once executed (the executedPlan string
+    would print its initial plan too).  It includes the plan that built
+    the slim cache, printed under its InMemoryRelation."""
     cached = (df._jdf.queryExecution().executedPlan().inputPlan()
               .relation().cachedPlan())
     assert cached.isFinalPlan()
-    return len(re.findall(r"\bWindow \[",
-                          cached.executedPlan().toString()))
+    return cached.executedPlan().toString()
+
+
+def _subtrees(plan: str, marker: str) -> list[str]:
+    """The text of every subtree of `plan` whose root line holds
+    `marker`: that line and the deeper-indented lines after it."""
+    lines = plan.splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = []
+    for i, line in enumerate(lines):
+        if marker in line:
+            end = i + 1
+            while end < len(lines) and depth(lines[end]) > depth(line):
+                end += 1
+            out.append("\n".join(lines[i:end]))
+    return out
 
 
 def test_knn_ranks_once(spark, sf_smoke):
     """The bounded join's survivors (a few k per query) go straight to
     the one qid rank: exactly one Window in the plan, unsalted and with
-    a 2-way plan, so no per-(cell[, salt], qid) ranking comes back."""
+    a 2-way plan, so no per-(cell[, salt], qid) ranking comes back.
+    That rank leans on Spark's partial WindowGroupLimit, which keeps
+    each task's top k per qid below the qid exchange; without it every
+    survivor would cross that exchange, so a Spark version that drops
+    it fails here instead of slowing down.  The points reach the
+    broadcast cover in their input partitions: no cell exchange
+    anywhere, not even under the slim cache."""
     from spatialgraft.partitioner import SpatialPartitioning
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
     qs = datagen.knn_queries(spark, sf_smoke)
+    partial = re.compile(r"WindowGroupLimit \[qid#\d+L?\], .*"
+                         r"row_number\(\), 10, Partial")
     for plan in (None, SpatialPartitioning({0: 2})):
         res = knn_join(pts, qs, k=10, plan=plan)
-        assert _final_windows(res) == 1
+        final = _final_plan(res)
+        assert len(re.findall(r"\bWindow \[", final)) == 1
+        below = _subtrees(final, "Exchange hashpartitioning(qid")
+        assert len(below) == 1
+        assert partial.search(below[0]), below[0]
+        assert "Exchange hashpartitioning(cell" not in final
         res.unpersist()
 
 
@@ -160,7 +191,7 @@ def test_shuffled_stage_joins_identical(spark, sf_correct):
     """The shuffled shape (broadcast_queries=False, the bench.py and
     scripts/plancmp.py gate shape) must be bit-exact against the default
     join: the cover sort-merge joined against the points instead of
-    broadcast."""
+    broadcast, with the points shuffled once, after the cache."""
     pts = with_geometry(datagen.documents_spans(spark, sf_correct))
     qs = datagen.knn_queries(spark, sf_correct)
     base = knn_join(pts, qs, k=10)
@@ -179,6 +210,15 @@ def test_shuffled_stage_joins_identical(spark, sf_correct):
         got = knn_join(pts, qs, k=10, broadcast_queries=False)
         plan = got._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin [cell#" in plan, "cover join not shuffled"
+        # Catalyst hashes the points by cell exactly once, right above
+        # the slim cache's scan
+        final = _final_plan(got)
+        over_cache = [t for t in
+                      _subtrees(final, "Exchange hashpartitioning(cell")
+                      if "InMemoryTableScan" in t]
+        assert len(over_cache) == 1, final
+        assert over_cache[0].split("InMemoryTableScan")[0] \
+            .count("Exchange") == 1, over_cache[0]
         _assert_same(got, spark.createDataFrame(want))
     finally:
         spark.conf.set(thr_key, thr)

@@ -1,40 +1,14 @@
 import json
 import os
 
-from pyspark.sql import functions as F
-
-from spatialgraft import config as C
 from spatialgraft import datagen
-from spatialgraft.cells import cover_cells, with_cell
 from spatialgraft.extract import with_geometry
-from spatialgraft.ops.range import CONTAINS
-from spatialgraft.sfilter import presence_cells
 from spatialgraft.checkpoint import CheckpointManager, \
     checkpointed_range_join
 
 
 def _pts(spark, sf):
     return with_geometry(datagen.documents_spans(spark, sf))
-
-
-def test_sfilter_identical_results(spark, sf_smoke):
-    """The presence set is exact: dropping the range cover's cells
-    outside it drops only cells that hold no point, so the per-box
-    counts of the join are unchanged."""
-    pts = _pts(spark, sf_smoke)
-    cells = presence_cells(pts)
-    cover = cover_cells(datagen.query_boxes(spark, sf_smoke))
-    pruned = cover.where(F.col("cell").isin(list(cells)))
-
-    def counts(c):
-        return (with_cell(pts).join(c, on="cell").where(F.expr(CONTAINS))
-                .groupBy("box_id").count().toPandas()
-                .sort_values("box_id").reset_index(drop=True))
-
-    assert counts(cover).equals(counts(pruned))
-    # and the filter actually prunes something at smoke scale
-    assert len(cells) < C.N_CELLS
-    assert pruned.count() < cover.count()
 
 
 def test_checkpoint_resume(spark, sf_smoke, tmp_path):
