@@ -22,7 +22,7 @@ WORLD_MY = 180_000
 # rows (stats are O(#cells), never O(#rows)).
 #
 # Env-tunable (SPARK_GRAFT_CELL_CX / _CY) because granularity is the
-# join-shape tradeoff: finer cells cut the kNN stage-2 / range-refine
+# join-shape tradeoff: finer cells cut the kNN cover-join / range-refine
 # probe volume ~linearly (each candidate cell holds fewer rows) but
 # multiply multicast cover rows and the O(#cells) driver structures.
 # Results are grid-INDEPENDENT (the grid only routes work; every

@@ -44,13 +44,12 @@ local relation, no job), and the broadcast gate reads
 the optimizer's sizeInBytes estimate instead of running a count — the
 only jobs a call runs are the histogram collect and the result's count.
 
-Skew (J9): pass a SpatialPartitioning `plan` and the join keys on
-(cell, salt) — the data side hashes hot cells into `nsplits` salt
-slices and the cover replicates across them, in spatialgraft.
-partitioner's one salt format (the reference salts skewed partitions
-inside kNN round 2, knnJoinRDD.scala:120-215).  Salting is data-driven
-only: a uniform salt=N lost its A/B (see knn_join).  Without a plan the
-join's probe side still gets AQE skew-split.
+Skew (J9): the reference salts skewed partitions inside kNN round 2
+(knnJoinRDD.scala:120-215) because that round moves the points by
+partition.  Here the broadcast cover meets every point in its input
+partition, so no cell is ever gathered into one task and there is
+nothing to salt; under a shuffled cover the probe side gets AQE's
+skew split.
 
 Predicates (F6): `pred` restricts the data side before any join — the
 reference's `knnFilter(entry, k, z)` z-predicate
@@ -69,7 +68,6 @@ from pyspark.sql import functions as F
 from .. import config as C
 from ..cells import (cell_expr, cover_cells, hint_cover, ring_count_sql,
                      sat_df, sat_rows, with_cell)
-from ..partitioner import salt_multicast, salt_points
 
 # x/y are recomputed inline from the int milli coords with the exact
 # expression shape of extract.py:65 (int subtract -> cast -> /1000.0),
@@ -152,35 +150,25 @@ def _bound(queries: DataFrame, sat: DataFrame, need: int) -> DataFrame:
     ).select("qid", "qx", "qy", "kth2", "xmin", "xmax", "ymin", "ymax")
 
 
-def _join(pts: DataFrame, queries: DataFrame, k: int, plan,
+def _join(pts: DataFrame, queries: DataFrame, k: int,
           broadcast: bool | None, hist) -> DataFrame:
     """Bound -> cover join -> rank.  `hist` is the collected
     sub-cell histogram (pyarrow: sub, n); it drives every
     data-dependent decision: the SAT and `need` = min(k, total).
-    `broadcast` is knn_join's broadcast_queries.
-
-    plan: None (unsalted, the join keys on cell) or the
-    SpatialPartitioning that salted `pts` — the cover is then replicated
-    over the same slices and the join keys on (cell, salt)."""
-    keys = ["cell"] if plan is None else ["cell", "salt"]
+    `broadcast` is knn_join's broadcast_queries."""
     n = hist["n"].to_numpy()
     sat = sat_df(pts.sparkSession,
                  sat_rows(hist["sub"].to_numpy(), n, _SCX, _SCY))
     cover = cover_cells(_bound(queries, sat, min(k, int(n.sum()))))
-    if plan is not None:
-        # the join keys on (cell, salt): when the join is shuffled, the
-        # probe work of a dense cell spreads over its salt slices instead
-        # of landing in one task (the measured 4N straggler)
-        cover = salt_multicast(cover, ["qid", "qx", "qy", "kth2"], plan)
     if broadcast is not False:
         # a sort-merge hint for False lost to Catalyst's own choice at
         # x1024 (bench_records/knn_false_merge_x1024.jsonl)
-        cover = hint_cover(cover, queries, broadcast, plan)
+        cover = hint_cover(cover, queries, broadcast)
 
     # equi-join and the exact dist filter; the bound leaves a few k
     # survivors per query, which go straight to the one qid rank
     w = Window.partitionBy("qid").orderBy("dist2", "doc_key")
-    return (pts.join(cover, on=keys, how="inner")
+    return (pts.join(cover, on="cell", how="inner")
             .selectExpr("qid", "doc_key", "kth2", f"{_D2} AS dist2")
             .where(F.col("dist2") <= F.col("kth2"))
             .select("qid", "doc_key", "dist2")
@@ -188,7 +176,7 @@ def _join(pts: DataFrame, queries: DataFrame, k: int, plan,
             .where(F.col("rnk") <= k))
 
 
-# ~24 B/row: (cell, doc_key) int64 + mx/my int32 in the serialized slim
+# 24 B/row: (cell, doc_key) int64 + mx/my int32 in the serialized slim
 # cache (see knn_join's slim projection)
 _SLIM_CACHE_BYTES_PER_ROW = 24
 
@@ -229,7 +217,6 @@ def _warn_if_cache_exceeds_storage(spark, total_rows: int) -> bool:
 def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
              broadcast_queries: bool | None = None,
              pred: Column | str | None = None,
-             plan=None,
              salt: int | None = None,
              materialize: bool = True,
              cache_input: bool = True) -> DataFrame:
@@ -246,30 +233,27 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     join under that bound is ranked, persisted and counted, and the
     slim cache is unpersisted before returning.  The points reach the
     join in their input partitions: a broadcast cover streams them with
-    no shuffle, and a shuffled cover makes Catalyst hash them by
-    (cell[, salt]) once, above the cache.  The returned DataFrame stays
-    persisted; the caller unpersists it when done.
+    no shuffle, and a shuffled cover makes Catalyst hash them by cell
+    once, above the cache, where AQE's skew join splits a hot cell.
+    The returned DataFrame stays persisted; the caller unpersists it
+    when done.
 
     pred: optional extra data-side predicate (knnFilter semantics, F6).
-    plan: optional SpatialPartitioning -> salt hot cells in the join
-    (J9).
     broadcast_queries: None = auto size-gate of the cover
-    (cells.hint_cover, the range/PIP gate: fan-out ~64 times the
-    plan's salt replication) against the session broadcast threshold,
-    from the optimizer's plan-size estimate — no job runs.  True
-    broadcasts the cover.  False only withholds the hint: Catalyst
-    still picks the physical join from its own estimates and may
-    broadcast the cover (unlike range_join_count, where False forces a
-    sort-merge join).
+    (cells.hint_cover, the range/PIP gate: fan-out ~64) against the
+    session broadcast threshold, from the optimizer's plan-size
+    estimate — no job runs.  True broadcasts the cover.  False only
+    withholds the hint: Catalyst still picks the physical join from its
+    own estimates and may broadcast the cover (unlike range_join_count,
+    where False forces a sort-merge join).
 
     salt / materialize / cache_input: accepted for existing callers;
     only the defaults (None / True / True) are valid, anything else
     raises ValueError before a job runs.  Each lost its A/B at the
     x2304 gate (1.05B docs, bench_records/r5_ab4n_x2304.jsonl) against
     the 139.7 s of the then two-stage plan and was removed: uniform
-    salt=8 ran 268.0 s (prefer plan=, per-hot-cell split factors), the
-    uncached input 206.4 s, and the lazy plan 349.8 s with salt=8 and a
-    driver maxResultSize crash without.
+    salt=8 ran 268.0 s, the uncached input 206.4 s, and the lazy plan
+    349.8 s with salt=8 and a driver maxResultSize crash without.
 
     The slim cache also carries accurate InMemoryRelation stats, so an
     exploded/generated input whose static Catalyst estimate misses the
@@ -285,8 +269,7 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
         raise ValueError(
             f"knn_join(salt={salt!r}, materialize={materialize!r}, "
             f"cache_input={cache_input!r}): uniform salt, the uncached "
-            "input and the lazy plan were removed; salt hot cells with "
-            "plan= instead")
+            "input and the lazy plan were removed")
     spark = points.sparkSession
     if pred is not None:
         points = points.where(pred if isinstance(pred, Column)
@@ -295,17 +278,14 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     # slim projection: feeds the histogram and the join (the spans
     # column must not ride downstream).  It carries
     # (cell, doc_key, mx:int, my:int) — 24 bytes/row instead of the 40+
-    # of a (cell, doc_key, x:double, y:double, salt) row: the doubles
-    # are recomputed bit-exactly from the milli ints (_X/_Y) and the
-    # salt column exists only when a skew plan asks for it.  At 10^12
+    # of a (cell, doc_key, x:double, y:double) row: the doubles are
+    # recomputed bit-exactly from the milli ints (_X/_Y).  At 10^12
     # rows this is the join's one row-count-sized data stream — its
     # width IS the memory-bus bill.
     pts = with_cell(points).select(
         "cell", "doc_key",
         F.col("mx").cast("int").alias("mx"),
         F.col("my").cast("int").alias("my"))
-    if plan is not None:
-        pts = salt_points(pts, ["cell", "doc_key", "mx", "my"], plan)
 
     # SER cache (see docstring) in the input's own partitions, and one
     # O(#sub-cells) collect
@@ -315,8 +295,7 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int = C.DEFAULT_K,
     hist = (pts.groupBy(sub.alias("sub"))
             .agg(F.count("*").alias("n")).toArrow())
     _warn_if_cache_exceeds_storage(spark, int(hist["n"].to_numpy().sum()))
-    result = _join(pts, queries, k, plan, broadcast_queries,
-                   hist).persist()
+    result = _join(pts, queries, k, broadcast_queries, hist).persist()
     result.count()
     pts.unpersist()
     return result

@@ -7,7 +7,7 @@ O1  nearest_k          — single-probe kNN, orderBy+limit
 O2  nearest            — 1-NN specialization (RTree.scala:828-829)
 A2  count_all          — table size (SpatialRdd.scala:49-51)
 A3  count_in_box       — filter+count (RTree.scala:877-878)
-A4  cell_histogram     — per-cell stats feeding the scheduler
+A4  cell_histogram     — per-cell stats feeding the hot-cell salt map
                          (joinScheduler.scala:19-24)
 S4  sample_fraction    — uniform sample prep (SpatialSampleRDD.scala:34-51)
 S5  to_wkt             — WKT text export (ToWKT.scala:27-40)
@@ -80,8 +80,9 @@ def count_in_box(points: DataFrame, xmin: int, ymin: int,
 
 
 def cell_histogram(points: DataFrame) -> DataFrame:
-    """Per-cell row counts — the stats pass every scheduler decision
-    reads (O(#cells) output, safe to collect at any scale)."""
+    """Per-cell row counts (O(#cells) output, safe to collect at any
+    scale); partitioner.plan_partitions builds its hot-cell salt map
+    from them."""
     return with_cell(points).groupBy("cell").agg(
         F.count("*").alias("cnt"))
 

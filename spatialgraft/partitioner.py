@@ -4,8 +4,9 @@ DataFrame re-design of the reference's skew-partition split
 (reference/src/main/scala/cs/purdue/edu/spatialrdd/impl/skewAnalysis.scala:145-160,
 scheduler/joinScheduler.scala:102-167): instead of a driver-resident
 quadtree shipped in closures, we
-  1. compute an exact per-cell histogram (groupBy(cell).count() — O(#cells),
-     never O(#rows); at 10^12 rows this is still a 32k-row collect),
+  1. compute an exact per-cell histogram (ops.misc.cell_histogram, A4 —
+     O(#cells), never O(#rows); at 10^12 rows this is still a 32k-row
+     collect),
   2. keep only the HOT cells (count > mean * SKEW_RATIO) with their
      `nsplits` salt-slice count — an absent cell means 1,
   3. broadcast that map back as a tiny DataFrame and join it on `cell`.
@@ -27,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import config as C
-from .cells import with_cell
+from .ops.misc import cell_histogram
 
 
 @dataclass
@@ -62,10 +63,8 @@ def plan_partitions(points: DataFrame,
     """Exact cell histogram -> the hot-cell salt map.  A hot cell splits
     into ~(skew_ratio * mean)-sized slices, capped at `n_partitions`, so
     one reducer never owns a whole hot cell."""
-    hist = (with_cell(points)
-            .groupBy("cell").count()
-            .toArrow())  # <= N_CELLS rows
-    cells, counts = hist["cell"].to_numpy(), hist["count"].to_numpy()
+    hist = cell_histogram(points).toArrow()  # <= N_CELLS rows
+    cells, counts = hist["cell"].to_numpy(), hist["cnt"].to_numpy()
     if not len(counts):
         return SpatialPartitioning({})
     hot = skew_ratio * max(1.0, counts.sum() / len(counts))

@@ -1,5 +1,5 @@
 """kNN scale paths: the SAT ring bound (no world cover), dense cells,
-the plan-salted join (J9), data-side predicate (F6), and the
+the shuffled-cover join, data-side predicate (F6), and the
 fewer-than-k-points and empty-table edges — each checked bit-exactly
 against a brute-force cross-join twin."""
 
@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from spatialgraft import datagen
 from spatialgraft.extract import with_geometry
 from spatialgraft.ops.knn import knn_join
-from spatialgraft.partitioner import plan_partitions
 
 _D2 = "(qx - x) * (qx - x) + (qy - y) * (qy - y)"
 
@@ -87,7 +86,7 @@ def test_dense_cells_match_brute_force(spark, sf_smoke):
     """Every location holds COPIES >= k points (the replicated-input
     shape of the x2304 gate), so each query's bound comes from its own
     sub-cell at radius 0; k > COPIES must reach past the copies of the
-    nearest location.  Unsalted and with a hot-cell plan."""
+    nearest location."""
     copies = 12
     base = with_geometry(datagen.documents_spans(spark, sf_smoke))
     pts = (base.withColumn("_r", F.explode(F.sequence(F.lit(0),
@@ -95,12 +94,8 @@ def test_dense_cells_match_brute_force(spark, sf_smoke):
            .withColumn("doc_key", F.col("doc_key") * copies + F.col("_r"))
            .drop("_r"))
     qs = datagen.knn_queries(spark, sf_smoke).limit(40)
-    plan = plan_partitions(pts.select("doc_key", "mx", "my"))
-    assert plan.max_splits > 1, "no salted cell: the plan leg is vacuous"
     for k in (10, 25):
-        want = _brute(pts, qs, k)
-        _assert_same(knn_join(pts, qs, k=k), want)
-        _assert_same(knn_join(pts, qs, k=k, plan=plan), want)
+        _assert_same(knn_join(pts, qs, k=k), _brute(pts, qs, k))
 
 
 # Spark jobs one knn_join call runs at sf0.001, as measured: the sub-cell
@@ -153,38 +148,26 @@ def _subtrees(plan: str, marker: str) -> list[str]:
 
 def test_knn_ranks_once(spark, sf_smoke):
     """The bounded join's survivors (a few k per query) go straight to
-    the one qid rank: exactly one Window in the plan, unsalted and with
-    a 2-way plan, so no per-(cell[, salt], qid) ranking comes back.
+    the one qid rank: exactly one Window in the plan, so no
+    per-(cell, qid) ranking comes back.
     That rank leans on Spark's partial WindowGroupLimit, which keeps
     each task's top k per qid below the qid exchange; without it every
     survivor would cross that exchange, so a Spark version that drops
     it fails here instead of slowing down.  The points reach the
     broadcast cover in their input partitions: no cell exchange
     anywhere, not even under the slim cache."""
-    from spatialgraft.partitioner import SpatialPartitioning
     pts = with_geometry(datagen.documents_spans(spark, sf_smoke))
     qs = datagen.knn_queries(spark, sf_smoke)
     partial = re.compile(r"WindowGroupLimit \[qid#\d+L?\], .*"
                          r"row_number\(\), 10, Partial")
-    for plan in (None, SpatialPartitioning({0: 2})):
-        res = knn_join(pts, qs, k=10, plan=plan)
-        final = _final_plan(res)
-        assert len(re.findall(r"\bWindow \[", final)) == 1
-        below = _subtrees(final, "Exchange hashpartitioning(qid")
-        assert len(below) == 1
-        assert partial.search(below[0]), below[0]
-        assert "Exchange hashpartitioning(cell" not in final
-        res.unpersist()
-
-
-def test_salted_knn_identical_and_nonvacuous(spark, sf_correct):
-    pts = with_geometry(datagen.documents_spans(spark, sf_correct))
-    qs = datagen.knn_queries(spark, sf_correct)
-    plan = plan_partitions(pts.select("doc_key", "mx", "my"))
-    assert plan.max_splits > 1, \
-        "skew fixture produced no salted cells"
-    _assert_same(knn_join(pts, qs, k=10, plan=plan),
-                 knn_join(pts, qs, k=10))
+    res = knn_join(pts, qs, k=10)
+    final = _final_plan(res)
+    assert len(re.findall(r"\bWindow \[", final)) == 1
+    below = _subtrees(final, "Exchange hashpartitioning(qid")
+    assert len(below) == 1
+    assert partial.search(below[0]), below[0]
+    assert "Exchange hashpartitioning(cell" not in final
+    res.unpersist()
 
 
 def test_shuffled_stage_joins_identical(spark, sf_correct):
@@ -340,10 +323,9 @@ def _salted_cover_hinted(df) -> bool:
 
 def test_broadcast_gate_counts_salt(spark, sf_smoke):
     """ADVICE r5: the cover's auto-broadcast gate multiplies the fan-out
-    by the plan's salt replication.  It is one rule
-    (cells.hint_cover), so the salted range join and kNN decide
-    alike: both hint their salted cover as a broadcast while the gate
-    passes, and neither does once max_splits pushes it over."""
+    by the plan's salt replication (cells.hint_cover): the salted
+    range join hints its salted cover as a broadcast while the gate
+    passes, and does not once max_splits pushes it over."""
     from spatialgraft.broadcast import (COVER_FANOUT, plan_size_bytes,
                                         threshold_bytes)
     from spatialgraft.cells import cover_cells, hint_cover
@@ -371,9 +353,6 @@ def test_broadcast_gate_counts_salt(spark, sf_smoke):
     for plan, hinted in ((fits, True), (over, False)):
         rj = rops.range_join_count_salted(pts, boxes, plan)
         assert _salted_cover_hinted(rj) is hinted
-        res = knn_join(pts, qs, k=5, plan=plan)
-        assert _salted_cover_hinted(res) is hinted
-        res.unpersist()
 
 
 def test_cache_sizing_advisory(spark):
